@@ -14,6 +14,9 @@ and the vector surface is re-expressed Spark-first:
 - IVF training is MLlib KMeans; cluster pruning replaces nprobe traversal.
 """
 
+import sys
+
+from duckdb_faiss_ext_spark import _pyworker
 from duckdb_faiss_ext_spark.engine import FaissSparkEngine
 from duckdb_faiss_ext_spark.errors import (
     DimensionMismatch,
@@ -26,6 +29,14 @@ from duckdb_faiss_ext_spark.errors import (
     TrainingError,
 )
 from duckdb_faiss_ext_spark.session import get_spark
+
+# Only inside a forked PySpark Python worker, which imports the package when
+# it unpickles an engine UDF: from then on it stops re-reading unchanged zips
+# before each task (_pyworker).  The daemon that forks workers runs as
+# __main__, so "pyspark.daemon" never names a module; the driver never
+# imports pyspark.worker.
+if "pyspark.worker" in sys.modules:
+    _pyworker.install()
 
 __all__ = [
     "FaissSparkEngine",

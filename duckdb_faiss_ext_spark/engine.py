@@ -55,6 +55,17 @@ from duckdb_faiss_ext_spark.registry import (
 logger = logging.getLogger(__name__)
 
 
+def _reject_null_elements(values, name: str) -> None:
+    """Fail a vector batch whose flattened Arrow values hold a NULL element.
+    ``to_numpy`` would turn it into NaN, and a NaN-scored row still gets a
+    cluster id.  NULL rows are left to the kernels' per-row fallback."""
+    if values.null_count:
+        raise FaissSparkError(
+            f"index {name!r}: {values.null_count} NULL element(s) inside "
+            "vectors; every vector element must be non-NULL"
+        )
+
+
 class FaissSparkEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -2514,6 +2525,7 @@ class FaissSparkEngine:
             split_ids = [int(c) for c in fams]
             vmin, vdiff = (idx.sq_vmin, idx.sq_vdiff) if sq else (None, None)
             dim = idx.dim
+            name = idx.name
 
             def reassigned(frame: DataFrame) -> DataFrame:
                 """Offenders' rows re-pick among their own children — a
@@ -2556,7 +2568,9 @@ class FaissSparkEngine:
                             yield rb
                             continue
                         vcol = rb.column(vec_pos)
-                        flat = vcol.flatten().to_numpy(zero_copy_only=False)
+                        vals = vcol.flatten()
+                        _reject_null_elements(vals, name)
+                        flat = vals.to_numpy(zero_copy_only=False)
                         if len(flat) == nrows * dim and not vcol.null_count:
                             xmat = flat.reshape(nrows, dim)
                         else:  # ragged/null rows — loud per-row fallback,
@@ -2716,6 +2730,7 @@ class FaissSparkEngine:
         metric = idx.metric
         marg = idx.metric_arg
         dim = idx.dim
+        name = idx.name
         bc = self.spark.sparkContext.broadcast(cents)
         desc = is_descending(metric)
         vec_pos = vecs.columns.index("vector")
@@ -2728,7 +2743,9 @@ class FaissSparkEngine:
                 if nrows == 0:
                     continue
                 vcol = rb.column(vec_pos)
-                flat = vcol.flatten().to_numpy(zero_copy_only=False)
+                vals = vcol.flatten()
+                _reject_null_elements(vals, name)
+                flat = vals.to_numpy(zero_copy_only=False)
                 if len(flat) == nrows * dim and not vcol.null_count:
                     x = np.ascontiguousarray(
                         flat.reshape(nrows, dim), dtype=np.float32

@@ -4,6 +4,7 @@ computed independently in numpy float32."""
 
 import numpy as np
 import pytest
+from conftest import gen_vectors
 
 from duckdb_faiss_ext_spark import (
     FaissSparkEngine,
@@ -155,6 +156,26 @@ def test_dimension_mismatch(engine, spark):
     engine.create("dim4", 4, "Flat")
     with pytest.raises(DimensionMismatch):
         engine.add("dim4", _vec_df(spark, np.ones((3, 6), dtype=np.float32)))
+
+
+def test_ivf_add_rejects_null_vector_elements(engine, spark):
+    # a NULL element keeps the flattened length at nrows * dim, so the
+    # cluster-assignment fast path must not read it as NaN and store the row
+    clean = gen_vectors(400, 4)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(clean)]
+    rows.append((400, [1.0, None, 2.0, 3.0]))
+    dirty = spark.createDataFrame(rows, "label bigint, vector array<float>")
+
+    engine.create("nullel", 4, "IDMap,IVF4")
+    with pytest.raises(Exception, match="NULL element"):
+        engine.add("nullel", dirty)
+    assert engine.registry.get("nullel").count == 0
+
+    engine.create("nullel_trained", 4, "IDMap,IVF4")
+    engine.manual_train("nullel_trained", _vec_df(spark, clean))
+    with pytest.raises(Exception, match="NULL element"):
+        engine.add("nullel_trained", dirty)
+    assert engine.registry.get("nullel_trained").count == 0
 
 
 def test_train_too_few_points(engine, spark, vectors8):
