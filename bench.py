@@ -231,7 +231,7 @@ LOCAL_BASELINES = {
 # went through MLlib, paying a ~6.5 s first-KMeans JIT penalty plus
 # per-iteration job overhead (SCALE.md r9 — r8 code measured 11.1 s cold on
 # the same host state as r9's 11.0, code-equal).  The r9 driver-side
-# small-fit path (engine._fit_kmeans_local, bytes-bounded; high-nlist fits
+# fit (today engine._fit_kmeans_driver, bytes-bounded; larger samples
 # keep parallel MLlib) removes that fixed cost: cold build now ~5.5 s.
 # The override pins the guard at the measured post-fix cold value rather
 # than r1's 3.96 (which predates the r7/r8 train additions).

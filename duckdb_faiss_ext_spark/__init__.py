@@ -11,7 +11,8 @@ and the vector surface is re-expressed Spark-first:
 - exact search is batched numpy inside ``mapInPandas`` (Arrow), mirroring the
   reference's chunk-at-a-time design (faiss_extension.cpp:621-666);
 - filtered search is a semi-join before top-k (README.md:245 semantics);
-- IVF training is MLlib KMeans; cluster pruning replaces nprobe traversal.
+- IVF training is a seeded k-means|| fit on the driver (MLlib KMeans for
+  samples above 600 MB); cluster pruning replaces nprobe traversal.
 """
 
 import sys

@@ -15,7 +15,9 @@ function surface (SURVEY.md §2.1, /root/reference/src/faiss_extension.cpp).
 | faiss_to_gpu              | unsupported (no GPU)|
 
 Indexes are immutable lineages (registry.py); searches are distributed
-numpy-over-Arrow (operators/topk.py); IVF training is MLlib KMeans.
+numpy-over-Arrow (operators/topk.py); the IVF coarse quantizer is a
+seeded k-means|| Lloyd on the driver over the capped training sample, with
+MLlib KMeans above ``DRIVER_FIT_BYTES``.
 """
 
 from __future__ import annotations
@@ -28,7 +30,6 @@ from contextlib import contextmanager
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,8 +42,15 @@ from duckdb_faiss_ext_spark.errors import (
     TrainingError,
 )
 from duckdb_faiss_ext_spark.factory import parse_factory
-from duckdb_faiss_ext_spark.metrics import pairwise, resolve_metric, topk_indices
+from duckdb_faiss_ext_spark.metrics import (
+    is_descending,
+    nearest_centroid,
+    pairwise,
+    resolve_metric,
+    topk_indices,
+)
 from duckdb_faiss_ext_spark.operators import topk as topk_ops
+from duckdb_faiss_ext_spark.operators.topk import vector_matrix
 from duckdb_faiss_ext_spark.registry import (
     LABEL_FALSE,
     LABEL_TRUE,
@@ -53,17 +61,6 @@ from duckdb_faiss_ext_spark.registry import (
 
 
 logger = logging.getLogger(__name__)
-
-
-def _reject_null_elements(values, name: str) -> None:
-    """Fail a vector batch whose flattened Arrow values hold a NULL element.
-    ``to_numpy`` would turn it into NaN, and a NaN-scored row still gets a
-    cluster id.  NULL rows are left to the kernels' per-row fallback."""
-    if values.null_count:
-        raise FaissSparkError(
-            f"index {name!r}: {values.null_count} NULL element(s) inside "
-            "vectors; every vector element must be non-NULL"
-        )
 
 
 class FaissSparkEngine:
@@ -399,7 +396,7 @@ class FaissSparkEngine:
                 transformed = True
             # r14 shuffle-bytes fix (VERDICT r13 task 2c — the 8.8M x 1536
             # raw add ENOSPC'd on a 54 GB f32 range shuffle): cluster
-            # ASSIGNMENT (a narrow pandas-UDF pass) is split from the
+            # ASSIGNMENT (a narrow mapInArrow pass) is split from the
             # cluster LAYOUT (the repartitionByRange exchange), and for the
             # PQ/SQ8 storage tiers the layout shuffle runs AFTER the encode
             # — the exchange moves m-byte / int8 codes (32x / 4x fewer
@@ -704,7 +701,7 @@ class FaissSparkEngine:
             # re-co-locate each cluster before the grouped rebuild — the
             # union spreads a cluster across every slice's partitions, and
             # per-partition builds there would still produce micro-graphs
-            # (range, not hash: KMeans clusters are skewed, _assign_clusters)
+            # (range, not hash: KMeans clusters are skewed, _cluster_layout)
             rows = int(idx.params.get("graph_partition_rows", self.GRAPH_ROWS))
             n_parts = max(1, -(-max(int(n_rows), 1) // rows))
             base = base.repartitionByRange(n_parts, "cluster_id", "label")
@@ -1311,7 +1308,7 @@ class FaissSparkEngine:
 
     def _train(self, idx: FaissIndex, vec_df: DataFrame) -> None:
         """Fit every trainable component of the factory spec: the IVF coarse
-        quantizer (MLlib KMeans) and/or the PQ codebooks (sampled per-subspace
+        quantizer (``_train_kmeans``) and/or the PQ codebooks (sampled per-subspace
         k-means, operators/pq.py) — faiss trains both inside one
         Index::train call; same here.  Order matters for the composite: the
         coarse quantizer trains FIRST so PQ codebooks fit RESIDUALS
@@ -1443,8 +1440,11 @@ class FaissSparkEngine:
             )
 
     def _train_kmeans(self, idx: FaissIndex, vec_df: DataFrame) -> None:
-        """IVF coarse quantizer via MLlib KMeans (SURVEY.md §7 M3).
-        Reproduces the too-few-points error (faiss_extension.cpp:400-404)."""
+        """IVF coarse quantizer (SURVEY.md §7 M3), one of two fit tiers over
+        the capped training sample: the seeded k-means|| Lloyd on the driver
+        (``_fit_kmeans_driver``), or MLlib KMeans when the sample's float32
+        matrix exceeds ``DRIVER_FIT_BYTES``.  Reproduces the too-few-points
+        error (faiss_extension.cpp:400-404)."""
         nlist = idx.spec.nlist
         n = vec_df.count()
         if n < nlist:
@@ -1452,115 +1452,83 @@ class FaissSparkEngine:
                 f"Index {idx.name}: cannot train {nlist} clusters with only {n} "
                 f"vectors; provide at least as many training points as clusters"
             )
-        if nlist == 1:
-            # single cluster: centroid = per-dimension mean, one distributed agg
-            sums = (
-                vec_df.select(F.posexplode("vector").alias("i", "v"))
-                .groupBy("i")
-                .agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-                .orderBy("i")
-                .collect()
+        # FAISS subsamples training to ~256 points per centroid
+        # (Clustering::max_points_per_centroid); mirror that so training
+        # cost is O(nlist), not O(corpus) — at the 4M probe this cut the
+        # IVF32 build from ~80 s of KMeans to a constant ~8k-point fit.
+        # Both knobs are user-tunable (VERDICT r7 task 5: recall at
+        # high nlist may want a deeper fit): params
+        # 'train_points_per_centroid' (default 256) and 'train_max_iter'
+        # (default 20, MLlib's own default).
+        ppc = int(idx.params.get("train_points_per_centroid", 256))
+        max_iter = int(idx.params.get("train_max_iter", 20))
+        cap = ppc * nlist
+        sample = vec_df
+        if n > cap:
+            sample = vec_df.sample(fraction=min(1.0, cap * 1.2 / n), seed=42).limit(cap)
+        if min(n, cap) * idx.dim * 4 <= self.DRIVER_FIT_BYTES:
+            # the sample is read ONCE, zero-copy: the list<float> column's
+            # flattened child buffer reshapes straight into the (n, d)
+            # float32 matrix (r14 session 2, guide §6 "Arrow for driver
+            # transfers" — a per-row Python list build dominated the fit's
+            # wall clock, ~15 s of 30 s at 524k x 64)
+            vcol = sample.select("vector").toArrow().column("vector").combine_chunks()
+            x = vector_matrix(vcol, idx.dim, f"index {idx.name!r}")
+            cents, hist, labels = self._fit_kmeans_driver(x, nlist, max_iter)
+            idx.centroids = cents
+            if resolve_metric(idx.metric) != "L2":
+                # the fit's L2 labels are not the index assignment (e.g. IP
+                # collapse onto large-norm centroids): relabel the in-memory
+                # sample under the index metric
+                labels = nearest_centroid(x, cents, idx.metric, idx.metric_arg)
+                hist = np.bincount(labels, minlength=nlist).astype(np.int64)
+            # the rebalance slices its per-cluster point sets from the
+            # driver-side sample instead of re-assigning it through a
+            # distributed job (the r14 profile put that second round trip
+            # at ~31 s of a 69 s train)
+            hist = self._rebalance_oversize_clusters(
+                idx, sample, hist, driver_pts=(x, labels)
             )
-            centroid = np.array([r["s"] / r["c"] for r in sums], dtype=np.float32)
-            idx.centroids = centroid.reshape(1, -1)
         else:
             from pyspark.ml.clustering import KMeans
             from pyspark.ml.functions import array_to_vector
 
-            # FAISS subsamples training to ~256 points per centroid
-            # (Clustering::max_points_per_centroid); mirror that so training
-            # cost is O(nlist), not O(corpus) — at the 4M probe this cut the
-            # IVF32 build from ~80 s of KMeans to a constant ~8k-point fit.
-            # Both knobs are user-tunable (VERDICT r7 task 5: recall at
-            # high nlist may want a deeper fit): params
-            # 'train_points_per_centroid' (default 256) and 'train_max_iter'
-            # (default 20, MLlib's own default).
-            ppc = int(idx.params.get("train_points_per_centroid", 256))
-            max_iter = int(idx.params.get("train_max_iter", 20))
-            cap = ppc * nlist
-            sample = vec_df
-            if n > cap:
-                sample = vec_df.sample(fraction=min(1.0, cap * 1.2 / n), seed=42).limit(cap)
             # GlobalLimit collapses the sample to ONE partition, which ran
             # the whole k=nlist fit single-core: the r7 breakdown probe
             # measured the in-engine 1M/2048 fit at 2273 s vs ~85 s for the
-            # same problem fit in parallel (SCALE.md r7 — THE dominant cost
-            # of every high-nlist build since r1, hiding as "ambient load").
-            # One bounded repartition (<= cap rows) restores parallelism.
+            # same problem fit in parallel (SCALE.md r7).  One bounded
+            # repartition (<= cap rows) restores parallelism, and one cache
+            # serves the fit, the histogram and the rebalance collect.
             sample = sample.repartition(
                 max(2, self.spark.sparkContext.defaultParallelism)
-            )
-            # one cache serves both the KMeans fit and the degeneracy check
-            # below — O(nlist) rows, never the corpus
-            sample = sample.persist()
+            ).persist()
             try:
-                # small capped samples (bytes-bounded both ways) fit DRIVER-
-                # SIDE in milliseconds: a 4096-row k=16 problem through
-                # MLlib pays ~seconds of per-iteration job overhead plus a
-                # one-time ~6.5 s first-KMeans JIT penalty (SCALE.md r9
-                # build-gap table) — pure fixed cost at bench scale.  Large
-                # fits (high nlist: the 100 TB regime) keep the parallel
-                # MLlib path, where that overhead amortizes into real work.
-                small = (
-                    min(n, cap) * idx.dim * 8 <= self.SMALL_FIT_BYTES
-                    and min(n, cap) * nlist * 8 <= self.SMALL_FIT_BYTES
-                    and not int(idx.params.get("force_distributed_fit", 0))
+                ml_df = sample.select(
+                    array_to_vector(F.col("vector").cast("array<double>")).alias("features")
                 )
-                # r14 medium regime (guide §1.2 step 1 — the distributed
-                # algorithm): the 524k x 2048 x 64 bench fit spent ~100 s in
-                # MLlib's per-point aggregation loop; the sample is only
-                # ~134 MB of float32, far under driver memory, and a
-                # thread-parallel chunked-BLAS Lloyd on the driver measures
-                # ~2 s/iteration on local[32] (numpy releases the GIL in
-                # gemm/argmax).  Truly large fits (sample f32 matrix above
-                # MEDIUM_FIT_BYTES — the 100 TB regime with nlist in the
-                # hundreds of thousands) keep the parallel MLlib path.
-                medium = (
-                    min(n, cap) * idx.dim * 4 <= self.MEDIUM_FIT_BYTES
-                    and not int(idx.params.get("force_distributed_fit", 0))
+                km = KMeans(k=nlist, seed=42, maxIter=max_iter, featuresCol="features")
+                model = km.fit(ml_df)
+                idx.centroids = np.array(
+                    [np.asarray(c) for c in model.clusterCenters()], dtype=np.float32
                 )
-                driver_pts = None
-                if small or medium:
-                    if small:
-                        cents, l2_counts = self._fit_kmeans_local(
-                            sample, nlist, max_iter
-                        )
-                    else:
-                        cents, l2_counts, samp_x, samp_lab = (
-                            self._fit_kmeans_medium(sample, nlist, max_iter)
-                        )
-                    idx.centroids = cents
-                    from duckdb_faiss_ext_spark.metrics import resolve_metric
-
-                    if resolve_metric(idx.metric) == "L2":
-                        hist = l2_counts  # same reuse rule as the MLlib path
-                        if not small:
-                            # the fit's final L2 labels ARE the index
-                            # assignment — the rebalance can slice its
-                            # per-cluster point sets from the driver-side
-                            # sample instead of re-running assignment as a
-                            # distributed job + toPandas (guide §4: the
-                            # second full sample round-trip was ~31 s of a
-                            # 69 s quiet train, r14 profile)
-                            driver_pts = (samp_x, samp_lab)
-                    else:
-                        hist = self._sample_metric_histogram(idx, sample, None)
+                hist = np.zeros(nlist, dtype=np.int64)
+                if resolve_metric(idx.metric) == "L2":
+                    # MLlib assigns by L2: its clusterSizes ARE the index
+                    # histogram — zero extra jobs
+                    sizes = list(model.summary.clusterSizes)
+                    hist[: len(sizes)] = np.asarray(sizes, dtype=np.int64)
                 else:
-                    ml_df = sample.select(
-                        array_to_vector(F.col("vector").cast("array<double>")).alias("features")
-                    )
-                    km = KMeans(k=nlist, seed=42, maxIter=max_iter, featuresCol="features")
-                    model = km.fit(ml_df)
-                    idx.centroids = np.array(
-                        [np.asarray(c) for c in model.clusterCenters()], dtype=np.float32
-                    )
-                    hist = self._sample_metric_histogram(idx, sample, model)
-                hist = self._rebalance_oversize_clusters(
-                    idx, sample, hist, driver_pts=driver_pts
-                )
-                self._warn_if_degenerate_assignment(idx, hist)
+                    for r in (
+                        self._assign_only(idx, sample)
+                        .groupBy("cluster_id")
+                        .count()
+                        .collect()
+                    ):
+                        hist[int(r["cluster_id"])] = int(r["count"])
+                hist = self._rebalance_oversize_clusters(idx, sample, hist)
             finally:
                 sample.unpersist()
+        self._warn_if_degenerate_assignment(idx, hist)
         idx.trained = True
 
     # layout-cache ceiling (ADVICE r14): the add-path persist that lets the
@@ -1570,69 +1538,11 @@ class FaissSparkEngine:
     # Local/bench adds (<= a few GB) keep the r14 single-pass behavior.
     LAYOUT_CACHE_MAX_BYTES = 16e9
 
-    # driver-side fit ceiling: sample_rows x dim and sample_rows x nlist f64
-    # temps must both stay under this (128 MB) — above it the MLlib parallel
-    # fit wins anyway (its job overhead amortizes into real work)
-    SMALL_FIT_BYTES = 128e6
-
-    def _fit_kmeans_local(
-        self, sample: DataFrame, nlist: int, max_iter: int
-    ) -> tuple:
-        """Seeded driver-side Lloyd with k-means++ (D²) init over the CAPPED
-        training sample; returns (float32 centroids, int64 L2 counts).
-        Numerics in f64.  Empty clusters re-seed to the farthest point from
-        its assigned center (the standard Lloyd repair, also what keeps
-        nlist constant).  Convergence at max center shift < 1e-4 mirrors
-        MLlib's default tol."""
-        pdf = sample.select("vector").toPandas()
-        x = np.asarray(list(pdf["vector"]), dtype=np.float64)
-        rng = np.random.default_rng(42)
-        cents = np.empty((nlist, x.shape[1]), dtype=np.float64)
-        cents[0] = x[rng.integers(len(x))]
-        d2 = ((x - cents[0]) ** 2).sum(1)
-        for j in range(1, nlist):
-            # D² sampling via cumulative-sum inversion (rng.choice(p=...)
-            # can trip numpy's sum-to-1 check on large fp arrays)
-            c = np.cumsum(d2)
-            pick = (
-                int(np.searchsorted(c, rng.random() * c[-1]))
-                if c[-1] > 0
-                else int(rng.integers(len(x)))
-            )
-            cents[j] = x[min(pick, len(x) - 1)]
-            d2 = np.minimum(d2, ((x - cents[j]) ** 2).sum(1))
-        xn = (x**2).sum(1, keepdims=True)
-
-        def assign(c):
-            d2m = xn - 2.0 * (x @ c.T) + (c**2).sum(1)[None, :]
-            lab = d2m.argmin(1)
-            return lab, d2m[np.arange(len(x)), lab]
-
-        for _it in range(max(1, max_iter)):
-            lab, mind = assign(cents)
-            new = np.empty_like(cents)
-            far = np.argsort(-mind)
-            fi = 0
-            for j in range(nlist):
-                sel = lab == j
-                if sel.any():
-                    new[j] = x[sel].mean(0)
-                else:
-                    new[j] = x[far[fi]]
-                    fi += 1
-            shift = np.sqrt(((new - cents) ** 2).sum(1)).max()
-            cents = new
-            if shift < 1e-4:
-                break
-        lab, _ = assign(cents)
-        counts = np.bincount(lab, minlength=nlist).astype(np.int64)
-        return cents.astype(np.float32), counts
-
-    # driver-side THREADED fit ceiling: the capped sample's float32 matrix
-    # must fit comfortably on the driver (600 MB ~ 2.4M rows at dim 64,
-    # 100k rows at dim 1536 — covers every high-nlist fit a single host
-    # would run).  Above it the MLlib parallel path takes over.
-    MEDIUM_FIT_BYTES = 600e6
+    # driver-side fit ceiling: the capped sample's float32 matrix must fit
+    # comfortably on the driver (600 MB ~ 2.4M rows at dim 64, 100k rows at
+    # dim 1536 — covers every high-nlist fit a single host would run).
+    # Above it the MLlib parallel path takes over.
+    DRIVER_FIT_BYTES = 600e6
 
     # serialize entries to the process-global OpenBLAS knob (ADVICE r14):
     # depth counter restores only at the outermost exit
@@ -1655,10 +1565,9 @@ class FaissSparkEngine:
         0.2% sys with the pool pinned to 1 (tools/out_r14/
         host_trail_session2.log, gemm microbench in OPTIMIZATION_r14.md).
         Process-wide, hence scoped: serial driver-side BLAS paths (the
-        small-fit solver the declared queries build through, the SQ8
-        margin check) keep the default pool and their exact current
-        behavior.  No-op when the OpenBLAS control symbols are absent
-        (non-OpenBLAS numpy builds).
+        SQ8 margin check, the fit's non-L2 relabel) keep the default pool
+        and their exact current behavior.  No-op when the OpenBLAS control
+        symbols are absent (non-OpenBLAS numpy builds).
 
         The knob is a process GLOBAL, so entries are serialized on a
         module lock with a depth counter: overlapping fits from two driver
@@ -1708,17 +1617,19 @@ class FaissSparkEngine:
                 if cls._BLAS_GUARD_DEPTH == 0:
                     set_(cls._BLAS_GUARD_PREV)
 
-    def _fit_kmeans_medium(
-        self, sample: DataFrame, nlist: int, max_iter: int
+    def _fit_kmeans_driver(
+        self, x: np.ndarray, nlist: int, max_iter: int
     ) -> tuple:
-        """Seeded driver-side Lloyd for the mid-size regime (sample too big
-        for the f64 small-fit temps, small enough to hold as one float32
-        matrix): chunked f32 BLAS scoring fanned over a thread pool (numpy
+        """Seeded driver-side Lloyd over the capped sample's (n, d) float32
+        matrix: chunked f32 BLAS scoring fanned over a thread pool (numpy
         releases the GIL in gemm/argmax/reduceat), f64 mean accumulation in
         fixed chunk order (deterministic).  Replaces the MLlib path for
-        these fits — the 524k x 2048 x 64 bench fit dropped from ~100 s of
-        MLlib per-point aggregation to ~2 s/iteration (guide §1.2: fix the
-        algorithm before the configuration).
+        every fit under ``DRIVER_FIT_BYTES`` — the 524k x 2048 x 64 bench
+        fit dropped from ~100 s of MLlib per-point aggregation to ~2
+        s/iteration (guide §1.2: fix the algorithm before the
+        configuration), and a 4096-row k=16 fit no longer pays MLlib's
+        per-iteration job overhead.  With nlist=1 it converges to the
+        sample mean, FAISS's own k=1 result.
 
         Init is k-means|| (Bahmani et al., VLDB 2012 — the same D²-weighted
         seeding family MLlib's default init uses): 2 oversampling rounds at
@@ -1734,47 +1645,15 @@ class FaissSparkEngine:
         build).  D² seeding lands one seed per separated natural cluster
         with near-certainty (guide §2.5 — fix skew at the source).
         Empty clusters re-seed to the farthest point from its assigned
-        center, exactly like ``_fit_kmeans_local``; convergence at max
-        center shift < 1e-4."""
+        center (the standard Lloyd repair, also what keeps nlist
+        constant); convergence at max center shift < 1e-4 mirrors MLlib's
+        default tol.
+
+        Returns (float32 centroids, int64 L2 counts, int32 L2 labels of
+        every sample row)."""
         import os as _os
         from concurrent.futures import ThreadPoolExecutor
 
-        # zero-copy Arrow fetch (r14 session 2, guide §6 "Arrow for driver
-        # transfers"): the list<float> column's flattened child buffer
-        # reshapes straight into the (n, d) float32 matrix — the previous
-        # ``np.ascontiguousarray(list(pdf["vector"]))`` built one Python
-        # object per row and dominated the fit's wall clock once the gemm
-        # contention fix landed (~15 s of the 30 s fit at 524k x 64).
-        # Strict uniform-offsets check; ragged/null samples (never produced
-        # by the validated add/train paths) fall back to the row path.
-        x = None
-        try:
-            tbl = sample.select("vector").toArrow()
-            vcol = tbl.column("vector").combine_chunks()
-            # both row-level AND element-level nulls must be absent: a null
-            # ELEMENT lives on the values child, where to_numpy would
-            # silently yield NaN instead of failing loudly like the row
-            # path (ADVICE r14)
-            if (
-                tbl.num_rows
-                and vcol.null_count == 0
-                and vcol.values.null_count == 0
-            ):
-                off = np.asarray(vcol.offsets)
-                widths = np.unique(np.diff(off))
-                if len(widths) == 1 and widths[0] > 0:
-                    flat = vcol.flatten().to_numpy(zero_copy_only=False)
-                    x = np.ascontiguousarray(
-                        flat.reshape(tbl.num_rows, int(widths[0])),
-                        dtype=np.float32,
-                    )
-            del tbl, vcol
-        except Exception:
-            x = None
-        if x is None:
-            pdf = sample.select("vector").toPandas()
-            x = np.ascontiguousarray(list(pdf["vector"]), dtype=np.float32)
-            del pdf
         n, d = x.shape
         rng = np.random.default_rng(42)
         xn = np.einsum("ij,ij->i", x, x, dtype=np.float64)
@@ -1923,7 +1802,7 @@ class FaissSparkEngine:
             cmat = np.vstack(cand).astype(np.float64)
             w = np.bincount(near, minlength=ncand).astype(np.float64)
             # weighted k-means++ (D² cumsum inversion, like
-            # _fit_kmeans_local) over the ~4*nlist candidates — driver-side
+            # _lloyd_np) over the ~4*nlist candidates — driver-side
             # and cheap: the candidate set is O(nlist), not O(n)
             seed = np.empty((nlist, d), dtype=np.float64)
             cw = np.cumsum(w)
@@ -1979,45 +1858,7 @@ class FaissSparkEngine:
                 _, counts = assign_all(cents)
         finally:
             pool.shutdown(wait=True)
-        return cents, counts.astype(np.int64), x, labels
-
-    def _sample_metric_histogram(
-        self, idx: FaissIndex, sample: DataFrame, model=None
-    ) -> "np.ndarray":
-        """Histogram of the training sample's coarse assignment under the
-        INDEX metric, as an int64 array of length nlist.  Sourcing (VERDICT
-        r7 task 3 — don't pay a second distributed pass when the fit
-        already produced the answer):
-
-        - L2 index metric: REUSE the KMeans fit's own ``summary.clusterSizes``
-          (MLlib assigns by L2, squared-L2 argmin is the same assignment) —
-          zero extra jobs.
-        - other metrics (where the fit's L2 assignment is NOT the index
-          assignment — e.g. IP collapse onto large-norm centroids): compute
-          under the INDEX metric on the cached TRAINING SAMPLE — one
-          O(nlist)-row job, never a corpus scan."""
-        nlist = idx.spec.nlist
-        metric = idx.metric
-        from duckdb_faiss_ext_spark.metrics import resolve_metric
-
-        if model is not None and resolve_metric(metric) == "L2":
-            counts = np.zeros(nlist, dtype=np.int64)
-            sizes = list(model.summary.clusterSizes)
-            counts[: len(sizes)] = np.asarray(sizes, dtype=np.int64)
-            return counts
-
-        rows = (
-            sample.select(
-                self._cluster_assign_udf(idx)(F.col("vector")).alias("cid")
-            )
-            .groupBy("cid")
-            .count()
-            .collect()
-        )
-        counts = np.zeros(nlist, dtype=np.int64)
-        for r in rows:
-            counts[int(r["cid"])] = int(r["count"])
-        return counts
+        return cents, counts.astype(np.int64), labels
 
     def _warn_if_degenerate_assignment(
         self, idx: FaissIndex, counts: "np.ndarray"
@@ -2089,8 +1930,10 @@ class FaissSparkEngine:
         slots, keeping nlist constant (VERDICT r7 task 4).
 
         All numeric work happens DRIVER-SIDE on the bounded training sample
-        (<= train_points_per_centroid * nlist rows): one distributed job
-        collects the points of the affected clusters, then a local loop
+        (<= train_points_per_centroid * nlist rows): the points of the
+        affected clusters come from ``driver_pts`` (the driver fit's
+        in-memory sample and index-metric labels) or, on the MLlib tier, one
+        ``_assign_only`` collect over ``sample``; then a local loop
         repeatedly 2-means-splits the current biggest cluster into a donor
         slot until every cluster is under ``REBALANCE_CAP_SHARE`` x the even
         share or donors run out.  Donor slots are empty clusters first, then
@@ -2135,7 +1978,11 @@ class FaissSparkEngine:
         splits_wanted = int(sum(int(np.ceil(counts[c] / cap)) - 1 for c in over))
         if not splits_wanted or not (empties or tiny):
             return counts
-        tiny = tiny[: max(0, splits_wanted - len(empties))]
+        # one spare donor per offender: 2-means halves are uneven, so the
+        # minimum ceil(count / cap) - 1 splits can leave one piece over cap
+        # (a 1700-row blob at cap 500 split 538/418/384/360); the loop
+        # below consumes donors only while a cluster is still over cap
+        tiny = tiny[: max(0, splits_wanted + len(over) - len(empties))]
         # one filtered collect, byte-budgeted (biggest offenders first):
         # 256 MB of f32 vectors caps driver memory even at dim 1536
         budget_rows = max(int(256e6 / (4 * dim)), 4096)
@@ -2152,10 +1999,8 @@ class FaissSparkEngine:
             return counts
         pts: dict = {}
         if driver_pts is not None:
-            # the caller's fit already holds the sample matrix and its
-            # index-metric labels driver-side (medium L2 fit): slice the
-            # affected clusters locally instead of re-assigning the whole
-            # sample through a second distributed job + toPandas
+            # the driver fit already holds the sample matrix and its
+            # index-metric labels: slice the affected clusters locally
             samp_x, samp_lab = driver_pts
             order = np.argsort(samp_lab, kind="stable")
             sl = samp_lab[order]
@@ -2164,23 +2009,21 @@ class FaissSparkEngine:
                 hi = np.searchsorted(sl, c, side="right")
                 pts[c] = np.ascontiguousarray(samp_x[order[lo:hi]])
             mat = samp_x[:0]
-            if not any(len(p) for p in pts.values()):
-                return counts
         else:
-            pdf = (
-                sample.withColumn(
-                    "cid", self._cluster_assign_udf(idx)(F.col("vector"))
-                )
-                .filter(F.col("cid").isin([int(c) for c in wanted]))
-                .select("cid", "vector")
-                .toPandas()
+            tbl = (
+                self._assign_only(idx, sample)
+                .filter(F.col("cluster_id").isin(wanted))
+                .select("cluster_id", "vector")
+                .toArrow()
             )
-            if not len(pdf):
-                return counts
-            cids = pdf["cid"].to_numpy()
-            mat = np.asarray(list(pdf["vector"]), dtype=np.float32)
+            cids = tbl.column("cluster_id").to_numpy()
+            mat = vector_matrix(
+                tbl.column("vector").combine_chunks(), dim, f"index {idx.name!r}"
+            )
             for c in wanted:
                 pts[c] = mat[cids == c]
+        if not any(len(p) for p in pts.values()):
+            return counts
         cents = idx.centroids.astype(np.float32).copy()
         counts = counts.copy()
         rng = np.random.default_rng(42)
@@ -2279,9 +2122,8 @@ class FaissSparkEngine:
     ) -> np.ndarray:
         """Seeded k-means++ (D² cumsum inversion) + Lloyd over a small numpy
         sample, f64 under L2 — the split-boundary fitter for corpus
-        rebalance (same numerics as ``_fit_kmeans_local`` without the
-        DataFrame plumbing or empty-cluster repair: children that collapse
-        empty simply attract no rows).
+        rebalance (f64 numerics, no empty-cluster repair: children that
+        collapse empty simply attract no rows).
 
         ``spherical``: unit-normalize the children after every mean update
         (faiss Clustering's spherical option) — REQUIRED when rows will be
@@ -2530,7 +2372,7 @@ class FaissSparkEngine:
             def reassigned(frame: DataFrame) -> DataFrame:
                 """Offenders' rows re-pick among their own children — a
                 zero-copy mapInArrow kernel (guide §4.1/§4.2, VERDICT r14
-                task 3): the r14 pandas_udf decoded one Python list PER ROW
+                task 3): the r14 pandas UDF decoded one Python list PER ROW
                 (``np.asarray(list(v))``), and on SQ8 indexes additionally
                 paid a JVM decode of EVERY row's vector; the r14 layout
                 tripped 16 splits on the 1M bench corpus, putting this
@@ -2567,17 +2409,9 @@ class FaissSparkEngine:
                         if not np.isin(cid, split).any():
                             yield rb
                             continue
-                        vcol = rb.column(vec_pos)
-                        vals = vcol.flatten()
-                        _reject_null_elements(vals, name)
-                        flat = vals.to_numpy(zero_copy_only=False)
-                        if len(flat) == nrows * dim and not vcol.null_count:
-                            xmat = flat.reshape(nrows, dim)
-                        else:  # ragged/null rows — loud per-row fallback,
-                            # exactly like the pandas path's np.asarray
-                            xmat = np.asarray(
-                                [np.asarray(v) for v in vcol.to_pylist()]
-                            )
+                        xmat = vector_matrix(
+                            rb.column(vec_pos), dim, f"index {name!r}", None
+                        )
                         for c, (ids, sub) in fams_v.items():
                             m = cid == c
                             if not m.any():
@@ -2673,96 +2507,37 @@ class FaissSparkEngine:
             corpus, idx.sq_vmin, idx.sq_vdiff, codes_col="codes", out_col="vector"
         )
 
-    def _cluster_assign_udf(self, idx: FaissIndex):
-        """Arrow-batched nearest-centroid assignment under the index metric
-        (FAISS coarse quantization) — broadcast centroids, one matmul per
-        batch.  Exposed separately from ``_assign_clusters`` so the build
-        breakdown probe can time the assignment pass without the range
-        shuffle (SCALE.md r7)."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
-        bc = self.spark.sparkContext.broadcast(cents)
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
-        desc = is_descending(metric)
-
-        def assign(v: pd.Series) -> pd.Series:
-            x = np.asarray(list(v), dtype=np.float32)
-            # chunk so the (rows, nlist) score temp stays ~<=64 MB: a full
-            # 64k Arrow batch at nlist=4096 is a >1 GB matrix (plus kernel
-            # temps) PER WORKER — 32 workers tripped the host's global OOM
-            # at the 16M/4096 probe (SCALE.md r9); assignment only needs
-            # the per-row argmax, so chunking changes nothing numerically
-            step = max(256, int(64e6 // (max(len(cents), 1) * 4)))
-            out = np.empty(len(x), dtype=np.int32)
-            for s in range(0, len(x), step):
-                scores = pairwise(x[s : s + step], bc.value, metric, marg)
-                ids, _ = topk_indices(scores, 1, desc)
-                out[s : s + step] = ids[:, 0]
-            return pd.Series(out)
-
-        return F.pandas_udf(assign, "int")
-
     def _assign_only(self, idx: FaissIndex, vecs: DataFrame) -> DataFrame:
-        """Cluster assignment alone — a narrow mapInArrow projection, no
-        exchange.  add() encodes PQ/SQ8 storage between this and
-        `_cluster_layout` so the range shuffle moves codes, not f32 (r14).
+        """Cluster assignment alone — a narrow mapInArrow projection that
+        appends ``cluster_id``, no exchange.  add() encodes PQ/SQ8 storage
+        between this and `_cluster_layout` so the range shuffle moves
+        codes, not f32 (r14); the MLlib fit tier runs its non-L2 histogram
+        and rebalance collect through it too.
 
-        Arrow zero-copy decode (guide §4.1/§4.2): the list<float> column's
-        flattened child buffer reshapes straight into an (n, d) float32
-        matrix — the previous pandas-UDF path built one Python list object
-        per row (``np.asarray(list(v))``), which dominated the 1M-corpus
-        assignment pass (~45 s for ~3 s of actual BLAS).  Scoring keeps the
-        EXACT chunk-size formula and pairwise/topk_indices calls of the
-        pandas path (Arrow batch boundaries match pandas batch boundaries —
-        both are cut by arrow.maxRecordsPerBatch — so BLAS shapes and
-        therefore last-ulp tie behavior are unchanged)."""
+        Arrow zero-copy decode (guide §4.1/§4.2, ``vector_matrix``): the
+        previous pandas-UDF path built one Python list object per row
+        (``np.asarray(list(v))``), which dominated the 1M-corpus
+        assignment pass (~45 s for ~3 s of actual BLAS).  Scoring is
+        ``nearest_centroid`` per Arrow batch (batches are cut by
+        arrow.maxRecordsPerBatch, so BLAS shapes and therefore last-ulp
+        tie behavior match the old pandas path)."""
         import pyarrow as pa
 
-        from duckdb_faiss_ext_spark.metrics import (
-            is_descending,
-            pairwise,
-            topk_indices,
-        )
-
-        cents = idx.centroids
         metric = idx.metric
         marg = idx.metric_arg
         dim = idx.dim
-        name = idx.name
-        bc = self.spark.sparkContext.broadcast(cents)
-        desc = is_descending(metric)
+        what = f"index {idx.name!r}"
+        bc = self.spark.sparkContext.broadcast(idx.centroids)
         vec_pos = vecs.columns.index("vector")
 
         def assign_batches(batches):
             c = bc.value
-            step = max(256, int(64e6 // (max(len(c), 1) * 4)))
             for rb in batches:
-                nrows = rb.num_rows
-                if nrows == 0:
+                if rb.num_rows == 0:
                     continue
-                vcol = rb.column(vec_pos)
-                vals = vcol.flatten()
-                _reject_null_elements(vals, name)
-                flat = vals.to_numpy(zero_copy_only=False)
-                if len(flat) == nrows * dim and not vcol.null_count:
-                    x = np.ascontiguousarray(
-                        flat.reshape(nrows, dim), dtype=np.float32
-                    )
-                else:  # ragged/null rows — per-row fallback (fails loudly
-                    # on None exactly like the pandas path did)
-                    x = np.asarray(
-                        [np.asarray(v, dtype=np.float32) for v in vcol.to_pylist()]
-                    )
-                out = np.empty(nrows, dtype=np.int32)
-                for s in range(0, nrows, step):
-                    scores = pairwise(x[s : s + step], c, metric, marg)
-                    ids, _ = topk_indices(scores, 1, desc)
-                    out[s : s + step] = ids[:, 0]
-                yield rb.append_column(
-                    "cluster_id", pa.array(out, pa.int32())
-                )
+                x = vector_matrix(rb.column(vec_pos), dim, what)
+                out = nearest_centroid(x, c, metric, marg)
+                yield rb.append_column("cluster_id", pa.array(out, pa.int32()))
 
         schema_str = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in vecs.schema.fields
@@ -2783,9 +2558,6 @@ class FaissSparkEngine:
         # partition's single-threaded scan).
         n_parts = max(assigned.rdd.getNumPartitions(), 1)
         return assigned.repartitionByRange(n_parts, "cluster_id", "label")
-
-    def _assign_clusters(self, idx: FaissIndex, vecs: DataFrame) -> DataFrame:
-        return self._cluster_layout(self._assign_only(idx, vecs))
 
     # ---------------------------------------------------------------- search
 
@@ -2881,7 +2653,7 @@ class FaissSparkEngine:
     def _coarse_scores(q: np.ndarray, cents: np.ndarray, metric: str, marg: float) -> np.ndarray:
         """Query-to-centroid scores for PROBE SELECTION, float64-computed
         then rounded to float32.  Selection must be identical across every
-        execution path (driver mask, executor explode-udf, PQ LUT path) for
+        execution path (driver probe, executor probe kernel, PQ LUT path) for
         the auto-router's result-identity contract — but float32 BLAS
         results differ in the last ulp with matrix SHAPE, and a 1-ulp flip
         at the nprobe boundary admits a DIFFERENT CLUSTER on one path (the
@@ -2898,7 +2670,7 @@ class FaissSparkEngine:
     ) -> np.ndarray:
         """(nq, k) probed-cluster ids, CHUNKED so the (rows, nlist) f64
         score temp stays ~<=64 MB — a 64k query block (or Arrow batch, in
-        the executor-side probe UDF) at nlist=4096 is a 2.1 GB f64 matrix
+        the executor-side probe kernel) at nlist=4096 is a 2.1 GB f64 matrix
         per process, the same memory cliff the assignment UDF hit at the
         16M/4096 probe (SCALE.md r9).  Chunking cannot change selection:
         the f64-then-round rule exists precisely because f64 accumulation
@@ -2914,24 +2686,48 @@ class FaissSparkEngine:
             out[s : s + step] = ids
         return out
 
-    def _probe_mask_fn(self, idx: FaissIndex, nprobe: int):
-        """(qids, q) -> (nq, nlist) boolean mask of probed clusters."""
-        cents = idx.centroids
+    def _probe_ids(self, idx: FaissIndex, q: np.ndarray, nprobe: int) -> np.ndarray:
+        """(nq, min(nprobe, nlist)) int64 ids of each query's probed
+        clusters — the driver-side probe every block-streaming search path
+        uses; ``_probe_rows`` is its executor-side twin."""
+        return self._coarse_topk(
+            q, idx.centroids, idx.metric, idx.metric_arg, nprobe,
+            is_descending(idx.metric),
+        )
+
+    def _probe_rows(self, idx: FaissIndex, q: DataFrame, nprobe: int) -> DataFrame:
+        """One row per (query, probed cluster): ``q``'s columns plus
+        ``cluster_id`` — the executor-side twin of ``_probe_ids`` for the
+        bulk-query path (probe selection must not run on the driver when
+        the query side is corpus-scale).  A narrow mapInArrow over the same
+        ``_coarse_topk`` call; each query row repeats once per probed
+        cluster, in probe order."""
+        import pyarrow as pa
+
         metric = idx.metric
         marg = idx.metric_arg
+        desc = is_descending(metric)
+        np_ = min(nprobe, len(idx.centroids))
+        dim = idx.dim
+        bc = self.spark.sparkContext.broadcast(idx.centroids)
+        vec_pos = q.columns.index("vector")
 
-        def fn(qids: np.ndarray, q: np.ndarray) -> np.ndarray:
-            from duckdb_faiss_ext_spark.metrics import is_descending
+        def probe(batches):
+            c = bc.value
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                x = vector_matrix(rb.column(vec_pos), dim, "query side")
+                ids = FaissSparkEngine._coarse_topk(x, c, metric, marg, np_, desc)
+                rows = np.repeat(np.arange(rb.num_rows), ids.shape[1])
+                yield rb.take(pa.array(rows)).append_column(
+                    "cluster_id", pa.array(ids.reshape(-1).astype(np.int32))
+                )
 
-            ids = self._coarse_topk(
-                q, cents, metric, marg, nprobe, is_descending(metric)
-            )
-            mask = np.zeros((q.shape[0], cents.shape[0]), dtype=bool)
-            rows = np.arange(q.shape[0])[:, None]
-            mask[rows, ids] = True
-            return mask
-
-        return fn
+        schema_str = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in q.schema.fields
+        )
+        return q.mapInArrow(probe, schema=f"{schema_str}, cluster_id int")
 
     def search_flat(
         self,
@@ -3059,20 +2855,31 @@ class FaissSparkEngine:
                 allowed_col=allowed_col,
             )
         cluster_col = None
-        probe_fn = None
-        if idx.spec.kind == "ivf" and "cluster_id" in corpus.columns:
-            nprobe = int(params.get("nprobe", 1))
-            if nprobe < idx.spec.nlist:
-                cluster_col = "cluster_id"
-                probe_fn = self._probe_mask_fn(idx, nprobe)
+        probe_mask_for = None
+        nprobe = int(params.get("nprobe", 1))
+        if (
+            idx.spec.kind == "ivf"
+            and "cluster_id" in corpus.columns
+            and nprobe < idx.spec.nlist
+        ):
+            cluster_col = "cluster_id"
+
+            def probe_mask_for(qids, q):
+                # (nq, nlist) mask of the probed ids; its argmax (the exact
+                # kernel's query sort key) is ids.min(1)
+                ids = self._probe_ids(idx, q, nprobe)
+                mask = np.zeros((len(q), len(idx.centroids)), dtype=bool)
+                mask[np.arange(len(q))[:, None], ids] = True
+                return mask
+
         if params.get("bulk_queries"):
             # bulk-query path: a corpus-scale QUERY side would serialize
             # through the driver's block iterator — route the search through
             # the executor-side block joins instead (operators/simjoin.py;
             # same pairwise/top-k kernels and (score, label) tie-break, so
             # results are identical).  Flat: block-nested-loop over the
-            # whole corpus.  IVF: queries explode to one row per probed
-            # cluster (narrow pandas_udf) and blocks EQUI-join on the
+            # whole corpus.  IVF: queries expand to one row per probed
+            # cluster (narrow mapInArrow) and blocks EQUI-join on the
             # cluster id — the probe pruning survives, nothing is cartesian.
             # Opt-in: the pack/join stages cost more than one broadcast for
             # ordinary query batches.
@@ -3088,7 +2895,7 @@ class FaissSparkEngine:
             # decode inside the pack kernel (same janino rule as the
             # driver path) — the right_vec column is just named "codes"
             corp_vec = "codes" if sq8_params is not None else "vector"
-            if probe_fn is None:
+            if probe_mask_for is None:
                 return similarity_join(
                     q,
                     corpus.select("label", corp_vec),
@@ -3101,10 +2908,8 @@ class FaissSparkEngine:
                     bulk=True,  # bulk_queries = caller says it's big
                     right_sq8=sq8_params,
                 ).select("qid", "rank", F.col("label"), F.col("distance"))
-            probes_udf = self._probe_clusters_udf(idx, int(params.get("nprobe", 1)))
-            q = q.withColumn("cluster_id", F.explode(probes_udf(F.col("vector"))))
             return similarity_join_grouped(
-                q,
+                self._probe_rows(idx, q, nprobe),
                 corpus.select("label", corp_vec, "cluster_id"),
                 k,
                 metric=idx.metric,
@@ -3125,7 +2930,7 @@ class FaissSparkEngine:
             qid_col=qid_col,
             q_vec_col=vec_col,
             cluster_col=cluster_col,
-            probe_mask_for=probe_fn,
+            probe_mask_for=probe_mask_for,
             sq8=sq8_params,
         )
 
@@ -3172,12 +2977,7 @@ class FaissSparkEngine:
                 idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
             )
             if has_clusters:
-                probes_udf = self._probe_clusters_udf(
-                    idx, min(nprobe, idx.spec.nlist)
-                )
-                q = q.withColumn(
-                    "cluster_id", F.explode(probes_udf(F.col("vector")))
-                )
+                q = self._probe_rows(idx, q, nprobe)
             return pq_search_grouped(
                 corpus,
                 q,
@@ -3187,13 +2987,11 @@ class FaissSparkEngine:
                 centroids=idx.centroids if has_clusters else None,
                 cluster_col="cluster_id" if has_clusters else None,
             )
-        probe_ids_fn = None
-        if (
+        probing = (
             idx.spec.kind == "ivf"
             and "cluster_id" in corpus.columns
             and nprobe < idx.spec.nlist
-        ):
-            probe_ids_fn = self._probe_ids_fn(idx, nprobe)
+        )
         residual_cents = (
             idx.centroids
             if idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
@@ -3215,8 +3013,8 @@ class FaissSparkEngine:
                 cq = q[lo : lo + chunk]
                 codes = corpus
                 probes = None
-                if probe_ids_fn is not None:
-                    probes = probe_ids_fn(cqids, cq)
+                if probing:
+                    probes = self._probe_ids(idx, cq, nprobe)
                     probed = [int(c) for c in np.unique(probes)]
                     codes = corpus.filter(F.col("cluster_id").isin(probed))
                 partials.append(
@@ -3314,14 +3112,12 @@ class FaissSparkEngine:
         ef = int(params.get("efSearch", self.DEFAULT_EF_SEARCH))
         nprobe = int(params.get("nprobe", 1))
         probe_col = None
-        probe_ids_fn = None
         if (
             idx.spec.kind == "ivf"
             and "cluster_id" in corpus.columns
             and nprobe < idx.spec.nlist
         ):
             probe_col = "cluster_id"
-            probe_ids_fn = self._probe_ids_fn(idx, nprobe)
         partials = []
         # graph indexes have no executor-side block-join bulk path (segment
         # replication would cost the BNL's full shuffle while beams only
@@ -3336,8 +3132,8 @@ class FaissSparkEngine:
                 cq = q[lo : lo + topk_ops.MAX_QUERY_BATCH]
                 data = corpus
                 probes = None
-                if probe_ids_fn is not None:
-                    probes = probe_ids_fn(cqids, cq)
+                if probe_col is not None:
+                    probes = self._probe_ids(idx, cq, nprobe)
                     probed = [int(c) for c in np.unique(probes)]
                     data = corpus.filter(F.col("cluster_id").isin(probed))
                 partials.append(
@@ -3362,42 +3158,6 @@ class FaissSparkEngine:
         for p in partials[1:]:
             out = out.unionByName(p)
         return out
-
-    def _probe_clusters_udf(self, idx: FaissIndex, nprobe: int):
-        """pandas_udf: vector -> array<int> of the query's nprobe nearest
-        coarse cells — the executor-side twin of ``_probe_ids_fn`` for the
-        bulk-query path (probe assignment must not run on the driver when
-        the query side is corpus-scale)."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
-        bc = self.spark.sparkContext.broadcast(cents)
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
-        desc = is_descending(metric)
-        np_ = min(nprobe, len(cents))
-
-        def fn(v: pd.Series) -> pd.Series:
-            x = np.asarray(list(v), dtype=np.float32)
-            ids = FaissSparkEngine._coarse_topk(x, bc.value, metric, marg, np_, desc)
-            return pd.Series([row.astype(np.int32).tolist() for row in ids])
-
-        return F.pandas_udf(fn, "array<int>")
-
-    def _probe_ids_fn(self, idx: FaissIndex, nprobe: int):
-        """(qids, q) -> (nq, nprobe) int64 ids of each query's probed clusters."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
-
-        def fn(qids: np.ndarray, q: np.ndarray) -> np.ndarray:
-            from duckdb_faiss_ext_spark.metrics import is_descending
-
-            return self._coarse_topk(
-                q, cents, metric, marg, nprobe, is_descending(metric)
-            )
-
-        return fn
 
     def _pad_no_hit_queries(
         self, queries_df: DataFrame, lists: DataFrame, k: int, metric: str, qid_col: str
@@ -3477,7 +3237,7 @@ class FaissSparkEngine:
         # One full scan pushes every partition through the real kernel
         # once — cost is bounded by one exact search.  LIVE list count,
         # not the factory nlist (ADVICE r10): corpus rebalance can grow
-        # the centroid set to 2x the factory's, and the probe UDF clamps
+        # the centroid set to 2x the factory's, and the probe kernel clamps
         # to the requested nprobe — a factory-nlist warm would leave every
         # split child's partition cold, exactly what full-probe is for.
         params = (

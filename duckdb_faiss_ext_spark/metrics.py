@@ -193,3 +193,22 @@ def topk_indices(scores: np.ndarray, k: int, descending: bool) -> tuple[np.ndarr
     keys = -cmp if descending else cmp
     idx = np.argsort(keys, axis=1, kind="stable")[:, :kk]
     return idx, scores[rows, idx]
+
+
+def nearest_centroid(
+    x: np.ndarray, cents: np.ndarray, metric: str, metric_arg: float = 0.0
+) -> np.ndarray:
+    """(n,) int32 id of each row's best centroid under ``metric`` — FAISS
+    coarse quantization, with ``topk_indices``' lowest-id tie-break.  Rows
+    are scored in chunks so the (rows, nlist) score temp stays ~<=64 MB: a
+    64k-row Arrow batch at nlist=4096 is a >1 GB matrix per worker, which
+    tripped the host's OOM at the 16M/4096 probe (SCALE.md r9).  Only the
+    per-row best is kept, so chunking changes nothing numerically."""
+    desc = is_descending(metric)
+    step = max(256, int(64e6 // (max(len(cents), 1) * 4)))
+    out = np.empty(len(x), dtype=np.int32)
+    for s in range(0, len(x), step):
+        scores = pairwise(x[s : s + step], cents, metric, metric_arg)
+        ids, _ = topk_indices(scores, 1, desc)
+        out[s : s + step] = ids[:, 0]
+    return out

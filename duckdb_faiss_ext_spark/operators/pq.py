@@ -60,17 +60,6 @@ def _kmeans_np(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.nda
     return cents
 
 
-def _assign_np(
-    x: np.ndarray, centroids: np.ndarray, metric: str, metric_arg: float
-) -> np.ndarray:
-    """Nearest-centroid assignment under the index metric — the numpy twin of
-    the engine's `_assign_clusters` pandas-UDF (same pairwise + argbest)."""
-    from duckdb_faiss_ext_spark.metrics import is_descending, pairwise
-
-    scores = pairwise(x, centroids, metric, metric_arg)
-    return scores.argmax(1) if is_descending(metric) else scores.argmin(1)
-
-
 def pq_train(
     df: DataFrame,
     dim: int,
@@ -102,7 +91,9 @@ def pq_train(
     pdf = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample).toPandas()
     x = np.asarray(list(pdf[vec_col]), dtype=np.float32)
     if centroids is not None:
-        x = x - centroids[_assign_np(x, centroids, metric, metric_arg)]
+        from duckdb_faiss_ext_spark.metrics import nearest_centroid
+
+        x = x - centroids[nearest_centroid(x, centroids, metric, metric_arg)]
     x = x.reshape(-1, m, sub)
     return np.stack(
         [_kmeans_np(x[:, j, :], k, seed=seed + j) for j in range(m)]

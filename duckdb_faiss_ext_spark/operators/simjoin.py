@@ -41,6 +41,7 @@ from duckdb_faiss_ext_spark.metrics import (
     resolve_metric,
     topk_indices,
 )
+from duckdb_faiss_ext_spark.operators.topk import reject_null_elements
 
 __all__ = ["similarity_join", "similarity_join_grouped", "similarity_join_lsh"]
 
@@ -160,7 +161,9 @@ def _pack_blocks(
             if n == 0:
                 continue
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            raw = rb.column(1).flatten().to_numpy(zero_copy_only=False)
+            vals = rb.column(1).flatten()
+            reject_null_elements(vals, f"column {vec_col!r}")
+            raw = vals.to_numpy(zero_copy_only=False)
             dim = len(raw) // n
             eff_rows = rows_for_budget(block_rows, block_bytes, dim, np_t().itemsize)
             if sq8 is not None:

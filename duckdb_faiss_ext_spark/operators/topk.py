@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_faiss_ext_spark.errors import FaissSparkError
 from duckdb_faiss_ext_spark.metrics import (
     is_descending,
     pairwise,
@@ -91,6 +92,48 @@ def _block_rows_for(dim: int, itemsize: int) -> int:
     return max(1, min(MAX_QUERY_BLOCK, QUERY_BLOCK_BYTES // (dim * itemsize)))
 
 
+def _null_elements_error(what: str, count: int) -> FaissSparkError:
+    return FaissSparkError(
+        f"{what}: {count} NULL element(s) inside vectors; every vector "
+        "element must be non-NULL"
+    )
+
+
+def reject_null_elements(values, what: str) -> None:
+    """Fail a vector batch whose flattened Arrow values hold a NULL element.
+    ``to_numpy`` would turn it into NaN, and a NaN-scored row still gets a
+    cluster id or a neighbor list."""
+    if values.null_count:
+        raise _null_elements_error(what, values.null_count)
+
+
+def vector_matrix(col, dim: int, what: str, dtype=np.float32) -> np.ndarray:
+    """(n, dim) matrix of one Arrow ``list<float>`` batch column: the
+    flattened child buffer reshapes without a per-row Python object.  A
+    NULL element raises (``reject_null_elements``); NULL or ragged rows take
+    a per-row path that fails loudly.  ``dtype=None`` keeps the stored
+    element type (SQ8 codes)."""
+    vals = col.flatten()
+    reject_null_elements(vals, what)
+    flat = vals.to_numpy(zero_copy_only=False)
+    n = len(col)
+    if len(flat) == n * dim and not col.null_count:
+        return np.ascontiguousarray(flat.reshape(n, dim), dtype=dtype)
+    return np.asarray([np.asarray(v, dtype=dtype) for v in col.to_pylist()])
+
+
+def _row_block(vecs: list, dtype) -> np.ndarray:
+    """Driver-side twin of ``vector_matrix`` for collected Row lists: a NULL
+    element would read as NaN, so the element scan runs only when a NaN
+    shows up."""
+    x = np.asarray(vecs, dtype=dtype)
+    if np.isnan(x).any():
+        nulls = sum(v is None for r in vecs if r is not None for v in r)
+        if nulls:
+            raise _null_elements_error("query side", nulls)
+    return x
+
+
 def iter_query_blocks(
     queries_df: DataFrame,
     qid_col: str,
@@ -133,10 +176,10 @@ def iter_query_blocks(
             qids.append(row[0])
             vecs.append(row[1])
             if len(qids) >= eff_rows:
-                yield np.asarray(qids, dtype=np.int64), np.asarray(vecs, dtype=dtype)
+                yield np.asarray(qids, dtype=np.int64), _row_block(vecs, dtype)
                 qids, vecs = [], []
         if qids:
-            yield np.asarray(qids, dtype=np.int64), np.asarray(vecs, dtype=dtype)
+            yield np.asarray(qids, dtype=np.int64), _row_block(vecs, dtype)
         return
 
     import pyarrow as pa
@@ -190,8 +233,7 @@ def iter_query_blocks(
             dim_seen = int(lens[0])
             eff_rows = _block_rows_for(dim_seen, np_t.itemsize)
             ids = qcol.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vcol.flatten().to_numpy(zero_copy_only=False)
-            x = np.ascontiguousarray(flat.reshape(n, dim_seen), dtype=np_t)
+            x = vector_matrix(vcol, dim_seen, "query side", np_t)
             lo = 0
             while lo < n:
                 take = min(n - lo, eff_rows - held)

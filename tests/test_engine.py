@@ -178,6 +178,26 @@ def test_ivf_add_rejects_null_vector_elements(engine, spark):
     assert engine.registry.get("nullel_trained").count == 0
 
 
+def test_null_query_element_raises_on_every_route(engine, spark):
+    """A NULL element in a query vector must fail the search on the driver
+    route and on both bulk routes (grouped join below nlist, BNL join at
+    nprobe = nlist), never give no rows or NaN distances."""
+    clean = gen_vectors(400, 4)
+    engine.create("nullq", 4, "IDMap,IVF4")
+    engine.add("nullq", _vec_df(spark, clean))
+    q = spark.createDataFrame(
+        [(0, [1.0, None, 2.0, 3.0]), (1, [float(v) for v in clean[0]])],
+        "qid bigint, vector array<float>",
+    )
+    for nprobe in (2, 4):
+        for bulk in (0, 1):
+            with pytest.raises(Exception, match="NULL element"):
+                engine.search_flat(
+                    "nullq", 3, q,
+                    params={"nprobe": nprobe, "bulk_queries": bulk},
+                ).collect()
+
+
 def test_train_too_few_points(engine, spark, vectors8):
     # faiss_extension.cpp:400-404
     engine.create("ivfbig", 8, "IVF64,Flat")

@@ -28,6 +28,19 @@ def _vec_df(spark, x):
     )
 
 
+def _ip_collapse_blobs():
+    """32 tight blobs whose centres' norms span 5..200: an L2 fit recovers
+    them one per centroid (an even L2 histogram), while the IP assignment
+    piles them onto the largest-norm centroids — only the index-metric
+    histogram is degenerate."""
+    rng = np.random.default_rng(3)
+    dirs = rng.standard_normal((32, 8))
+    dirs /= np.linalg.norm(dirs, axis=1, keepdims=True)
+    centres = dirs * np.exp(rng.uniform(np.log(5.0), np.log(200.0), 32))[:, None]
+    y = centres[np.repeat(np.arange(32), 64)] + 0.5 * rng.standard_normal((2048, 8))
+    return y.astype(np.float32)
+
+
 def test_warns_on_unnormalized_ip(spark, eng):
     """The SCALE.md r6 hazard in miniature: IP + high nlist + wildly varying
     norms -> most points assign to the few largest-norm centroids."""
@@ -37,6 +50,10 @@ def test_warns_on_unnormalized_ip(spark, eng):
     eng.create("skew", 8, "IDMap,IVF32,Flat", metric_type="INNER_PRODUCT")
     with pytest.warns(UserWarning, match="degenerate coarse assignment"):
         eng.add("skew", _vec_df(spark, x))
+    # the driver fit labels by L2; the warning must read the IP relabel
+    eng.create("skew_blobs", 8, "IDMap,IVF32,Flat", metric_type="INNER_PRODUCT")
+    with pytest.warns(UserWarning, match="degenerate coarse assignment"):
+        eng.add("skew_blobs", _vec_df(spark, _ip_collapse_blobs()))
 
 
 def test_silent_on_normalized_testdata(spark, eng):
@@ -169,3 +186,46 @@ def test_degenerate_warning_hint_is_metric_conditional(spark, eng):
     eng.create("ipskew", 8, "IDMap,IVF32,Flat", metric_type="INNER_PRODUCT")
     with pytest.warns(UserWarning, match="UNNORMALIZED"):
         eng.add("ipskew", _vec_df(spark, y))
+
+
+def test_mllib_tier_rebalances_and_warns(spark, eng):
+    """Samples above DRIVER_FIT_BYTES fit with MLlib KMeans; with the
+    ceiling at 0 every fit takes that tier.  Its L2 histogram comes from
+    MLlib's clusterSizes and its rebalance collect from ``_assign_only``:
+    the blob corpus must still get its oversize cluster split.  Its non-L2
+    histogram comes from ``_assign_only`` too: an IP corpus that is even
+    under L2 but collapses under IP must still warn."""
+    eng.DRIVER_FIT_BYTES = 0
+    rng = np.random.default_rng(5)
+    blob = 0.01 * rng.standard_normal((1700, 8)).astype(np.float32)
+    spread = rng.standard_normal((300, 8)).astype(np.float32) + 5.0
+    x = np.vstack([blob, spread])
+    eng.create("mlreb", 8, "IDMap,IVF16,Flat", metric_type="L2")
+    eng.add("mlreb", _vec_df(spark, x))
+    idx = eng.registry.get("mlreb")
+    assert idx.centroids.shape == (16, 8)
+    sizes = idx.data.groupBy("cluster_id").count().toPandas()["count"].to_numpy()
+    assert sizes.max() <= 4 * (len(x) / 16) * 1.5
+
+    eng.create("mlip", 8, "IDMap,IVF32,Flat", metric_type="INNER_PRODUCT")
+    with pytest.warns(UserWarning, match="degenerate coarse assignment"):
+        eng.add("mlip", _vec_df(spark, _ip_collapse_blobs()))
+
+
+def test_driver_fit_recovers_planted_centres(spark, eng):
+    """nlist equal to the number of planted, well-separated centres: the
+    driver fit puts one centroid on each, and every row lands in its own
+    centre's cluster."""
+    rng = np.random.default_rng(17)
+    centres = 20.0 * rng.standard_normal((12, 8)).astype(np.float32)
+    own = np.repeat(np.arange(12), 150)
+    x = centres[own] + 0.1 * rng.standard_normal((len(own), 8)).astype(np.float32)
+    eng.create("planted", 8, "IDMap,IVF12,Flat", metric_type="L2")
+    eng.add("planted", _vec_df(spark, x))
+    idx = eng.registry.get("planted")
+    d = ((centres[:, None, :] - idx.centroids[None, :, :]) ** 2).sum(-1)
+    nearest = d.argmin(1)
+    assert sorted(nearest.tolist()) == list(range(12))  # one centroid each
+    assert np.sqrt(d.min(1)).max() < 0.1
+    got = idx.data.select("label", "cluster_id").toPandas()
+    assert (got["cluster_id"].to_numpy() == nearest[own[got["label"].to_numpy()]]).all()

@@ -25,7 +25,7 @@ corp = synth_clusterable(spark, N, DIM, n_clusters=1024).persist()
 corp.count()
 
 phases = {}
-for meth in ("_fit_kmeans_medium", "_train_kmeans", "_rebalance_oversize_clusters",
+for meth in ("_fit_kmeans_driver", "_train_kmeans", "_rebalance_oversize_clusters",
              "_assign_only"):
     if not hasattr(FaissSparkEngine, meth):
         continue

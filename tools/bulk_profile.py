@@ -71,8 +71,7 @@ from duckdb_faiss_ext_spark.operators.simjoin import (
 
 corpus = idx.data
 q = qbulk.select(F.col("qid"), F.col("vector"))
-probes_udf = eng._probe_clusters_udf(idx, NPROBE)
-ql = q.withColumn("cluster_id", F.explode(probes_udf(F.col("vector"))))
+ql = eng._probe_rows(idx, q, NPROBE)
 
 t("probe_explode_count", lambda: ql.count(), n=2)
 

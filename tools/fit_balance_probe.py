@@ -1,7 +1,6 @@
-"""r15 probe: sample-level balance of the medium-fit init (k-means||
-vs the r14 random-subset init it replaces).
+"""r15 probe: sample-level balance of the driver fit's k-means|| init.
 
-Calls ``_fit_kmeans_medium`` directly on a clusterable sample shaped like
+Calls ``_fit_kmeans_driver`` directly on a clusterable sample shaped like
 the bench build's training sample (524k x 64 after the ppc cap, 1024
 natural clusters, nlist 2048) and reports the fit-label histogram's
 max-share plus wall time.  Balance is load-independent (deterministic
@@ -22,6 +21,7 @@ import numpy as np
 
 from _synth import synth_clusterable
 from duckdb_faiss_ext_spark.engine import FaissSparkEngine
+from duckdb_faiss_ext_spark.operators.topk import vector_matrix
 from duckdb_faiss_ext_spark.session import get_spark
 
 
@@ -31,12 +31,11 @@ def main():
     dim = 64
     spark = get_spark("fit_balance_probe")
     eng = FaissSparkEngine(spark)
-    sample = synth_clusterable(spark, n, dim, n_clusters=1024).select(
-        "vector"
-    ).persist()
-    sample.count()
+    sample = synth_clusterable(spark, n, dim, n_clusters=1024).select("vector")
+    vcol = sample.toArrow().column("vector").combine_chunks()
+    x = vector_matrix(vcol, dim, "sample")
     t0 = time.perf_counter()
-    cents, counts, x, labels = eng._fit_kmeans_medium(sample, nlist, 20)
+    cents, counts, labels = eng._fit_kmeans_driver(x, nlist, 20)
     t = time.perf_counter() - t0
     even = counts.sum() / nlist
     hist = np.bincount(labels, minlength=nlist)

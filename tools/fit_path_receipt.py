@@ -1,9 +1,9 @@
 """Receipt (VERDICT r14 task 4): a fit whose capped sample exceeds
-MEDIUM_FIT_BYTES must take the MLlib distributed path END-TO-END — train,
-add, search — with the driver-side medium fit never invoked.
+DRIVER_FIT_BYTES must take the MLlib distributed path END-TO-END — train,
+add, search — with the driver-side fit never invoked.
 
 Shape: dim=1536, nlist=64, train_points_per_centroid=2048 ->
-cap = 131,072 rows x 1536 x 4 B = 805 MB > MEDIUM_FIT_BYTES (600 MB).
+cap = 131,072 rows x 1536 x 4 B = 805 MB > DRIVER_FIT_BYTES (600 MB).
 The k is small so the MLlib fit stays tractable locally; what matters is
 the PATH, which gates on sample bytes only (engine.py _train_kmeans).
 
@@ -32,25 +32,17 @@ spark = get_spark("fit_path_receipt")
 spark.sparkContext.setLogLevel("ERROR")
 eng = FaissSparkEngine(spark)
 
-# instrument BOTH fit kernels: the receipt must show medium NOT called and
-# the MLlib branch's histogram path running
-calls = {"medium": 0, "small": 0}
-_orig_med = FaissSparkEngine._fit_kmeans_medium
-_orig_small = FaissSparkEngine._fit_kmeans_local
+# instrument the driver fit: the receipt must show it NOT called
+calls = {"driver": 0}
+_orig_driver = FaissSparkEngine._fit_kmeans_driver
 
 
-def _med(self, *a, **k):
-    calls["medium"] += 1
-    return _orig_med(self, *a, **k)
+def _driver(self, *a, **k):
+    calls["driver"] += 1
+    return _orig_driver(self, *a, **k)
 
 
-def _small(self, *a, **k):
-    calls["small"] += 1
-    return _orig_small(self, *a, **k)
-
-
-FaissSparkEngine._fit_kmeans_medium = _med
-FaissSparkEngine._fit_kmeans_local = _small
+FaissSparkEngine._fit_kmeans_driver = _driver
 
 corp = synth_clusterable(spark, N, DIM, n_clusters=NLIST, id_col="label").persist()
 n = corp.count()
@@ -58,9 +50,9 @@ ppc = 2048
 cap = ppc * NLIST
 sample_bytes = min(n, cap) * DIM * 4
 print(f"rows={n} dim={DIM} nlist={NLIST} ppc={ppc} cap={cap} "
-      f"sample_bytes={sample_bytes/1e6:.0f}MB MEDIUM_FIT_BYTES="
-      f"{FaissSparkEngine.MEDIUM_FIT_BYTES/1e6:.0f}MB "
-      f"over_threshold={sample_bytes > FaissSparkEngine.MEDIUM_FIT_BYTES}")
+      f"sample_bytes={sample_bytes/1e6:.0f}MB DRIVER_FIT_BYTES="
+      f"{FaissSparkEngine.DRIVER_FIT_BYTES/1e6:.0f}MB "
+      f"over_threshold={sample_bytes > FaissSparkEngine.DRIVER_FIT_BYTES}")
 
 t0 = time.perf_counter()
 eng.create(
@@ -75,10 +67,8 @@ q = corp.limit(8).select(F.col("label").alias("qid"), F.col("vector"))
 res = eng.search("fit_receipt", 5, q, params={"nprobe": NLIST}).collect()
 selfhit = all(r.result[0].label == r.qid for r in res)
 print(f"search rows={len(res)} selfhit_rank0={selfhit}")
-print(f"medium_fit_calls={calls['medium']} small_fit_calls={calls['small']}")
-verdict = (
-    calls["medium"] == 0 and calls["small"] == 0 and selfhit and len(res) == 8
-)
+print(f"driver_fit_calls={calls['driver']}")
+verdict = calls["driver"] == 0 and selfhit and len(res) == 8
 print("RECEIPT:", "OK — MLlib path end-to-end" if verdict else "FAIL")
 spark.stop()
 sys.exit(0 if verdict else 1)

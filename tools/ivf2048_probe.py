@@ -149,8 +149,7 @@ def main() -> None:
         hits = {(r["qid"], r["label"]) for r in run().collect()}
         # scanned fraction: union of the batch's probed clusters (the JVM
         # IN-filter's reach) AND the per-query average (the kernel's reach)
-        probe_fn = eng._probe_ids_fn(idx, nprobe)
-        probes = probe_fn(np.arange(len(qvec)), qvec)
+        probes = eng._probe_ids(idx, qvec, nprobe)
         union_rows = sum(hist.get(int(c), 0) for c in np.unique(probes))
         perq_rows = float(
             np.mean(
