@@ -58,6 +58,7 @@ from duckdb_faiss_ext_spark.registry import (
     FaissIndex,
     IndexRegistry,
 )
+from duckdb_faiss_ext_spark.session import local_frame
 
 
 logger = logging.getLogger(__name__)
@@ -292,7 +293,7 @@ class FaissSparkEngine:
             ).otherwise(mapped)
             out = df.select((guarded + local).alias("label"), F.col("vector"))
             return out, base - offset
-        off_df = self.spark.createDataFrame(pairs, "_pid bigint, _base bigint")
+        off_df = local_frame(self.spark, "_pid bigint, _base bigint", pairs)
         # LEFT join + loud failure on unmatched partition ids: the inner
         # join this replaces silently DROPPED rows whose pid the offsets
         # job never saw (the same contract violation the literal-map path
@@ -357,6 +358,8 @@ class FaissSparkEngine:
         self._latch_label_mode(idx, labeled)
         cache_parent = None
         pre_count = None
+        # exact row count of the frame the cluster layout sees, when known
+        layout_rows = None
         drop_parent = True
         layout_parent = None
         if not labeled:
@@ -374,6 +377,7 @@ class FaissSparkEngine:
                 vecs, pre_count = self._with_auto_ids(
                     vecs, idx.count, validate_dim=idx.dim if validate else None
                 )
+                layout_rows = pre_count
             rebuild = False
             transformed = False
             if idx.needs_training:
@@ -390,6 +394,8 @@ class FaissSparkEngine:
                     .select("label", "vector")
                     .unionByName(vecs)
                 )
+                if layout_rows is not None and idx.data is not None:
+                    layout_rows += idx.count
                 self._train(idx, combined.select("vector"))
                 vecs = combined
                 rebuild = True
@@ -420,27 +426,34 @@ class FaissSparkEngine:
                 # it ON TOP of the range shuffle's files roughly doubles the
                 # transient local-disk footprint and risks re-introducing
                 # the r13 ENOSPC the encode-before-shuffle fix addressed.
-                # Above a size threshold (Catalyst plan-stat estimate;
-                # params 'layout_cache_max_bytes') skip the cache and accept
-                # the double lineage pass — at that scale the second pass is
-                # cheaper than running out of disk.  Estimates >= 2^62 mean
-                # "unknown" (Catalyst's defaultSizeInBytes sentinel) and keep
-                # the cache.
-                try:
-                    est = int(
-                        frame._jdf.queryExecution()
-                        .optimizedPlan()
-                        .stats()
-                        .sizeInBytes()
-                    )
-                except Exception:
-                    est = -1
+                # Above a size threshold (params 'layout_cache_max_bytes')
+                # skip the cache and accept the double lineage pass — at
+                # that scale the second pass is cheaper than running out of
+                # disk.  The size is exact (rows x row bytes) when the
+                # engine counted the rows (unlabeled adds); otherwise it is
+                # the Catalyst plan-stat estimate, where >= 2^62 means
+                # "unknown" (Catalyst's defaultSizeInBytes sentinel) and
+                # keeps the cache.
+                if layout_rows is not None:
+                    size = layout_rows * self._layout_row_bytes(idx)
+                else:
+                    try:
+                        size = int(
+                            frame._jdf.queryExecution()
+                            .optimizedPlan()
+                            .stats()
+                            .sizeInBytes()
+                        )
+                    except Exception:
+                        size = None
+                    if size is not None and size >= 2**62:
+                        size = None
                 cap = float(
                     idx.params.get(
                         "layout_cache_max_bytes", self.LAYOUT_CACHE_MAX_BYTES
                     )
                 )
-                if 0 <= est < 2**62 and est > cap:
+                if size is not None and size > cap:
                     return self._cluster_layout(frame)
                 layout_parent = frame.persist()
                 return self._cluster_layout(layout_parent)
@@ -1533,10 +1546,23 @@ class FaissSparkEngine:
 
     # layout-cache ceiling (ADVICE r14): the add-path persist that lets the
     # range shuffle's bounds sampling reuse the assigned/encoded frame is
-    # skipped when the frame's plan-stat estimate exceeds this — the double
-    # lineage pass is cheaper than doubling transient disk at 50 GB+ adds.
-    # Local/bench adds (<= a few GB) keep the r14 single-pass behavior.
+    # skipped when the frame's size exceeds this — the double lineage pass
+    # is cheaper than doubling transient disk at 50 GB+ adds.  Local/bench
+    # adds (<= a few GB) keep the r14 single-pass behavior.
     LAYOUT_CACHE_MAX_BYTES = 16e9
+
+    @staticmethod
+    def _layout_row_bytes(idx: FaissIndex) -> int:
+        """Bytes of one row of the frame the cluster layout shuffles: label
+        (bigint) + cluster_id (int) + the stored vector — m smallint PQ
+        codes, dim tinyint SQ8 codes or dim float32 values."""
+        if idx.codebooks is not None:
+            payload = 2 * int(idx.codebooks.shape[0])
+        elif idx.sq_vdiff is not None:
+            payload = idx.dim
+        else:
+            payload = 4 * idx.dim
+        return 8 + 4 + payload
 
     # driver-side fit ceiling: the capped sample's float32 matrix must fit
     # comfortably on the driver (600 MB ~ 2.4M rows at dim 64, 100k rows at
@@ -3030,8 +3056,8 @@ class FaissSparkEngine:
                     )
                 )
         if not partials:
-            return self.spark.createDataFrame(
-                [], "qid bigint, rank int, label bigint, distance float"
+            return local_frame(
+                self.spark, "qid bigint, rank int, label bigint, distance float"
             )
         out = partials[0]
         for p in partials[1:]:
@@ -3151,8 +3177,8 @@ class FaissSparkEngine:
                     )
                 )
         if not partials:
-            return self.spark.createDataFrame(
-                [], "qid bigint, rank int, label bigint, distance float"
+            return local_frame(
+                self.spark, "qid bigint, rank int, label bigint, distance float"
             )
         out = partials[0]
         for p in partials[1:]:
@@ -3206,8 +3232,11 @@ class FaissSparkEngine:
         stored layout, pulling parquet/disk slices into the executor cache,
         and (b) runs one tiny k-NN through the real search path so the
         worker-side Python kernels are imported and JIT-warm before the
-        first user query.  Returns the seconds spent (the priced cost of
-        the knob).  Opt-in at build: ``params={'warm_on_build': '1'}``."""
+        first user query.  The query frame is an Arrow table with one row
+        per core (``local_frame``), so the warm passes reach every SQL
+        worker and start no second Python worker pool.  Returns the
+        seconds spent (the priced cost of the knob).  Opt-in at build:
+        ``params={'warm_on_build': '1'}``."""
         import time as _time
 
         idx = self.registry.get(name)
@@ -3227,8 +3256,14 @@ class FaissSparkEngine:
             # PQ storage keeps only codes; any in-range query works for a JIT
             # pass — the ADC path decodes against the codebooks regardless
             vec = [1.0] * idx.dim
-        q = self.spark.createDataFrame(
-            [(0, vec)], "qid bigint, vector array<float>"
+        # one copy of the vector per core, distinct qids: the Arrow-built
+        # LocalRelation has one partition per row, so the bulk pass below
+        # runs its kernel in every SQL worker, not just one
+        cores = max(self.spark.sparkContext.defaultParallelism, 1)
+        q = local_frame(
+            self.spark,
+            "qid bigint, vector array<float>",
+            [(i, vec) for i in range(cores)],
         )
         # FULL-probe: an nprobe=1 warm query prunes to 1-2 partitions, so
         # 30 of 32 Python workers (and every other partition's Arrow

@@ -63,8 +63,10 @@ from typing import Mapping, Optional, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from duckdb_faiss_ext_spark.functions import text as T
+from duckdb_faiss_ext_spark.session import local_frame
 
 __all__ = [
     "line_stats",
@@ -980,14 +982,15 @@ def _source_lookup(
         for src, v in values.items():
             val = F.when(F.col(source_col) == src, F.lit(float(v))).otherwise(val)
         return df, val
-    spark = df.sparkSession
-    src_type = [
-        f.dataType.simpleString() for f in df.schema.fields
-        if f.name == source_col
-    ][0]
-    vals_df = spark.createDataFrame(
+    vals_df = local_frame(
+        df.sparkSession,
+        StructType(
+            [
+                StructField(source_col, df.schema[source_col].dataType),
+                StructField("__mix_val", DoubleType()),
+            ]
+        ),
         [(src, float(v)) for src, v in values.items()],
-        f"{source_col} {src_type}, __mix_val double",
     )
     joined = df.join(F.broadcast(vals_df), on=source_col, how="left").fillna(
         {"__mix_val": float(default)}

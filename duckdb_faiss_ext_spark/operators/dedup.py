@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from duckdb_faiss_ext_spark.functions.vector import cosine_batch_udf
+from duckdb_faiss_ext_spark.session import local_frame
 
 WHITESPACE = r"\s+"
 
@@ -146,7 +147,9 @@ def _cap_buckets(
         # broadcast ANTI join against the collected over-cap keys: no second
         # aggregation of the exploded lineage at execution time
         over_df = F.broadcast(
-            exploded.sparkSession.createDataFrame(over_rows, schema=keys)
+            local_frame(
+                exploded.sparkSession, exploded.select(*keys).schema, over_rows
+            )
         )
         return exploded.join(over_df, keys, "left_anti")
     ok = agg.filter(F.col("count") <= max_bucket).select(*keys)
@@ -319,8 +322,10 @@ def minhash_lsh_pairs(
                 # window (ADVICE r13) — a broadcast join, not a second
                 # full-corpus histogram
                 over = F.broadcast(
-                    df.sparkSession.createDataFrame(
-                        over_keys, schema=["band", "bkey"]
+                    local_frame(
+                        df.sparkSession,
+                        exploded_raw.select("band", "bkey").schema,
+                        over_keys,
                     )
                 )
             else:  # >65536 breached buckets: lazy fallback plan
@@ -614,7 +619,7 @@ def _components_driver(spark, edges: DataFrame, stats: dict | None) -> DataFrame
     if len(pdf) == 0:
         if stats is not None:
             stats["rounds"] = 0
-        return spark.createDataFrame([], "id bigint, comp bigint")
+        return local_frame(spark, "id bigint, comp bigint")
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     uniq, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
@@ -635,8 +640,9 @@ def _components_driver(spark, edges: DataFrame, stats: dict | None) -> DataFrame
             break
     if stats is not None:
         stats["rounds"] = rounds
-    out = pd.DataFrame({"id": uniq, "comp": uniq[comp]})
-    return spark.createDataFrame(out, schema="id bigint, comp bigint")
+    return local_frame(
+        spark, "id bigint, comp bigint", columns={"id": uniq, "comp": uniq[comp]}
+    )
 
 
 # directed-edge count below which components run as one driver-side numpy

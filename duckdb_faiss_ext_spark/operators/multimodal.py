@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_faiss_ext_spark.session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -284,4 +286,4 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                 16000 if modality == "audio" else None,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, MEDIA_SCHEMA, rows)

@@ -42,6 +42,7 @@ from duckdb_faiss_ext_spark.metrics import (
     resolve_metric,
     topk_indices,
 )
+from duckdb_faiss_ext_spark.session import local_frame
 
 PARTIAL_SCHEMA = StructType(
     [
@@ -545,10 +546,10 @@ def exact_knn_flat(
                 )
             )
     if not partials:
-        spark = corpus_df.sparkSession
         dist_t = "float" if dtype is np.float32 else "double"
-        return spark.createDataFrame(
-            [], f"qid bigint, rank int, label bigint, distance {dist_t}"
+        return local_frame(
+            corpus_df.sparkSession,
+            f"qid bigint, rank int, label bigint, distance {dist_t}",
         )
     partial = partials[0]
     for p in partials[1:]:

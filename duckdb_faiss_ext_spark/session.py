@@ -14,13 +14,22 @@ more than a small search's kernels.  The package installs a stat-checked
 invalidation in each worker as it is first imported there (``_pyworker``);
 a changed archive is still re-read.  Nothing changes on the driver, and no
 conf is involved.
+
+Every frame the package builds from driver-side data goes through
+``local_frame``: an Arrow table typed from the frame's schema, which Spark
+plans as a ``LocalRelation``.  A Python list (or an empty pandas frame)
+becomes a Python RDD instead, and running it starts PySpark's RDD worker
+pool (a second ``pyspark.daemon`` with one worker per core) beside the SQL
+one; on a 4-core VM that pool held ~300 MB of a ~1.75 GB serving process.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -63,3 +72,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    schema: StructType | str,
+    rows: Iterable[Sequence] = (),
+    columns: Mapping[str, Sequence] | None = None,
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in schema order) or
+    ``columns`` (name -> sequence or numpy array), built as a
+    ``pyarrow.Table`` typed from ``schema`` (a StructType or DDL string).
+
+    The only place the package calls ``createDataFrame``: an Arrow table,
+    empty or not, is planned as a ``LocalRelation`` (one partition per row
+    up to ``defaultParallelism``) that the JVM scans itself, where a list
+    or an empty pandas frame would start the RDD Python worker pool."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    if columns is None:
+        rows = list(rows)
+        data = list(zip(*rows)) if rows else [[] for _ in arrow]
+    else:
+        data = [columns[f.name] for f in struct.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(data, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

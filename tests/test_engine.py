@@ -178,6 +178,40 @@ def test_ivf_add_rejects_null_vector_elements(engine, spark):
     assert engine.registry.get("nullel_trained").count == 0
 
 
+def test_layout_cache_guard_uses_exact_size_on_unlabeled_adds(
+    engine, spark, monkeypatch
+):
+    """An unlabeled add counts its rows in the auto-id offsets job, so the
+    layout-cache guard compares rows x row bytes with the cap, not the
+    Catalyst size estimate (which reads this frame at ~1.8x its size)."""
+    n, dim = 2000, 16
+    exact = n * (8 + 4 + 4 * dim)  # label, cluster_id, float32 vector
+    layouts = []
+    stock = FaissSparkEngine._cluster_layout
+
+    def spy(frame):
+        est = int(frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        layouts.append((frame.is_cached, est))
+        return stock(frame)
+
+    monkeypatch.setattr(FaissSparkEngine, "_cluster_layout", staticmethod(spy))
+    data = _vec_df(spark, gen_vectors(n, dim))
+    for name, cap, cached in (
+        ("layout_under", exact + 1000, True),
+        ("layout_over", exact - 1000, False),
+    ):
+        engine.create(
+            name, dim, "IDMap,IVF4", params={"layout_cache_max_bytes": str(cap)}
+        )
+        engine.add(name, data)
+        assert engine.registry.get(name).count == n
+        [(is_cached, est)] = layouts
+        layouts.clear()
+        # the estimate alone would skip the cache in both cases
+        assert est > exact + 1000, est
+        assert is_cached is cached, (name, cap, est)
+
+
 def test_null_query_element_raises_on_every_route(engine, spark):
     """A NULL element in a query vector must fail the search on the driver
     route and on both bulk routes (grouped join below nlist, BNL join at
