@@ -154,9 +154,13 @@ def _sortable_u32(v32: np.ndarray) -> np.ndarray:
     return np.where(u >> 31 == 1, ~u, u | np.uint32(0x80000000))
 
 
-def topk_indices(scores: np.ndarray, k: int, descending: bool) -> tuple[np.ndarray, np.ndarray]:
+def topk_indices(
+    scores: np.ndarray, k: int, descending: bool, order: np.ndarray = None
+) -> tuple[np.ndarray, np.ndarray]:
     """Per-row top-k (indices, scores), ties broken by smaller index —
     matching FAISS's internal-id tie-break (SURVEY.md §7 known-hard #5).
+    ``order`` (a column permutation) breaks ties by position in it instead,
+    e.g. ``argsort(labels)`` for a label tie-break over unsorted columns.
 
     float32 fast path: pack (sortable-score, index) into one uint64 key, then
     argpartition + small sort — O(n + k log k) per row with the EXACT same
@@ -183,15 +187,19 @@ def topk_indices(scores: np.ndarray, k: int, descending: bool) -> tuple[np.ndarr
         key32 = _sortable_u32(s)
         if descending:
             key32 = ~key32
-        key = (key32.astype(np.uint64) << np.uint64(32)) | np.arange(
-            n, dtype=np.uint64
-        )[None, :]
+        tie = np.arange(n, dtype=np.uint64)
+        if order is not None:
+            tie[order] = tie.copy()
+        key = (key32.astype(np.uint64) << np.uint64(32)) | tie[None, :]
         part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
         order = np.argsort(key[rows, part], axis=1)
         idx = part[rows, order]
         return idx, scores[rows, idx]
     keys = -cmp if descending else cmp
-    idx = np.argsort(keys, axis=1, kind="stable")[:, :kk]
+    if order is None:
+        idx = np.argsort(keys, axis=1, kind="stable")[:, :kk]
+    else:
+        idx = order[np.argsort(keys[:, order], axis=1, kind="stable")[:, :kk]]
     return idx, scores[rows, idx]
 
 

@@ -29,6 +29,8 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from duckdb_faiss_ext_spark.operators.topk import vector_matrix
+
 __all__ = [
     "pq_train",
     "pq_encode",
@@ -88,8 +90,8 @@ def pq_train(
     sub = dim // m
     n = df.count()
     frac = min(1.0, sample * 1.2 / max(n, 1))
-    pdf = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample).toPandas()
-    x = np.asarray(list(pdf[vec_col]), dtype=np.float32)
+    tbl = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample).toArrow()
+    x = vector_matrix(tbl.column(vec_col).combine_chunks(), dim, "PQ training sample")
     if centroids is not None:
         from duckdb_faiss_ext_spark.metrics import nearest_centroid
 
@@ -193,9 +195,10 @@ def pq_search(
 
     DataFrame wrapper over :func:`pq_search_arrays` for a known-small query
     side; the engine's factory path streams bounded query blocks instead."""
-    qpdf = queries.select(qid_col, q_vec_col).toPandas()
-    qids = qpdf[qid_col].to_numpy(dtype=np.int64)
-    q = np.asarray(list(qpdf[q_vec_col]), dtype=np.float32)
+    tbl = queries.select(qid_col, q_vec_col).toArrow()
+    qids = tbl.column(qid_col).to_numpy().astype(np.int64)
+    dim = codebooks.shape[0] * codebooks.shape[2]
+    q = vector_matrix(tbl.column(q_vec_col).combine_chunks(), dim, "query side")
     return pq_search_arrays(codes_df, qids, q, codebooks, k, metric=metric)
 
 

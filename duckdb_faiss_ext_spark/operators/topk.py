@@ -289,17 +289,6 @@ def iter_query_blocks(
         yield np.concatenate(acc_ids), np.concatenate(acc_vecs)
 
 
-def collect_queries(
-    queries_df: DataFrame, qid_col: str, vec_col: str, dtype: type = np.float32
-) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side materialization of a KNOWN-small query batch (tests and
-    single-block callers).  Production paths stream via iter_query_blocks."""
-    pdf = queries_df.select(qid_col, vec_col).toPandas()
-    qids = pdf[qid_col].to_numpy(dtype=np.int64)
-    q = np.asarray(list(pdf[vec_col]), dtype=dtype)
-    return qids, q
-
-
 def partial_topk(
     corpus_df: DataFrame,
     qids: np.ndarray,
@@ -355,15 +344,14 @@ def partial_topk(
             n = rb.num_rows
             if n == 0:
                 continue
-            vec_arr = rb.column(1)
-            flat = vec_arr.flatten()
-            values = flat.to_numpy(zero_copy_only=False)
-            if len(values) == n * dim:
-                raw = values.reshape(n, dim)
-            else:  # ragged rows (bad data) — fall back to per-row conversion
-                raw = np.asarray(
-                    [np.asarray(v, dtype=dtype) for v in vec_arr.to_pylist()]
-                )
+            # a NULL element raises here, as on the bulk route's
+            # _pack_blocks; SQ8 keeps its int8 codes
+            raw = vector_matrix(
+                rb.column(1),
+                dim,
+                f"column {vec_col!r}",
+                None if sq8 is not None else dtype,
+            )
             # resolve_metric, not raw string compare: a None/aliased metric
             # that resolves to L2 must take the same 4.6-10.3x decode-free
             # kernel simjoin.py:264 gates on (ADVICE r12 consistency fix)
@@ -379,7 +367,7 @@ def partial_topk(
                     sq8_rownorm,
                 )
 
-                x = np.ascontiguousarray(raw)  # stored int8 codes
+                x = raw  # stored int8 codes
                 rnorm = sq8_rownorm(x, sq8[0], sq8[1])
             elif sq8 is not None:
                 from duckdb_faiss_ext_spark.functions.quantize import (
@@ -388,7 +376,7 @@ def partial_topk(
 
                 x = sq8_decode_np(raw, sq8[0], sq8[1], dtype)
             else:
-                x = np.ascontiguousarray(raw, dtype=dtype)
+                x = raw
 
             def score_rows(qsub, rows=None):
                 if decode_free:
@@ -428,8 +416,9 @@ def partial_topk(
                     # ran at union coverage (73-98%) even though each query
                     # probed 5% of rows (SCALE.md r6 point 2 / VERDICT r6
                     # task 5).  The scatter writes are ~1/dim of the saved
-                    # MACs; cluster runs are contiguous after the engine's
-                    # repartitionByRange so the argsort is near-free.
+                    # MACs; each partition holds a contiguous run of
+                    # cluster ids after the engine's histogram layout
+                    # (_cluster_layout), so the argsort is cheap.
                     scores = np.full((len(q_), n), fill, dtype=dtype)
                     order = np.argsort(clusters, kind="stable")
                     sc = clusters[order]
@@ -444,7 +433,12 @@ def partial_topk(
                         scores[np.ix_(qsel, rows)] = score_rows(q_[qsel], rows)
             else:
                 scores = score_rows(q_)
-            idx, sc = topk_indices(scores, k, desc)
+            # a tie at the k boundary keeps the smaller label, as merge_topk
+            # ranks ties — not the row the physical layout put first
+            tie_order = None
+            if (labels[1:] < labels[:-1]).any():
+                tie_order = np.argsort(labels, kind="stable")
+            idx, sc = topk_indices(scores, k, desc, tie_order)
             nq, kk = idx.shape
             out_q = np.repeat(qids_, kk)
             out_l = labels[idx.ravel()]

@@ -56,6 +56,10 @@ class FaissIndex:
     # None until the first assigned add; reset by retrain, refreshed to
     # ground truth by every corpus-rebalance pass.
     cluster_counts: Optional[np.ndarray] = None
+    # per-cluster histogram of the last coarse-quantizer fit's training
+    # sample: the cluster layout of the first add after a fit (build, or
+    # manual_train then add) sizes its partition slices by it
+    train_counts: Optional[np.ndarray] = None
     skew_warned: bool = False  # one warning per drift crossing
     # retry latch for auto-rebalance-on-append: corpus size at the last
     # pass that could NOT restore the cap; no retry until +25% growth

@@ -178,38 +178,40 @@ def test_ivf_add_rejects_null_vector_elements(engine, spark):
     assert engine.registry.get("nullel_trained").count == 0
 
 
-def test_layout_cache_guard_uses_exact_size_on_unlabeled_adds(
-    engine, spark, monkeypatch
-):
-    """An unlabeled add counts its rows in the auto-id offsets job, so the
-    layout-cache guard compares rows x row bytes with the cap, not the
-    Catalyst size estimate (which reads this frame at ~1.8x its size)."""
-    n, dim = 2000, 16
-    exact = n * (8 + 4 + 4 * dim)  # label, cluster_id, float32 vector
-    layouts = []
-    stock = FaissSparkEngine._cluster_layout
+def test_null_corpus_element_raises_on_every_route(engine, spark):
+    """A Flat add stores a row with a NULL element (only ``size()`` is
+    validated); a search must then fail on the driver route as it does on
+    the bulk route, not drop the row as a NaN score."""
+    x = gen_vectors(6, 4)
+    rows = [(i, [float(v) for v in r]) for i, r in enumerate(x)]
+    rows.append((6, [0.0, None, 0.0, 0.0]))
+    engine.create("nullc", 4, "IDMap,Flat")
+    engine.add("nullc", spark.createDataFrame(rows, "label bigint, vector array<float>"))
+    assert engine.registry.get("nullc").count == 7
+    q = _query_df(spark, x[:2])
+    for bulk in (0, 1):
+        with pytest.raises(Exception, match="NULL element"):
+            engine.search_flat(
+                "nullc", 3, q, params={"bulk_queries": bulk}
+            ).collect()
 
-    def spy(frame):
-        est = int(frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        layouts.append((frame.is_cached, est))
-        return stock(frame)
 
-    monkeypatch.setattr(FaissSparkEngine, "_cluster_layout", staticmethod(spy))
-    data = _vec_df(spark, gen_vectors(n, dim))
-    for name, cap, cached in (
-        ("layout_under", exact + 1000, True),
-        ("layout_over", exact - 1000, False),
-    ):
-        engine.create(
-            name, dim, "IDMap,IVF4", params={"layout_cache_max_bytes": str(cap)}
-        )
-        engine.add(name, data)
-        assert engine.registry.get(name).count == n
-        [(is_cached, est)] = layouts
-        layouts.clear()
-        # the estimate alone would skip the cache in both cases
-        assert est > exact + 1000, est
-        assert is_cached is cached, (name, cap, est)
+def test_exact_ties_keep_smaller_label_whatever_the_row_order(engine, spark):
+    """Rows stored in descending label order with identical vectors: the
+    driver route's top-k keeps the smaller labels, the order merge_topk
+    ranks ties in, not the rows the layout happened to put first."""
+    x = gen_vectors(8, 4)
+    rows = [(int(lab), [float(v) for v in x[0]]) for lab in (40, 30, 20, 10)]
+    rows += [(int(100 + i), [float(v) for v in x[i]]) for i in range(1, 8)]
+    engine.create("ties", 4, "IDMap,Flat", metric_type="L2")
+    engine.add(
+        "ties",
+        spark.createDataFrame(rows, "label bigint, vector array<float>").coalesce(1),
+    )
+    q = _query_df(spark, x[:1])
+    for k in (1, 2):
+        got = engine.search_flat("ties", k, q, params={"bulk_queries": 0}).collect()
+        assert sorted(r["label"] for r in got) == [10, 20][:k]
 
 
 def test_null_query_element_raises_on_every_route(engine, spark):
