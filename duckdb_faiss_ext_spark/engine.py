@@ -64,6 +64,28 @@ from duckdb_faiss_ext_spark.session import local_frame
 logger = logging.getLogger(__name__)
 
 
+def _bad_elements():
+    """Per-row count of NULL or NaN elements of the ``vector`` column: either
+    one would score as NaN, and a NaN row still gets a cluster id, codes and
+    graph edges."""
+    return F.size(F.filter("vector", lambda v: v.isNull() | F.isnan(v)))
+
+
+def _label_unit(*salt):
+    """A uniform [0, 1) draw from a hash of ``label`` (and ``salt``): it
+    depends on the row's label only, never on its partition or position."""
+    return F.xxhash64("label", *salt).bitwiseAND((1 << 52) - 1).cast(
+        "double"
+    ) / float(1 << 52)
+
+
+def _bad_elements_error(count: int) -> FaissSparkError:
+    return FaissSparkError(
+        f"add: {count} NULL element(s) or NaN(s) inside a vector; every "
+        "vector element must be a non-NULL number"
+    )
+
+
 class FaissSparkEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -210,14 +232,18 @@ class FaissSparkEngine:
             raise LabelModeMismatch(idx.name, labeled)
 
     def _validate_dim(self, idx: FaissIndex, df: DataFrame) -> None:
+        """The ingest check: the first row whose size is not the index dim
+        or that holds a NULL or NaN element fails the add."""
         bad = (
-            df.select(F.size("vector").alias("n"))
-            .filter(F.col("n") != idx.dim)
+            df.select(F.size("vector").alias("n"), _bad_elements().alias("nan"))
+            .filter((F.col("n") != idx.dim) | (F.col("nan") > 0))
             .limit(1)
             .collect()
         )
-        if bad:
+        if bad and bad[0]["n"] != idx.dim:
             raise DimensionMismatch(idx.dim, bad[0]["n"])
+        if bad:
+            raise _bad_elements_error(bad[0]["nan"])
 
     # above this partition count the per-partition offsets go through a
     # broadcast join instead of a literal map expression (a 100k-entry
@@ -246,14 +272,16 @@ class FaissSparkEngine:
 
         Returns (labeled_df, batch_row_count) — the count falls out of the
         offsets job for free, so the caller can skip its own count pass.
-        ``validate_dim``, if given, folds the dimension check into the SAME
-        scan (a bad-dim aggregate per partition) — the separate validate
-        pass was the residual 0.8x of the unlabeled ingest path."""
+        ``validate_dim``, if given, folds the ingest check (``_validate_dim``)
+        into the SAME scan (bad-dim and bad-element aggregates per
+        partition) — the separate validate pass was the residual 0.8x of
+        the unlabeled ingest path."""
         mid = F.monotonically_increasing_id()
         agg = (
             df.select(
                 F.shiftright(mid, 33).alias("_pid"),
                 F.size("vector").alias("_n"),
+                (_bad_elements() if validate_dim else F.lit(0)).alias("_nan"),
             )
             .groupBy("_pid")
             .agg(
@@ -261,6 +289,7 @@ class FaissSparkEngine:
                 F.max(
                     F.when(F.col("_n") != F.lit(validate_dim or -1), F.col("_n"))
                 ).alias("bad"),
+                F.max("_nan").alias("nan"),
             )
             .collect()
         )
@@ -268,6 +297,8 @@ class FaissSparkEngine:
             for r in agg:
                 if r["bad"] is not None:
                     raise DimensionMismatch(validate_dim, r["bad"])
+                if r["nan"]:
+                    raise _bad_elements_error(r["nan"])
         counts = {r["_pid"]: r["cnt"] for r in agg}
         base, pairs = offset, []
         for pid in sorted(counts):
@@ -2270,19 +2301,23 @@ class FaissSparkEngine:
                     F.lit(float(min(1.0, 1.3 * samp / counts[c]))),
                 ]
             frac = F.element_at(F.create_map(*frac_pairs), F.col("cluster_id"))
+            # a label hash, not rand(): rand depends on partition index and
+            # row position, so the children would follow the physical layout
             tbl = (
                 self._decoded_view(idx, idx.data)
-                .select("cluster_id", "vector")
+                .select("cluster_id", "label", "vector")
                 .filter(F.col("cluster_id").isin(over))
-                .filter(F.rand(4242 + _pass) < frac)
+                .filter(_label_unit(F.lit(4242 + _pass)) < frac)
                 .toArrow()
             )
             if not tbl.num_rows:
                 break
-            cids = tbl.column("cluster_id").to_numpy()
+            # label order, not fetch order, decides which rows the cap keeps
+            by_label = np.argsort(tbl.column("label").to_numpy(), kind="stable")
+            cids = tbl.column("cluster_id").to_numpy()[by_label]
             mat = vector_matrix(
                 tbl.column("vector").combine_chunks(), idx.dim, f"index {idx.name!r}"
-            )
+            )[by_label]
             cents = idx.centroids.astype(np.float32).copy()
             fams: dict = {}
             extras: list = []
@@ -2540,10 +2575,9 @@ class FaissSparkEngine:
         # per cluster: ~0.6 s of driver time at nlist 2048)
         lo = F.element_at(F.lit(cdf[:-1]), cid)
         width = F.element_at(F.lit(np.diff(cdf)), cid)
-        u = F.xxhash64("label").bitwiseAND((1 << 52) - 1).cast("double") / float(
-            1 << 52
+        pid = F.least(
+            F.floor(lo + width * _label_unit()).cast("int"), F.lit(n_parts - 1)
         )
-        pid = F.least(F.floor(lo + width * u).cast("int"), F.lit(n_parts - 1))
         return frame.repartitionById(n_parts, pid)
 
     # ---------------------------------------------------------------- search
@@ -2681,6 +2715,18 @@ class FaissSparkEngine:
             q, idx.centroids, idx.metric, idx.metric_arg, nprobe,
             is_descending(idx.metric),
         )
+
+    def _probe_for(self, idx: FaissIndex, corpus: DataFrame, nprobe: int):
+        """The driver routes' probe callable (``q`` -> ``_probe_ids``), or
+        None when the read scans every cluster: a non-IVF index, a corpus
+        without ``cluster_id``, or nprobe >= nlist."""
+        if (
+            idx.spec.kind != "ivf"
+            or "cluster_id" not in corpus.columns
+            or nprobe >= idx.spec.nlist
+        ):
+            return None
+        return lambda q: self._probe_ids(idx, q, nprobe)
 
     def _probe_rows(self, idx: FaissIndex, q: DataFrame, nprobe: int) -> DataFrame:
         """One row per (query, probed cluster): ``q``'s columns plus
@@ -2841,24 +2887,8 @@ class FaissSparkEngine:
                 idx, k, queries_df, params, qid_col, vec_col, corpus,
                 allowed_col=allowed_col,
             )
-        cluster_col = None
-        probe_mask_for = None
         nprobe = int(params.get("nprobe", 1))
-        if (
-            idx.spec.kind == "ivf"
-            and "cluster_id" in corpus.columns
-            and nprobe < idx.spec.nlist
-        ):
-            cluster_col = "cluster_id"
-
-            def probe_mask_for(qids, q):
-                # (nq, nlist) mask of the probed ids; its argmax (the exact
-                # kernel's query sort key) is ids.min(1)
-                ids = self._probe_ids(idx, q, nprobe)
-                mask = np.zeros((len(q), len(idx.centroids)), dtype=bool)
-                mask[np.arange(len(q))[:, None], ids] = True
-                return mask
-
+        probe = self._probe_for(idx, corpus, nprobe)
         if params.get("bulk_queries"):
             # bulk-query path: a corpus-scale QUERY side would serialize
             # through the driver's block iterator — route the search through
@@ -2882,7 +2912,7 @@ class FaissSparkEngine:
             # decode inside the pack kernel (same janino rule as the
             # driver path) — the right_vec column is just named "codes"
             corp_vec = "codes" if sq8_params is not None else "vector"
-            if probe_mask_for is None:
+            if probe is None:
                 return similarity_join(
                     q,
                     corpus.select("label", corp_vec),
@@ -2916,8 +2946,8 @@ class FaissSparkEngine:
             vec_col="codes" if sq8_params is not None else "vector",
             qid_col=qid_col,
             q_vec_col=vec_col,
-            cluster_col=cluster_col,
-            probe_mask_for=probe_mask_for,
+            cluster_col="cluster_id",
+            probe=probe,
             sq8=sq8_params,
         )
 
@@ -2937,7 +2967,8 @@ class FaissSparkEngine:
     ) -> DataFrame:
         """ADC search over PQ codes, composed with IVF cluster pruning.
 
-        Query side streams in bounded blocks (same contract as the exact
+        The driver route is ``search_query_blocks`` with the PQ kernel:
+        query side streams in bounded blocks (same contract as the exact
         kernel); per chunk the probed-cluster union becomes a JVM IN-filter on
         ``cluster_id`` — on cluster-partitioned storage that is directory/
         row-group pruning, so a chunk only scans the codes its queries probe.
@@ -2974,11 +3005,6 @@ class FaissSparkEngine:
                 centroids=idx.centroids if has_clusters else None,
                 cluster_col="cluster_id" if has_clusters else None,
             )
-        probing = (
-            idx.spec.kind == "ivf"
-            and "cluster_id" in corpus.columns
-            and nprobe < idx.spec.nlist
-        )
         residual_cents = (
             idx.centroids
             if idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
@@ -2993,37 +3019,17 @@ class FaissSparkEngine:
             m_, nk_, _ = idx.codebooks.shape
             per_q = max(1, min(nprobe, idx.spec.nlist)) * m_ * nk_ * 4
             chunk = max(1, min(chunk, self.PQ_LUT_BUDGET_BYTES // per_q))
-        partials = []
-        for qids, q in topk_ops.iter_query_blocks(queries_df, qid_col, vec_col):
-            for lo in range(0, len(qids), chunk):
-                cqids = qids[lo : lo + chunk]
-                cq = q[lo : lo + chunk]
-                codes = corpus
-                probes = None
-                if probing:
-                    probes = self._probe_ids(idx, cq, nprobe)
-                    probed = [int(c) for c in np.unique(probes)]
-                    codes = corpus.filter(F.col("cluster_id").isin(probed))
-                partials.append(
-                    pq_search_arrays(
-                        codes,
-                        cqids,
-                        cq,
-                        idx.codebooks,
-                        k,
-                        metric=idx.metric,
-                        centroids=residual_cents,
-                        probe_ids=probes,
-                    )
-                )
-        if not partials:
-            return local_frame(
-                self.spark, "qid bigint, rank int, label bigint, distance float"
+
+        def kernel(codes, qids, q, probes):
+            return pq_search_arrays(
+                codes, qids, q, idx.codebooks, k, metric=idx.metric,
+                centroids=residual_cents, probe_ids=probes,
             )
-        out = partials[0]
-        for p in partials[1:]:
-            out = out.unionByName(p)
-        return out
+
+        return topk_ops.search_query_blocks(
+            corpus, queries_df, k, idx.metric, kernel, qid_col, vec_col,
+            chunk=chunk, probe=self._probe_for(idx, corpus, nprobe),
+        )
 
     # default beam width: ef=128 holds recall@10 >= 0.9 on the 16k-row default
     # segments (tests/test_nsw.py); FAISS's efSearch=16 default assumes one
@@ -3089,62 +3095,32 @@ class FaissSparkEngine:
         allowed_col: Optional[str] = None,
     ) -> DataFrame:
         """Graph-ANN search (operators/nsw.py): beam per graph segment,
-        honoring ``efSearch``; merge is the same bounded nq*k window rank as
-        the exact kernel.  IVF_HNSW composes coarse routing with beams: per
-        query block the probed-cluster union becomes a JVM IN-filter (same
-        pruning as _pq_search_flat) and each query beams ONLY its own probed
-        clusters (probe_groups)."""
+        honoring ``efSearch``, through ``search_query_blocks`` — the same
+        chunk loop and bounded nq*k ``merge_topk`` as the exact kernel.
+        IVF_HNSW composes coarse routing with beams: per chunk the
+        probed-cluster union becomes a JVM IN-filter and each query beams
+        ONLY its own probed clusters (probe_groups)."""
         from duckdb_faiss_ext_spark.operators.nsw import nsw_topk
 
         ef = int(params.get("efSearch", self.DEFAULT_EF_SEARCH))
-        nprobe = int(params.get("nprobe", 1))
-        probe_col = None
-        if (
-            idx.spec.kind == "ivf"
-            and "cluster_id" in corpus.columns
-            and nprobe < idx.spec.nlist
-        ):
-            probe_col = "cluster_id"
-        partials = []
+        probe = self._probe_for(idx, corpus, int(params.get("nprobe", 1)))
+
+        def kernel(data, qids, q, probes):
+            return nsw_topk(
+                data, qids, q, k, ef, metric=idx.metric,
+                metric_arg=idx.metric_arg,
+                probe_col=None if probe is None else "cluster_id",
+                probe_groups=probes, allowed_col=allowed_col,
+            )
+
         # graph indexes have no executor-side block-join bulk path (segment
         # replication would cost the BNL's full shuffle while beams only
         # save compute) — bulk_queries instead upgrades the driver stream to
         # executor-packed binary blocks (2.3x at 1M query rows, topk.py)
-        for qids, q in topk_ops.iter_query_blocks(
-            queries_df, qid_col, vec_col,
-            packed=bool(params.get("bulk_queries")),
-        ):
-            for lo in range(0, len(qids), topk_ops.MAX_QUERY_BATCH):
-                cqids = qids[lo : lo + topk_ops.MAX_QUERY_BATCH]
-                cq = q[lo : lo + topk_ops.MAX_QUERY_BATCH]
-                data = corpus
-                probes = None
-                if probe_col is not None:
-                    probes = self._probe_ids(idx, cq, nprobe)
-                    probed = [int(c) for c in np.unique(probes)]
-                    data = corpus.filter(F.col("cluster_id").isin(probed))
-                partials.append(
-                    nsw_topk(
-                        data,
-                        cqids,
-                        cq,
-                        k,
-                        ef,
-                        metric=idx.metric,
-                        metric_arg=idx.metric_arg,
-                        probe_col=probe_col,
-                        probe_groups=probes,
-                        allowed_col=allowed_col,
-                    )
-                )
-        if not partials:
-            return local_frame(
-                self.spark, "qid bigint, rank int, label bigint, distance float"
-            )
-        out = partials[0]
-        for p in partials[1:]:
-            out = out.unionByName(p)
-        return out
+        return topk_ops.search_query_blocks(
+            corpus, queries_df, k, idx.metric, kernel, qid_col, vec_col,
+            probe=probe, packed=bool(params.get("bulk_queries")),
+        )
 
     def _pad_no_hit_queries(
         self, queries_df: DataFrame, lists: DataFrame, k: int, metric: str, qid_col: str

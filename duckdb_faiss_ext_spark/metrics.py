@@ -12,7 +12,11 @@ FAISS conventions the engine must reproduce (SURVEY.md §1.3):
 Kernels take ``Q`` (nq, d) and ``X`` (n, d) float32 arrays and return an
 (nq, n) score matrix.  Pairwise metrics that cannot be expressed as a matmul
 are computed with broadcasting; chunk the corpus axis upstream if n*d is big
-(the engine's mapInPandas path feeds Arrow-batch-sized ``X``).
+(the search kernels' ``mapInArrow`` batches feed Arrow-batch-sized ``X``).
+
+Top-k has one selector per level: ``topk_indices`` picks each batch's
+top-k and ``merge_running_topk`` folds a block's top-k into a running one;
+both break score ties by the smaller label.
 """
 
 from __future__ import annotations
@@ -155,16 +159,17 @@ def _sortable_u32(v32: np.ndarray) -> np.ndarray:
 
 
 def topk_indices(
-    scores: np.ndarray, k: int, descending: bool, order: np.ndarray = None
+    scores: np.ndarray, k: int, descending: bool, labels: np.ndarray = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row top-k (indices, scores), ties broken by smaller index —
-    matching FAISS's internal-id tie-break (SURVEY.md §7 known-hard #5).
-    ``order`` (a column permutation) breaks ties by position in it instead,
-    e.g. ``argsort(labels)`` for a label tie-break over unsorted columns.
+    """Per-row top-k (indices, scores), ties broken by the smaller label of
+    the score column — FAISS's id tie-break (SURVEY.md §7 known-hard #5),
+    the order ``merge_topk`` ranks in, whatever order the physical layout
+    put the rows in.  ``labels=None`` means the column index is the id
+    (e.g. a centroid id), so ties keep the smaller index.
 
-    float32 fast path: pack (sortable-score, index) into one uint64 key, then
-    argpartition + small sort — O(n + k log k) per row with the EXACT same
-    tie-break as a stable sort (keys are unique, so the boundary-tie
+    float32 fast path: pack (sortable-score, tie rank) into one uint64 key,
+    then argpartition + small sort — O(n + k log k) per row with the EXACT
+    same tie-break as a stable sort (keys are unique, so the boundary-tie
     ambiguity that rules out a plain argpartition cannot occur).  A full
     stable argsort here was the dominant per-batch cost at the 4M probe
     (285 ms of 300 ms).  -0.0 is normalized to +0.0 first so signed zeros
@@ -174,6 +179,11 @@ def topk_indices(
     n = scores.shape[1]
     kk = min(k, n)
     rows = np.arange(scores.shape[0])[:, None]
+    # label order only when the labels are unsorted: sorted labels tie-break
+    # exactly like the column index, without the argsort
+    order = None
+    if labels is not None and (labels[1:] < labels[:-1]).any():
+        order = np.argsort(labels, kind="stable")
     # NaN scores sort WORST in both paths (the bit-inverted fast-path key
     # would otherwise rank NaN first for descending metrics while the stable
     # argsort ranks it last — one NaN corpus row could then evict a real
@@ -192,8 +202,7 @@ def topk_indices(
             tie[order] = tie.copy()
         key = (key32.astype(np.uint64) << np.uint64(32)) | tie[None, :]
         part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-        order = np.argsort(key[rows, part], axis=1)
-        idx = part[rows, order]
+        idx = part[rows, np.argsort(key[rows, part], axis=1)]
         return idx, scores[rows, idx]
     keys = -cmp if descending else cmp
     if order is None:
@@ -201,6 +210,29 @@ def topk_indices(
     else:
         idx = order[np.argsort(keys[:, order], axis=1, kind="stable")[:, :kk]]
     return idx, scores[rows, idx]
+
+
+def merge_running_topk(
+    ids: np.ndarray,
+    scores: np.ndarray,
+    new_ids: np.ndarray,
+    new_scores: np.ndarray,
+    k: int,
+    descending: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Fold one block's per-row top-k (``new_ids``, ``new_scores``) into a
+    running per-row top-k (``ids``/``scores``, None before the first
+    block): the streaming join kernels keep O(rows * k) state while right
+    blocks stream past, and the graph kernel cuts each beam to k with
+    ``ids=None``.  The ids differ per row, so the tie-break (score, then id
+    ascending) is one row-wise lexsort."""
+    if ids is not None:
+        new_ids = np.concatenate([ids, new_ids], axis=1)
+        new_scores = np.concatenate([scores, new_scores], axis=1)
+    key = -new_scores if descending else new_scores
+    order = np.lexsort((new_ids, key), axis=1)[:, :k]
+    rows = np.arange(new_ids.shape[0])[:, None]
+    return new_ids[rows, order], new_scores[rows, order]
 
 
 def nearest_centroid(

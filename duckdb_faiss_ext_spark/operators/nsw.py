@@ -5,7 +5,7 @@ Makefile:105; efSearch plumbing faiss_extension.cpp:691-702).  A monolithic
 HNSW graph is driver-bound, so the Spark-first shape is the one sharded
 deployments (Lucene segments, Elasticsearch/Vespa shards) use: ONE GRAPH PER
 PARTITION, queries fan out to all partitions, per-partition beam results merge
-through the same bounded nq*k window rank as the exact kernel.
+through the same bounded nq*k ``merge_topk`` rank as the exact kernel.
 
 - Build (``build_slice_graphs``): per partition, an exact k-NN graph (chunked
   matmuls — vectorized, no Python insert loop) plus a few random long-range
@@ -27,9 +27,14 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from duckdb_faiss_ext_spark.metrics import is_descending, pairwise
+from duckdb_faiss_ext_spark.metrics import (
+    is_descending,
+    merge_running_topk,
+    pairwise,
+    topk_indices,
+)
 
 __all__ = [
     "build_partition_graph",
@@ -56,9 +61,10 @@ def _build_scores(q: np.ndarray, x: np.ndarray, metric: str, metric_arg: float) 
 
 
 def _topk_build(scores: np.ndarray, k: int, desc: bool):
-    """Lean top-k for construction: argpartition + slice argsort.  The search
-    kernel's ``topk_indices`` pays for bit-exact composite-key tie-breaking
-    (cross-engine determinism); neighbor lists don't need that and the
+    """Lean top-k for graph CONSTRUCTION only: argpartition + slice argsort.
+    Every search path (edgeless segment scans included) uses
+    ``topk_indices``, which pays for bit-exact composite-key tie-breaking by
+    label (cross-route determinism); neighbor lists don't need that and the
     composite keys were 90% of build time."""
     s = -scores if desc else scores
     k = min(k, s.shape[1])
@@ -550,9 +556,10 @@ def nsw_topk(
     probe_groups: Optional[np.ndarray] = None,
     allowed_col: Optional[str] = None,
 ) -> DataFrame:
-    """Beam-search graph segments for a driver-resident query block and
-    merge: (qid, rank, label, distance).  Shuffle bounded at nq*k rows per
-    partition — identical merge shape to the exact kernel.
+    """Beam-search graph segments for a driver-resident query block:
+    unranked (qid, label, distance) candidates, ≤ k per query per segment —
+    the graph kernel of ``search_query_blocks``, whose ``merge_topk`` ranks
+    them (the same bounded nq*k shuffle as the exact kernel).
 
     Beams run PER ``graph_seg`` (each a self-contained graph), never per
     partition — physical layout (union order, cache compaction, parquet file
@@ -631,6 +638,7 @@ def nsw_topk(
         clusters = np.concatenate(cl_parts) if has_probe else None
         ok_all = np.concatenate(ok_parts) if has_allowed else None
         qids_, q_, probes = bq.value
+        worst = -np.inf if desc else np.inf
         out_q, out_l, out_d = [], [], []
         n_part = len(labels)
         # partition-wide adjacency in PARTITION row indices: every graph
@@ -667,20 +675,14 @@ def nsw_topk(
                 # graphs): vectorized brute-force scan of the whole segment —
                 # exactly what plain IVF does, and cheaper than beam overhead
                 # at these sizes
-                allowed = ok_all[sel] if has_allowed else None
-                scores = pairwise(
-                    q_[q_sel], gx, metric, metric_arg
-                ).astype(np.float64)
-                if allowed is not None:
-                    scores[:, ~allowed] = -np.inf if desc else np.inf
-                ids, d = _topk_build(scores, min(k, len(gx)), desc)
-                for t in range(len(q_sel)):
-                    keep = np.isfinite(d[t])
-                    out_q.append(
-                        np.full(int(keep.sum()), qids_[q_sel[t]], dtype=np.int64)
-                    )
-                    out_l.append(gl[ids[t][keep]])
-                    out_d.append(d[t][keep].astype(np.float32))
+                scores = pairwise(q_[q_sel], gx, metric, metric_arg)
+                if has_allowed:
+                    scores[:, ~ok_all[sel]] = worst
+                ids, d = topk_indices(scores, k, desc, gl)
+                keep = np.isfinite(d)
+                out_q.append(np.repeat(qids_[q_sel], ids.shape[1])[keep.ravel()])
+                out_l.append(gl[ids][keep])
+                out_d.append(d[keep])
                 continue
             # gather the segment's neighbor labels into a padded matrix and
             # map labels -> PARTITION row indices via one sorted lookup;
@@ -730,16 +732,25 @@ def nsw_topk(
             ent = np.full((len(qi_c), ne_max), -1, dtype=np.int64)
             for i, e in enumerate(ent_c):
                 ent[i, : len(e)] = e
+            # the whole beam comes back (k = ef_run leaves the walk as it
+            # is) and the k cut keeps the smaller label among tied scores,
+            # as every other route does — the beam's own cut follows slot
+            # order, i.e. the physical row layout
             idx_list, score_list, _ = beam_search_batch(
-                x, adj, q_[qi_c], k, ef_run, metric, metric_arg,
+                x, adj, q_[qi_c], ef_run, ef_run, metric, metric_arg,
                 allowed=ok_all if has_allowed else None, entries=ent,
             )
-            for i, qi in enumerate(qi_c):
-                out_q.append(
-                    np.full(len(idx_list[i]), qids_[qi], dtype=np.int64)
-                )
-                out_l.append(labels[idx_list[i]])
-                out_d.append(score_list[i])
+            width = max(1, max(len(a) for a in idx_list))
+            beam_l = np.full((len(qi_c), width), -1, dtype=np.int64)
+            beam_d = np.full((len(qi_c), width), worst, dtype=np.float32)
+            for i, a in enumerate(idx_list):
+                beam_l[i, : len(a)] = labels[a]
+                beam_d[i, : len(a)] = score_list[i]
+            top_l, top_d = merge_running_topk(None, None, beam_l, beam_d, k, desc)
+            keep = np.isfinite(top_d)
+            out_q.append(np.repeat(qids_[qi_c], top_l.shape[1])[keep.ravel()])
+            out_l.append(top_l[keep])
+            out_d.append(top_d[keep])
         if not out_q:
             return
         yield pa.RecordBatch.from_arrays(
@@ -756,17 +767,6 @@ def nsw_topk(
         + ([probe_col] if probe_col is not None else [])
         + ([allowed_col] if has_allowed else [])
     )
-    partial = corpus_df.select(*cols).mapInArrow(
+    return corpus_df.select(*cols).mapInArrow(
         run, schema="qid bigint, label bigint, distance float"
-    )
-    order = (
-        [F.col("distance").desc(), F.col("label").asc()]
-        if desc
-        else [F.col("distance").asc(), F.col("label").asc()]
-    )
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        partial.withColumn("rank", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("rank") < k)
-        .select("qid", "rank", "label", "distance")
     )

@@ -17,8 +17,8 @@ Pipeline:
 3. ``pq_search``: per query build the (m, 256) lookup table of
    query-subvector-to-centroid distances, then score every code row with
    ``sum_j LUT[j, code_j]`` — table lookups instead of d multiplies.
-   Exact same partial-top-k/merge shape as the exact kernel (≤ nq×k rows
-   shuffle), distances approximate (ADC), tie-break (score, label).
+   Exact same candidate/``merge_topk`` shape as the exact kernel (≤ nq×k
+   rows shuffle), distances approximate (ADC), tie-break (score, label).
 """
 
 from __future__ import annotations
@@ -27,9 +27,10 @@ from typing import Iterator
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from duckdb_faiss_ext_spark.operators.topk import vector_matrix
+from duckdb_faiss_ext_spark.metrics import merge_running_topk, topk_indices
+from duckdb_faiss_ext_spark.operators.topk import merge_topk, vector_matrix
 
 __all__ = [
     "pq_train",
@@ -199,7 +200,9 @@ def pq_search(
     qids = tbl.column(qid_col).to_numpy().astype(np.int64)
     dim = codebooks.shape[0] * codebooks.shape[2]
     q = vector_matrix(tbl.column(q_vec_col).combine_chunks(), dim, "query side")
-    return pq_search_arrays(codes_df, qids, q, codebooks, k, metric=metric)
+    return merge_topk(
+        pq_search_arrays(codes_df, qids, q, codebooks, k, metric=metric), k, metric
+    )
 
 
 def pq_search_arrays(
@@ -213,8 +216,10 @@ def pq_search_arrays(
     probe_ids: "np.ndarray | None" = None,
     cluster_col: str = "cluster_id",
 ) -> DataFrame:
-    """ADC top-k for a driver-resident query block (qids int64, q float32
-    (nq, dim)): (qid, rank, label, distance[approx]).
+    """ADC top-k candidates for a driver-resident query block (qids int64,
+    q float32 (nq, dim)): unranked (qid, label, distance[approx]), ≤ k per
+    query per Arrow batch — the PQ kernel of ``search_query_blocks``, whose
+    ``merge_topk`` ranks them.
 
     metric 'L2' (squared, ascending) or 'INNER_PRODUCT' (descending) —
     matching FAISS IndexPQ's METRIC handling.
@@ -276,8 +281,6 @@ def pq_search_arrays(
     )
 
     def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        from duckdb_faiss_ext_spark.metrics import topk_indices
-
         qids_, luts_, probes_ = bl.value
         nq_ = len(qids_)
         for rb in batches:
@@ -314,7 +317,7 @@ def pq_search_arrays(
                     for j in range(m):
                         part += lsub[:, j, codes[rows, j]]
                     scores[np.ix_(qsel, rows)] = part
-            idx, sc = topk_indices(scores, k, desc)
+            idx, sc = topk_indices(scores, k, desc, labels)
             kk = idx.shape[1]
             keep = np.isfinite(sc.ravel())
             yield pa.RecordBatch.from_arrays(
@@ -327,19 +330,8 @@ def pq_search_arrays(
             )
 
     sel = ["label", "code"] + ([cluster_col] if residual else [])
-    partial = codes_df.select(*sel).mapInArrow(
+    return codes_df.select(*sel).mapInArrow(
         score, schema="qid bigint, label bigint, distance float"
-    )
-    order = (
-        [F.col("distance").desc(), F.col("label").asc()]
-        if desc
-        else [F.col("distance").asc(), F.col("label").asc()]
-    )
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        partial.withColumn("rank", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("rank") < k)
-        .select("qid", "rank", "label", "distance")
     )
 
 
@@ -365,16 +357,13 @@ def pq_search_grouped(
     builds each left block's (ln, m, nk) lookup tables against its single
     cluster IN THE TASK from the broadcast codebooks (no driver LUT
     materialization at all), streams code blocks through a running top-k,
-    and one window per qid merges across clusters.
+    and ``merge_topk`` merges across clusters.
 
     LUT memory is bounded two ways (r4 review): the query-side block size
     caps so one block's LUT stays under LUT_BLOCK_BUDGET_BYTES, and the
     pair rows are SORTED by (blk, grp) within each task so states finish
     contiguously — at most ONE live LUT per task, evicted on key change."""
     import pyarrow as pa
-
-    from typing import Iterator
-    from pyspark.sql import Window as W_
 
     m, nk, sub = codebooks.shape
     dim = m * sub
@@ -452,18 +441,6 @@ def pq_search_grouped(
         # LUT resident instead of one per (block, cluster) key (r4 review)
         cur_key = None
         cur = None
-
-        def merge(st, new_ids, new_sc):
-            all_ids = (
-                new_ids if st[3] is None else np.concatenate([st[3], new_ids], axis=1)
-            )
-            all_sc = (
-                new_sc if st[4] is None else np.concatenate([st[4], new_sc], axis=1)
-            )
-            key = -all_sc if desc else all_sc
-            order = np.lexsort((all_ids, key), axis=1)[:, :k]
-            rows = np.arange(all_ids.shape[0])[:, None]
-            st[3], st[4] = all_ids[rows, order], all_sc[rows, order]
 
         def emit(st):
             qids, _, _, top_ids, top_sc = st
@@ -552,11 +529,10 @@ def pq_search_grouped(
                 for j in range(m):
                     scores += lut[:, j, codes[:, j]]
                 scores += const[:, None]
-                kk = min(k, rn)
-                from duckdb_faiss_ext_spark.metrics import topk_indices
-
-                idx, sc = topk_indices(scores, kk, desc)
-                merge(st, rids[idx], sc.astype(np.float64))
+                idx, sc = topk_indices(scores, k, desc, rids)
+                st[3], st[4] = merge_running_topk(
+                    st[3], st[4], rids[idx], sc.astype(np.float64), k, desc
+                )
         if cur is not None:
             out = emit(cur)
             if out is not None:
@@ -567,14 +543,4 @@ def pq_search_grouped(
         .sortWithinPartitions("blk", "grp")
         .mapInArrow(score, schema="qid bigint, label bigint, distance float")
     )
-    order = (
-        [F.col("distance").desc(), F.col("label").asc()]
-        if desc
-        else [F.col("distance").asc(), F.col("label").asc()]
-    )
-    w = W_.partitionBy("qid").orderBy(*order)
-    return (
-        partial.withColumn("rank", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("rank") < k)
-        .select("qid", "rank", "label", "distance")
-    )
+    return merge_topk(partial, k, metric)

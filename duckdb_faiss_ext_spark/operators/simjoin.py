@@ -37,11 +37,12 @@ from duckdb_faiss_ext_spark.functions.quantize import (
 )
 from duckdb_faiss_ext_spark.metrics import (
     is_descending,
+    merge_running_topk,
     pairwise,
     resolve_metric,
     topk_indices,
 )
-from duckdb_faiss_ext_spark.operators.topk import reject_null_elements
+from duckdb_faiss_ext_spark.operators.topk import merge_topk, reject_null_elements
 
 __all__ = ["similarity_join", "similarity_join_grouped", "similarity_join_lsh"]
 
@@ -341,19 +342,6 @@ def _stream_topk_kernel(
     def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         state: dict = {}
 
-        def merge(st, new_ids, new_sc):
-            all_ids = (
-                new_ids if st[2] is None else np.concatenate([st[2], new_ids], axis=1)
-            )
-            all_sc = (
-                new_sc if st[3] is None else np.concatenate([st[3], new_sc], axis=1)
-            )
-            key = -all_sc if desc else all_sc
-            # composite tie-break: score first, right-label ascending second
-            order = np.lexsort((all_ids, key), axis=1)[:, :k]
-            rows = np.arange(all_ids.shape[0])[:, None]
-            st[2], st[3] = all_ids[rows, order], all_sc[rows, order]
-
         for rb in batches:
             for r in range(rb.num_rows):
                 skey = rb.column(0)[r].as_py()
@@ -410,10 +398,13 @@ def _stream_topk_kernel(
                         )
                     else:
                         s = pairwise(lx[lo:hi], rx, metric, marg, dtype=np_t)
-                    idx, sc = topk_indices(s, kk, desc)
+                    idx, sc = topk_indices(s, kk, desc, rids)
                     blk_ids[lo:hi] = rids[idx]
                     blk_sc[lo:hi] = sc
-                merge(st, blk_ids, blk_sc)
+                # composite tie-break: score first, right-label ascending
+                st[2], st[3] = merge_running_topk(
+                    st[2], st[3], blk_ids, blk_sc, k, desc
+                )
         for lids, _, top_ids, top_sc in state.values():
             if top_ids is None:
                 continue
@@ -452,9 +443,9 @@ def similarity_join_grouped(
     the right side is the cluster-assigned corpus, and blocks join on the
     cluster id (hash equi-join of small block tables, NO cartesian).  A
     query probing p clusters appears in p left blocks, so the kernel's
-    per-(blk, grp) top-k is per-(query, cluster); one window merge per
-    left id produces the global top-k — the same bounded nq*k shuffle as
-    the exact kernel."""
+    per-(blk, grp) top-k is per-(query, cluster); ``merge_topk`` per left
+    id produces the global top-k — the same bounded nq*k shuffle as the
+    exact kernel."""
     import pyarrow as pa
 
     dtype = dtype if dtype is not None else np.float32
@@ -476,7 +467,7 @@ def similarity_join_grouped(
     # bounded by the exploded query side (~90 MB at the bench shape).
     # Results are identical: blocks still partition each group's id set,
     # the kernel's per-(blk, grp) top-k is merged globally per left id by
-    # the window below, and blk stays content-derived (min of ids).
+    # merge_topk below, and blk stays content-derived (min of ids).
     lb = _pack_blocks(
         left.repartition(n_out, group_col),
         left_id, left_vec, block_rows, dtype, group_col, block_bytes=block_bytes
@@ -507,22 +498,12 @@ def similarity_join_grouped(
         score,
         schema=f"left_id bigint, rank int, right_id bigint, distance {dist_t}",
     )
-    order = (
-        [F.col("distance").desc(), F.col("right_id").asc()]
-        if desc
-        else [F.col("distance").asc(), F.col("right_id").asc()]
+    cand = partial.select(
+        F.col("left_id").alias("qid"), F.col("right_id").alias("label"), "distance"
     )
-    w = Window.partitionBy("left_id").orderBy(*order)
     rname = right_id if right_id != left_id else f"{right_id}_right"
-    return (
-        partial.withColumn("rank", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("rank") < k)
-        .select(
-            F.col("left_id").alias(left_id),
-            "rank",
-            F.col("right_id").alias(rname),
-            "distance",
-        )
+    return merge_topk(cand, k, metric).select(
+        F.col("qid").alias(left_id), "rank", F.col("label").alias(rname), "distance"
     )
 
 
@@ -547,7 +528,7 @@ def similarity_join_lsh(
     re-ranked with the exact float64 cosine in an Arrow-batched pandas_udf
     (one numpy pass per batch — 1.8x the per-element zip_with/aggregate
     expression on verify joins; no driver involvement either way);
-    per-left-row top-k via one window.  Only colliding pairs are ever
+    per-left-row top-k via ``merge_topk``.  Only colliding pairs are ever
     scored, so cost tracks the collision count, not |L|·|R|.  All shuffles
     are hash-partitioned equi-joins — nothing is replicated or
     driver-resident.
@@ -597,22 +578,15 @@ def similarity_join_lsh(
         pairs.join(lv, "_lid")
         .join(rv, "_rid")
         .select(
-            "_lid",
-            "_rid",
+            F.col("_lid").alias("qid"),
+            F.col("_rid").alias("label"),
             cosine_batch_udf()(F.col("_lv"), F.col("_rv")).alias("distance"),
         )
     )
-    w = Window.partitionBy("_lid").orderBy(
-        F.col("distance").desc(), F.col("_rid").asc()
-    )
     rname = right_id if right_id != left_id else f"{right_id}_right"
-    return (
-        scored.withColumn("rank", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("rank") < k)
-        .select(
-            F.col("_lid").alias(left_id),
-            "rank",
-            F.col("_rid").alias(rname),
-            F.col("distance").cast("float").alias("distance"),
-        )
+    return merge_topk(scored, k, "COSINE").select(
+        F.col("qid").alias(left_id),
+        "rank",
+        F.col("label").alias(rname),
+        F.col("distance").cast("float").alias("distance"),
     )

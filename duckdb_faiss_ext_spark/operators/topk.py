@@ -5,16 +5,22 @@ Physical plan (designed for a huge corpus, small-ish query batch):
 
 1. queries are collected to a float32 numpy block and BROADCAST — the corpus
    (the 100 TB side) is never collected or shuffled whole;
-2. ``mapInPandas`` over corpus partitions scores each Arrow batch against ALL
+2. ``mapInArrow`` over corpus partitions scores each Arrow batch against ALL
    queries in one numpy matmul (the analogue of the reference's one
    ``index->search`` call per 2048-row chunk, :631) and keeps only the per-
-   partition top-k per query — output is ≤ nq*k rows per partition, so the
-   single shuffle that follows is tiny regardless of corpus size;
-3. a Window per qid merges partial top-k into the global top-k.
+   batch top-k per query — output is ≤ nq*k rows per batch, so the single
+   shuffle that follows is tiny regardless of corpus size;
+3. ``merge_topk``, one Window per qid, merges the candidates into the global
+   top-k.  It is the one rank of every search route: the driver routes'
+   chunks, the bulk joins, PQ, the graph beams and the LSH join.
 
-For IVF indexes the same kernel takes a (nq, nlist) boolean probe mask and a
+For IVF indexes the same kernel takes each query's probed cluster ids and a
 ``cluster_id`` column: rows outside a query's probed clusters are masked out
 before the top-k — cluster pruning replacing FAISS's nprobe traversal.
+
+``search_query_blocks`` is the one driver-side loop (query blocks, probe,
+chunk, probed-cluster pre-filter, kernel, one merge) that the exact, PQ and
+graph routes share; each route supplies only its candidate kernel.
 """
 
 from __future__ import annotations
@@ -22,18 +28,8 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from duckdb_faiss_ext_spark.errors import FaissSparkError
 from duckdb_faiss_ext_spark.metrics import (
@@ -43,31 +39,6 @@ from duckdb_faiss_ext_spark.metrics import (
     topk_indices,
 )
 from duckdb_faiss_ext_spark.session import local_frame
-
-PARTIAL_SCHEMA = StructType(
-    [
-        StructField("qid", LongType(), False),
-        StructField("label", LongType(), False),
-        StructField("distance", FloatType(), False),
-    ]
-)
-
-PARTIAL_SCHEMA_F64 = StructType(
-    [
-        StructField("qid", LongType(), False),
-        StructField("label", LongType(), False),
-        StructField("distance", DoubleType(), False),
-    ]
-)
-
-RESULT_ELEM = StructType(
-    [
-        StructField("rank", IntegerType(), False),
-        StructField("label", LongType(), False),
-        StructField("distance", FloatType(), False),
-    ]
-)
-
 
 MAX_QUERY_BATCH = 8192  # queries per broadcast chunk (keeps driver+broadcast bounded)
 
@@ -299,11 +270,14 @@ def partial_topk(
     label_col: str = "label",
     vec_col: str = "vector",
     cluster_col: Optional[str] = None,
-    probe_mask: Optional[np.ndarray] = None,
+    probes: Optional[np.ndarray] = None,
     dtype: type = np.float32,
     sq8: Optional[tuple] = None,
 ) -> DataFrame:
     """Per-partition top-k candidates: ≤ nq*k rows per Arrow batch.
+
+    ``probes`` (nq, nprobe) are each query's probed ids in ``cluster_col``:
+    rows of other clusters never score for that query.
 
     Uses ``mapInArrow`` for zero-copy vector decode: the list<float> column's
     flattened child buffer reshapes straight into a (n, d) matrix — no
@@ -329,9 +303,15 @@ def partial_topk(
     # snapshot: closure vars pickle by VALUE to executors (a module global
     # would re-resolve worker-side, ignoring driver-side test overrides)
     dense_thr = DENSE_MASK_THRESHOLD
+    probe_mask = None
+    if probes is not None and cluster_col is not None:
+        # (nq, max probed id + 1): the caller's probed-cluster pre-filter
+        # keeps every row's cluster inside it
+        probe_mask = np.zeros((len(q), int(probes.max()) + 1), dtype=bool)
+        probe_mask[np.arange(len(q))[:, None], probes] = True
     spark = corpus_df.sparkSession
     bq = spark.sparkContext.broadcast((qids, np.asarray(q, dtype=dtype), probe_mask))
-    cols = [label_col, vec_col] + ([cluster_col] if cluster_col else [])
+    cols = [label_col, vec_col] + ([cluster_col] if probe_mask is not None else [])
     narrow = corpus_df.select(*cols)
     pa_dist = pa.float32() if dtype is np.float32 else pa.float64()
     out_type = pa.schema(
@@ -396,7 +376,7 @@ def partial_topk(
                     dtype=dtype,
                 )
             labels = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            if mask_ is not None and cluster_col is not None:
+            if mask_ is not None:
                 clusters = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
                 allowed = mask_[:, clusters]  # (nq, batch)
                 fill = np.float32(-np.inf if desc else np.inf)
@@ -433,12 +413,7 @@ def partial_topk(
                         scores[np.ix_(qsel, rows)] = score_rows(q_[qsel], rows)
             else:
                 scores = score_rows(q_)
-            # a tie at the k boundary keeps the smaller label, as merge_topk
-            # ranks ties — not the row the physical layout put first
-            tie_order = None
-            if (labels[1:] < labels[:-1]).any():
-                tie_order = np.argsort(labels, kind="stable")
-            idx, sc = topk_indices(scores, k, desc, tie_order)
+            idx, sc = topk_indices(scores, k, desc, labels)
             nq, kk = idx.shape
             out_q = np.repeat(qids_, kk)
             out_l = labels[idx.ravel()]
@@ -453,8 +428,11 @@ def partial_topk(
                 schema=out_type,
             )
 
-    schema = PARTIAL_SCHEMA if dtype is np.float32 else PARTIAL_SCHEMA_F64
-    return narrow.mapInArrow(score, schema=schema)
+    dist_t = "float" if dtype is np.float32 else "double"
+    return narrow.mapInArrow(
+        score,
+        schema=f"qid bigint not null, label bigint not null, distance {dist_t} not null",
+    )
 
 
 def merge_topk(partial: DataFrame, k: int, metric: str) -> DataFrame:
@@ -473,71 +451,62 @@ def merge_topk(partial: DataFrame, k: int, metric: str) -> DataFrame:
     )
 
 
-def exact_knn_flat(
+def search_query_blocks(
     corpus_df: DataFrame,
     queries_df: DataFrame,
     k: int,
-    metric: str = "INNER_PRODUCT",
-    metric_arg: float = 0.0,
-    label_col: str = "label",
-    vec_col: str = "vector",
+    metric: str,
+    kernel: callable,
     qid_col: str = "qid",
-    q_vec_col: str = "vector",
-    cluster_col: Optional[str] = None,
-    probe_mask_for: Optional[callable] = None,
+    vec_col: str = "vector",
+    chunk: int = MAX_QUERY_BATCH,
+    probe: Optional[callable] = None,
+    cluster_col: str = "cluster_id",
+    packed: bool = False,
     dtype: type = np.float32,
-    sq8: Optional[tuple] = None,
 ) -> DataFrame:
-    """Flattened result: (qid BIGINT, rank INT, label BIGINT, distance FLOAT).
+    """The driver-side search loop every block-streaming route shares:
+    (qid BIGINT, rank INT, label BIGINT, distance FLOAT/DOUBLE).
 
-    The query side streams to the driver in MAX_QUERY_BLOCK super-blocks
-    (bounded driver memory, any query-side size); each block is chunked into
-    MAX_QUERY_BATCH broadcasts — one broadcast + one corpus pass per chunk;
-    the corpus side only ever streams (never collected, never shuffled whole).
-    """
+    The query side streams to the driver in bounded blocks
+    (``iter_query_blocks``; ``packed`` picks its executor-packed form).
+    ``probe(q)``, if given, returns each query's (nq, nprobe) probed cluster
+    ids.  Each block is cut into ``chunk``-query pieces; a piece's corpus is
+    pre-filtered to its probed-cluster union, and ``kernel(corpus, qids, q,
+    probes)`` returns its unranked (qid, label, distance) candidates
+    (``probes`` None when unprobed).  The candidates of every piece union
+    into one ``merge_topk``: one bounded nq*k shuffle per read."""
     partials = []
-    for qids, q in iter_query_blocks(queries_df, qid_col, q_vec_col, dtype=dtype):
-        full_mask = None
-        if probe_mask_for is not None:
-            # (block, nlist) bool mask: ≤ 64k x 2048 ~ 134 MB worst case
-            full_mask = probe_mask_for(qids, q)
+    for qids, q in iter_query_blocks(
+        queries_df, qid_col, vec_col, dtype=dtype, packed=packed
+    ):
+        probes = None
+        if probe is not None:
+            probes = probe(q)
             if len(qids) > 1:
                 # group queries by their first probed cluster so each chunk's
                 # cluster-union (the JVM pre-filter's IN-list) stays tight; an
                 # unsorted diverse batch probes ~every cluster per chunk and
                 # the pre-filter degenerates to a full scan
-                order = np.argsort(np.argmax(full_mask, axis=1), kind="stable")
-                qids, q, full_mask = qids[order], q[order], full_mask[order]
-        for lo in range(0, len(qids), MAX_QUERY_BATCH):
-            cq, cqids = q[lo : lo + MAX_QUERY_BATCH], qids[lo : lo + MAX_QUERY_BATCH]
-            mask = full_mask[lo : lo + MAX_QUERY_BATCH] if full_mask is not None else None
-            chunk_corpus = corpus_df
-            if mask is not None and cluster_col is not None:
+                order = np.argsort(probes.min(axis=1), kind="stable")
+                qids, q, probes = qids[order], q[order], probes[order]
+        for lo in range(0, len(qids), chunk):
+            part = corpus_df
+            cprobes = None
+            if probes is not None:
+                cprobes = probes[lo : lo + chunk]
                 # JVM-side scan reduction: rows in clusters no query probes
                 # never reach the Python kernel.  On cluster-partitioned
                 # storage this IN-filter becomes partition/row-group pruning
-                # (the I/O lever); inside the kernel the probe mask drives
-                # per-cluster sub-matmuls, so the MACs track the per-query
+                # (the I/O lever); inside the kernel the probe ids drive
+                # per-cluster scoring, so the work tracks the per-query
                 # scan fraction even when the chunk's cluster-union covers
                 # most of the corpus (the compute lever — SCALE.md r6
                 # point 2).
-                probed = [int(c) for c in np.where(mask.any(axis=0))[0]]
-                chunk_corpus = corpus_df.filter(F.col(cluster_col).isin(probed))
+                probed = [int(c) for c in np.unique(cprobes)]
+                part = corpus_df.filter(F.col(cluster_col).isin(probed))
             partials.append(
-                partial_topk(
-                    chunk_corpus,
-                    cqids,
-                    cq,
-                    k,
-                    metric,
-                    metric_arg,
-                    label_col=label_col,
-                    vec_col=vec_col,
-                    cluster_col=cluster_col,
-                    probe_mask=mask,
-                    dtype=dtype,
-                    sq8=sq8,
-                )
+                kernel(part, qids[lo : lo + chunk], q[lo : lo + chunk], cprobes)
             )
     if not partials:
         dist_t = "float" if dtype is np.float32 else "double"
@@ -549,6 +518,42 @@ def exact_knn_flat(
     for p in partials[1:]:
         partial = partial.unionByName(p)
     return merge_topk(partial, k, metric)
+
+
+def exact_knn_flat(
+    corpus_df: DataFrame,
+    queries_df: DataFrame,
+    k: int,
+    metric: str = "INNER_PRODUCT",
+    metric_arg: float = 0.0,
+    label_col: str = "label",
+    vec_col: str = "vector",
+    qid_col: str = "qid",
+    q_vec_col: str = "vector",
+    cluster_col: Optional[str] = None,
+    probe: Optional[callable] = None,
+    dtype: type = np.float32,
+    sq8: Optional[tuple] = None,
+) -> DataFrame:
+    """Flattened result: (qid BIGINT, rank INT, label BIGINT, distance FLOAT).
+
+    ``search_query_blocks`` with the ``partial_topk`` kernel: the query side
+    streams to the driver in MAX_QUERY_BLOCK super-blocks (bounded driver
+    memory, any query-side size); each block is chunked into MAX_QUERY_BATCH
+    broadcasts — one broadcast + one corpus pass per chunk; the corpus side
+    only ever streams (never collected, never shuffled whole).  ``probe(q)``
+    returns each query's probed ids in ``cluster_col`` (IVF)."""
+
+    def kernel(part, qids, q, probes):
+        return partial_topk(
+            part, qids, q, k, metric, metric_arg, label_col, vec_col,
+            cluster_col, probes, dtype, sq8,
+        )
+
+    return search_query_blocks(
+        corpus_df, queries_df, k, metric, kernel, qid_col, q_vec_col,
+        probe=probe if cluster_col else None, cluster_col=cluster_col, dtype=dtype,
+    )
 
 
 def assemble_lists(flat: DataFrame, k: int, metric: str) -> DataFrame:

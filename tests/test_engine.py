@@ -14,6 +14,7 @@ from duckdb_faiss_ext_spark import (
 )
 from duckdb_faiss_ext_spark.errors import (
     DimensionMismatch,
+    FaissSparkError,
     LabelModeMismatch,
     NonIDMapLabels,
     TrainingError,
@@ -179,14 +180,18 @@ def test_ivf_add_rejects_null_vector_elements(engine, spark):
 
 
 def test_null_corpus_element_raises_on_every_route(engine, spark):
-    """A Flat add stores a row with a NULL element (only ``size()`` is
-    validated); a search must then fail on the driver route as it does on
-    the bulk route, not drop the row as a NaN score."""
+    """A Flat add with ``validate=False`` stores a row with a NULL element;
+    a search must then fail on the driver route as it does on the bulk
+    route, not drop the row as a NaN score."""
     x = gen_vectors(6, 4)
     rows = [(i, [float(v) for v in r]) for i, r in enumerate(x)]
     rows.append((6, [0.0, None, 0.0, 0.0]))
     engine.create("nullc", 4, "IDMap,Flat")
-    engine.add("nullc", spark.createDataFrame(rows, "label bigint, vector array<float>"))
+    engine.add(
+        "nullc",
+        spark.createDataFrame(rows, "label bigint, vector array<float>"),
+        validate=False,
+    )
     assert engine.registry.get("nullc").count == 7
     q = _query_df(spark, x[:2])
     for bulk in (0, 1):
@@ -194,6 +199,30 @@ def test_null_corpus_element_raises_on_every_route(engine, spark):
             engine.search_flat(
                 "nullc", 3, q, params={"bulk_queries": bulk}
             ).collect()
+
+
+@pytest.mark.parametrize(
+    "factory", ["IDMap,Flat", "IDMap,IVF4", "IDMap,Flat,SQ8", "IDMap,PQ2", "IDMap,HNSW8"]
+)
+def test_ingest_rejects_null_and_nan_elements(engine, spark, factory):
+    """A NULL or a NaN vector element fails the add at the ingest check, on
+    labeled and unlabeled adds and on every tier, and stores no row."""
+    x = gen_vectors(40, 4)
+    for bad in (None, float("nan")):
+        for labeled in (True, False):
+            rows = [[float(v) for v in r] for r in x] + [[0.0, bad, 0.0, 0.0]]
+            name = f"bad_{bad is None:d}{labeled:d}"
+            engine.create(name, 4, factory)
+            if labeled:
+                df = spark.createDataFrame(
+                    list(enumerate(rows)), "label bigint, vector array<float>"
+                )
+            else:
+                df = spark.createDataFrame([(r,) for r in rows], "vector array<float>")
+            with pytest.raises(FaissSparkError, match="NULL element"):
+                engine.add(name, df)
+            assert engine.registry.get(name).count == 0
+            assert engine.registry.get(name).data is None
 
 
 def test_exact_ties_keep_smaller_label_whatever_the_row_order(engine, spark):

@@ -5,6 +5,7 @@ from duckdb_faiss_ext_spark.errors import InvalidMetric
 from duckdb_faiss_ext_spark.metrics import (
     METRICS,
     is_descending,
+    merge_running_topk,
     pairwise,
     resolve_metric,
     topk_indices,
@@ -87,6 +88,38 @@ def test_topk_ties_break_by_index():
     assert idx.tolist() == [[1, 2]]  # tie on 2.0 -> smaller index first
     idx, _ = topk_indices(scores, 2, descending=False)
     assert idx.tolist() == [[3, 0]]
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_topk_ties_break_by_label(dtype):
+    """``labels=``: a tie keeps the smaller label, wherever its column sits
+    — on the float32 composite-key path (n > 4k) and the stable-sort path."""
+    scores = np.zeros((2, 12), dtype=dtype)
+    scores[1, :] = np.arange(12)
+    labels = np.array([40, 30, 20, 10] + list(range(101, 109)))
+    for desc in (True, False):
+        idx, _ = topk_indices(scores, 2, desc, labels=labels)
+        assert labels[idx[0]].tolist() == [10, 20]
+        assert idx[1].tolist() == ([11, 10] if desc else [0, 1])
+    # sorted labels tie-break exactly like the column index
+    idx, _ = topk_indices(scores, 2, True, labels=np.arange(12) * 3)
+    assert idx[0].tolist() == [0, 1]
+    # the short path (n <= 4k) keeps the same label order
+    idx, _ = topk_indices(scores[:, :4], 3, False, labels=labels[:4])
+    assert labels[idx[0]].tolist() == [10, 20, 30]
+
+
+def test_merge_running_topk_keeps_smaller_ids():
+    ids, sc = merge_running_topk(
+        None, None, np.array([[40, 7]]), np.array([[0.0, 1.0]]), 2, False
+    )
+    assert ids.tolist() == [[40, 7]]
+    ids, sc = merge_running_topk(
+        ids, sc, np.array([[10, 3]]), np.array([[0.0, 5.0]]), 2, False
+    )
+    assert ids.tolist() == [[10, 40]] and sc.tolist() == [[0.0, 0.0]]
+    ids, _ = merge_running_topk(ids, sc, np.array([[2]]), np.array([[9.0]]), 2, True)
+    assert ids.tolist() == [[2, 10]]
 
 
 def test_topk_k_larger_than_n():

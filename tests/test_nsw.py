@@ -18,6 +18,7 @@ from duckdb_faiss_ext_spark.operators.nsw import (
     build_slice_graphs,
     nsw_topk,
 )
+from duckdb_faiss_ext_spark.operators.topk import merge_topk
 
 from conftest import gen_vectors
 
@@ -138,7 +139,9 @@ class TestSparkGraphs:
         g = build_slice_graphs(df, m=16, metric="L2").persist()
         g.count()
         q = x[:10]
-        res = nsw_topk(g, np.arange(10), q, 5, ef=256, metric="L2").collect()
+        res = merge_topk(
+            nsw_topk(g, np.arange(10), q, 5, ef=256, metric="L2"), 5, "L2"
+        ).collect()
         gold, _ = topk_indices(pairwise(q, x, "L2", 0.0), 5, False)
         got = {}
         for r in res:
@@ -308,5 +311,5 @@ def test_oversized_group_splits_into_bounded_graphs(spark):
     assert g.filter(F.col("cluster_id") != 7).count() == 0
     # self-queries across all pieces: every query's rank-0 hit is itself
     qids = np.arange(0, n, 500)
-    res = nsw_topk(g, qids, x[qids], 1, ef=64, metric="L2").collect()
+    res = merge_topk(nsw_topk(g, qids, x[qids], 1, ef=64, metric="L2"), 1, "L2").collect()
     assert {r["qid"]: r["label"] for r in res} == {int(q): int(q) for q in qids}

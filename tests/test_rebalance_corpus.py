@@ -37,8 +37,8 @@ def _hist(idx):
     return {int(r["cluster_id"]): int(r["count"]) for r in rows}
 
 
-def _build(spark, x, name, factory=f"IDMap,IVF{NLIST}", params=None):
-    eng = FaissSparkEngine(spark)
+def _build(spark, x, name, factory=f"IDMap,IVF{NLIST}", params=None, eng=None):
+    eng = eng or FaissSparkEngine(spark)
     base = {"train_points_per_centroid": "32"}  # small sample => real drift
     eng.create(name, x.shape[1], factory, metric_type="L2",
                params={**base, **(params or {})})
@@ -399,3 +399,27 @@ def test_append_auto_rebalance_floor_regime_counts_as_success(spark):
     # restored-under-the-operative-cap = SUCCESS: no warning, no latch
     assert not drift, [str(c.message) for c in drift]
     assert idx.append_rebalance_floor is None
+
+
+def test_rebalance_split_ignores_physical_row_order(spark):
+    """Two copies of one skewed index whose stored rows differ only in
+    physical order (one re-sorted by descending label) split into the same
+    children: the offenders' sample is a label hash, truncated in label
+    order, never the rows a partition happened to yield first."""
+    x = _skewed()
+    eng = _build(spark, x, "cr_order_a", params={"rebalance_clusters": "0"})
+    _build(spark, x, "cr_order_b", params={"rebalance_clusters": "0"}, eng=eng)
+    a, b = eng.registry.get("cr_order_a"), eng.registry.get("cr_order_b")
+    assert np.array_equal(a.centroids, b.centroids)
+    flipped = b.data.orderBy(F.col("label").desc()).persist()
+    assert flipped.count() == N
+    b.data, b.slices, b.slice_caches = flipped, [flipped], [flipped]
+    out = {}
+    for idx in (a, b):
+        idx.params["rebalance_clusters"] = "1"
+        out[idx.name] = eng.rebalance(idx.name)
+    assert out["cr_order_a"]["splits"] > 0
+    assert out["cr_order_a"] == out["cr_order_b"]
+    assert np.array_equal(a.centroids, b.centroids)
+    assert np.array_equal(a.cluster_counts, b.cluster_counts)
+    assert _hist(a) == _hist(b)
