@@ -44,6 +44,7 @@ from duckdb_faiss_ext_spark.errors import (
 from duckdb_faiss_ext_spark.factory import parse_factory
 from duckdb_faiss_ext_spark.metrics import (
     is_descending,
+    kmeans,
     nearest_centroid,
     pairwise,
     resolve_metric,
@@ -222,14 +223,16 @@ class FaissSparkEngine:
             )
         return out, labeled
 
-    def _latch_label_mode(self, idx: FaissIndex, labeled: bool) -> None:
+    def _check_label_mode(self, idx: FaissIndex, labeled: bool) -> str:
+        """The label mode this add latches once its rows are stored; raises
+        if the index cannot take it.  Writes nothing: an add that fails
+        before storing leaves the index's mode undecided."""
         if labeled and not idx.spec.idmap:
             raise NonIDMapLabels(idx.name)
         want = LABEL_TRUE if labeled else LABEL_FALSE
-        if idx.label_mode == LABEL_UNDECIDED:
-            idx.label_mode = want
-        elif idx.label_mode != want:
-            raise LabelModeMismatch(idx.name, labeled)
+        if idx.label_mode not in (LABEL_UNDECIDED, want):
+            raise LabelModeMismatch(idx.name, idx.label_mode == LABEL_TRUE)
+        return want
 
     def _validate_dim(self, idx: FaissIndex, df: DataFrame) -> None:
         """The ingest check: the first row whose size is not the index dim
@@ -393,7 +396,7 @@ class FaissSparkEngine:
         self._route_cache.clear()
         # 1. normalize
         vecs, labeled = self._normalize_add_df(idx, df)
-        self._latch_label_mode(idx, labeled)
+        label_mode = self._check_label_mode(idx, labeled)
         # 2. ids / validate
         cache_parent = None
         pre_count = None
@@ -503,6 +506,7 @@ class FaissSparkEngine:
                 cache_parent = None  # the slice owns it now
             else:
                 self._add_memory(idx, vecs, rebuild)
+            idx.label_mode = label_mode
             # 9. post-checks
             if rebuild:
                 # train-time adds see the whole corpus: enforce the skew cap
@@ -652,13 +656,18 @@ class FaissSparkEngine:
         self._compact_index(idx, full=full)
 
     @staticmethod
-    def _pick_merge_set(sizes: list, eligible: list) -> list:
+    def _pick_merge_set(sizes: list, eligible: list, force: bool = False) -> list:
         """Geometric merge policy: scanning eligible slices smallest-first,
         accumulate while the next slice is at most 2x the accumulated total.
         The merged result is then >= 1.5x its largest member, so any row's
         slice grows geometrically across the rebuilds it participates in —
         the O(n log n) total-work invariant.  Returns the chosen indexes
-        (possibly empty; a single slice never merges with itself)."""
+        (possibly empty; a single slice never merges with itself).
+
+        ``force`` (the slice count reached MAX_SLICES): a pathological size
+        spread (exponentially growing batches) still merges the two
+        smallest eligible slices, so the lineage / directory count stays
+        bounded."""
         order = sorted(eligible, key=lambda i: sizes[i])
         picked: list = []
         total = 0
@@ -667,6 +676,8 @@ class FaissSparkEngine:
                 break
             picked.append(i)
             total += sizes[i]
+        if len(picked) < 2 and force:
+            picked = order[:2]
         return picked if len(picked) >= 2 else []
 
     def _union_slices(self, frames: list) -> DataFrame:
@@ -766,11 +777,9 @@ class FaissSparkEngine:
         if is_graph:
             full_rows = int(idx.params.get("graph_partition_rows", self.GRAPH_ROWS))
             micro = [i for i, r in enumerate(sizes) if r < full_rows]
-            picked = self._pick_merge_set(sizes, micro)
-            if not picked and len(idx.slices) >= self.MAX_SLICES and len(micro) >= 2:
-                # pathological size spread (exponentially growing batches):
-                # still bound the lineage by merging the two smallest micros
-                picked = sorted(micro, key=lambda i: sizes[i])[:2]
+            picked = self._pick_merge_set(
+                sizes, micro, force=len(idx.slices) >= self.MAX_SLICES
+            )
             if picked:
                 merged_rows = sum(sizes[i] for i in picked)
                 merged = self._rebuild_graph_over(
@@ -797,9 +806,11 @@ class FaissSparkEngine:
             # non-graph slices carry no adjacency: every merge is a cheap
             # re-cache, but still tiered so a long stream re-caches each row
             # O(log n) times instead of O(n/MAX_SLICES)
-            picked = self._pick_merge_set(sizes, list(range(len(sizes))))
-            if not picked and len(idx.slices) >= self.MAX_SLICES and len(sizes) >= 2:
-                picked = sorted(range(len(sizes)), key=lambda i: sizes[i])[:2]
+            picked = self._pick_merge_set(
+                sizes,
+                list(range(len(sizes))),
+                force=len(idx.slices) >= self.MAX_SLICES,
+            )
             if picked:
                 merged_rows = sum(sizes[i] for i in picked)
                 merged = self._union_slices(
@@ -864,7 +875,7 @@ class FaissSparkEngine:
             # ground-truth pass in rebalance() re-seeds it
             return
         nlist0 = max(int(idx.spec.nlist), 1)
-        cap = max(self.REBALANCE_CAP_SHARE * n / nlist0, 32.0)
+        cap = self._skew_cap(n, nlist0)
         if not n or counts.max() <= cap:
             return
         if int(idx.params.get("rebalance_on_append", 1)):
@@ -880,7 +891,7 @@ class FaissSparkEngine:
             # exceed CAP_SHARE (r11 review finding)
             if out is not None and idx.cluster_counts is not None:
                 n2 = int(idx.cluster_counts.sum())
-                cap2 = max(self.REBALANCE_CAP_SHARE * n2 / nlist0, 32.0)
+                cap2 = self._skew_cap(n2, nlist0)
                 if n2 and idx.cluster_counts.max() <= cap2:
                     idx.append_rebalance_floor = None
                     return
@@ -1152,10 +1163,9 @@ class FaissSparkEngine:
             picked = list(range(len(sizes)))
         else:
             micro = [i for i, r in enumerate(sizes) if r < full_rows]
-            picked = self._pick_merge_set(sizes, micro)
-            if not picked and len(sizes) >= self.MAX_SLICES and len(micro) >= 2:
-                # pathological size spread: still bound the directory count
-                picked = sorted(micro, key=lambda i: sizes[i])[:2]
+            picked = self._pick_merge_set(
+                sizes, micro, force=len(sizes) >= self.MAX_SLICES
+            )
         if picked and (full or len(picked) >= 2):
             merged_rows = sum(sizes[i] for i in picked)
             union = self._union_slices(
@@ -1371,12 +1381,6 @@ class FaissSparkEngine:
             sq8_decode_np,
             sq8_encode_np,
         )
-        from duckdb_faiss_ext_spark.metrics import (
-            is_descending,
-            pairwise,
-            resolve_metric,
-        )
-
         metric = resolve_metric(idx.metric)
         if metric not in ("L2", "INNER_PRODUCT", "COSINE"):
             return
@@ -1629,7 +1633,8 @@ class FaissSparkEngine:
         Init is k-means|| (Bahmani et al., VLDB 2012 — the same D²-weighted
         seeding family MLlib's default init uses): 2 oversampling rounds at
         l = 2*nlist, candidate weights from the nearest-candidate histogram,
-        then weighted k-means++ over the (small) candidate set driver-side.
+        then ``metrics.kmeans`` (weighted k-means++ and Lloyd) over the
+        (small) candidate set driver-side.
         r14 used FAISS-style random-subset init here, and on corpora whose
         natural clusters are far apart Lloyd cannot migrate a centroid
         across the gap — natural clusters that drew no seed ended up owned
@@ -1796,38 +1801,11 @@ class FaissSparkEngine:
                 return x[perm[np.arange(nlist) % n]].astype(np.float32)
             cmat = np.vstack(cand).astype(np.float64)
             w = np.bincount(near, minlength=ncand).astype(np.float64)
-            # weighted k-means++ (D² cumsum inversion, like
-            # _lloyd_np) over the ~4*nlist candidates — driver-side
-            # and cheap: the candidate set is O(nlist), not O(n)
-            seed = np.empty((nlist, d), dtype=np.float64)
-            cw = np.cumsum(w)
-            i0 = int(np.searchsorted(cw, rng.random() * cw[-1]))
-            seed[0] = cmat[min(i0, ncand - 1)]
-            cd2 = ((cmat - seed[0]) ** 2).sum(1)
-            for jj in range(1, nlist):
-                probs = np.cumsum(cd2 * w)
-                p = (
-                    int(np.searchsorted(probs, rng.random() * probs[-1]))
-                    if probs[-1] > 0
-                    else int(rng.integers(ncand))
-                )
-                seed[jj] = cmat[min(p, ncand - 1)]
-                cd2 = np.minimum(cd2, ((cmat - seed[jj]) ** 2).sum(1))
-            # a few weighted Lloyd passes polish the seed set (MLlib does
-            # the same local refinement over its candidate set)
-            cmn = (cmat**2).sum(1, keepdims=True)
-            for _it in range(5):
-                d2m = cmn - 2.0 * (cmat @ seed.T) + (seed**2).sum(1)[None, :]
-                lab = d2m.argmin(1)
-                order = np.argsort(lab, kind="stable")
-                sl = lab[order]
-                starts = np.concatenate(([0], np.flatnonzero(np.diff(sl)) + 1))
-                sums = np.add.reduceat(cmat[order] * w[order, None], starts, axis=0)
-                cnts = np.add.reduceat(w[order], starts)
-                ids = sl[starts]
-                ok = cnts > 0
-                seed[ids[ok]] = sums[ok] / cnts[ok][:, None]
-            return seed.astype(np.float32)
+            # weighted k-means++ and 5 weighted Lloyd passes over the
+            # ~4*nlist candidates (MLlib does the same local refinement
+            # over its candidate set) — driver-side and cheap: the
+            # candidate set is O(nlist), not O(n)
+            return kmeans(cmat, nlist, rng, 5, weights=w)
 
         try:
             # pin the shared OpenBLAS pool to 1 thread for the fan-out: 32
@@ -1913,6 +1891,15 @@ class FaissSparkEngine:
     # share (258k rows = 6.5% of corpus) — a single straggler partition that
     # bounds every probed search from below (SCALE.md r7, VERDICT r7 task 4).
     REBALANCE_CAP_SHARE = 4.0
+    # both rebalances copy the offenders' rows to the driver, biggest
+    # first, within this many bytes of f32 vectors: bounds driver memory
+    # even at dim 1536
+    REBALANCE_COPY_BYTES = 256e6
+
+    def _skew_cap(self, n: int, nlist: int) -> float:
+        """Rows a cluster may hold: ``REBALANCE_CAP_SHARE`` x the even share
+        of ``n`` rows over ``nlist``, and never under 32 rows."""
+        return max(self.REBALANCE_CAP_SHARE * n / nlist, 32.0)
 
     def _rebalance_oversize_clusters(
         self,
@@ -1944,14 +1931,12 @@ class FaissSparkEngine:
         n = int(counts.sum())
         if not n:
             return counts
-        cap = max(self.REBALANCE_CAP_SHARE * n / nlist, 32.0)
+        cap = self._skew_cap(n, nlist)
         over = [int(c) for c in np.argsort(-counts) if counts[c] > cap]
         if not over:
             return counts
         metric = idx.metric
         marg = idx.metric_arg
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
         desc = is_descending(metric)
         dim = idx.dim
         # donors: empty slots cost nothing; small slots are folded into
@@ -1978,9 +1963,8 @@ class FaissSparkEngine:
         # (a 1700-row blob at cap 500 split 538/418/384/360); the loop
         # below consumes donors only while a cluster is still over cap
         tiny = tiny[: max(0, splits_wanted + len(over) - len(empties))]
-        # one filtered collect, byte-budgeted (biggest offenders first):
-        # 256 MB of f32 vectors caps driver memory even at dim 1536
-        budget_rows = max(int(256e6 / (4 * dim)), 4096)
+        # one filtered collect, byte-budgeted (biggest offenders first)
+        budget_rows = max(int(self.REBALANCE_COPY_BYTES / (4 * dim)), 4096)
         wanted: list = []
         rows_planned = 0
         for c in over + tiny:
@@ -2059,31 +2043,22 @@ class FaissSparkEngine:
                         pts[int(t)] = np.vstack([pts[int(t)], pts[d][tgt == t]])
                 counts[d] = 0
                 pts[d] = mat[:0]
-            # seeded local 2-means (Lloyd, L2) over the oversize cluster;
-            # the FIT runs on a bounded subsample (the split boundary needs
-            # ~thousands of points, not the whole slab — a 258k-share
-            # cluster costs hundreds of sequential splits otherwise);
-            # expansion form keeps the temp at O(N*2), not O(N*2*dim)
+            # seeded local 2-means over the oversize cluster, on a bounded
+            # subsample (the split boundary needs ~thousands of points, not
+            # the whole slab — a 258k-share cluster costs hundreds of
+            # sequential splits otherwise).  Plain L2 even under IP: the
+            # re-partition below sees only the two children, so spherical
+            # children would hide an IP collapse from the histogram that
+            # _warn_if_degenerate_assignment reads
             p = pts[b]
             fit = (
                 p
                 if len(p) <= 4096
                 else p[rng.choice(len(p), 4096, replace=False)]
             )
-            sub = fit[rng.choice(len(fit), 2, replace=False)].astype(np.float64)
-            fn = (fit.astype(np.float64) ** 2).sum(1, keepdims=True)
-            for _it in range(6):
-                d2 = fn - 2.0 * (fit @ sub.T) + (sub**2).sum(1)[None, :]
-                lab = d2.argmin(1)
-                for j in (0, 1):
-                    sel = fit[lab == j]
-                    if len(sel):
-                        sub[j] = sel.mean(0)
-            cents[b] = sub[0].astype(np.float32)
-            cents[d] = sub[1].astype(np.float32)
+            cents[b], cents[d] = kmeans(fit, 2, rng, 6)
             # re-partition under the INDEX metric against the two new cents
-            two = np.vstack([cents[b], cents[d]])
-            s2 = pairwise(p, two, metric, marg)
+            s2 = pairwise(p, cents[[b, d]], metric, marg)
             lab = s2.argmax(1) if desc else s2.argmin(1)
             pts[b], pts[d] = p[lab == 0], p[lab == 1]
             counts[b], counts[d] = len(pts[b]), len(pts[d])
@@ -2099,61 +2074,13 @@ class FaissSparkEngine:
     # grouped-simjoin corpora with sample rebalance ON (SCALE.md r9).  At
     # 100x one such cluster lower-bounds every wide-nprobe search and every
     # grouped-simjoin stage.  After the corpus is assigned, clusters whose
-    # CORPUS count exceeds the cap are split k-ways (seeded numpy k-means on
-    # a bounded per-cluster sample, driver-side; nlist grows, bounded at 2x
+    # CORPUS count exceeds the cap are split k-ways (seeded metrics.kmeans
+    # on a bounded per-cluster sample, driver-side; nlist grows, bounded at 2x
     # the factory's) and ONLY the offenders' rows are reassigned among their
     # own children — a narrow map over the cluster layout (non-offender
     # batches never even deserialize vectors) plus one histogram-layout
     # shuffle to restore cluster co-location.
     REBALANCE_CORPUS_SAMPLE = 4096
-
-    @staticmethod
-    def _lloyd_np(
-        x: np.ndarray,
-        k: int,
-        seed: int = 42,
-        iters: int = 8,
-        spherical: bool = False,
-    ) -> np.ndarray:
-        """Seeded k-means++ (D² cumsum inversion) + Lloyd over a small numpy
-        sample, f64 under L2 — the split-boundary fitter for corpus
-        rebalance (f64 numerics, no empty-cluster repair: children that
-        collapse empty simply attract no rows).
-
-        ``spherical``: unit-normalize the children after every mean update
-        (faiss Clustering's spherical option) — REQUIRED when rows will be
-        reassigned under INNER_PRODUCT/COSINE: L2-mean children have
-        unequal norms, and an IP argmax then routes (nearly) every row to
-        the largest-norm child, burning the split without reducing the max
-        cluster (r10 review finding).  Unit-norm children make the IP
-        argmax a pure direction choice."""
-        rng = np.random.default_rng(seed)
-        x = x.astype(np.float64)
-        k = min(k, len(x))
-        cents = np.empty((k, x.shape[1]))
-        cents[0] = x[rng.integers(len(x))]
-        d2 = ((x - cents[0]) ** 2).sum(1)
-        for j in range(1, k):
-            c = np.cumsum(d2)
-            pick = (
-                int(np.searchsorted(c, rng.random() * c[-1]))
-                if c[-1] > 0
-                else int(rng.integers(len(x)))
-            )
-            cents[j] = x[min(pick, len(x) - 1)]
-            d2 = np.minimum(d2, ((x - cents[j]) ** 2).sum(1))
-        xn = (x**2).sum(1, keepdims=True)
-        for _ in range(max(1, iters)):
-            d2m = xn - 2.0 * (x @ cents.T) + (cents**2).sum(1)[None, :]
-            lab = d2m.argmin(1)
-            for j in range(k):
-                sel = x[lab == j]
-                if len(sel):
-                    cents[j] = sel.mean(0)
-            if spherical:
-                nrm = np.sqrt((cents**2).sum(1, keepdims=True))
-                np.divide(cents, nrm, out=cents, where=nrm > 0)
-        return cents.astype(np.float32)
 
     def rebalance(self, name: str) -> dict:
         """Public corpus-rebalance entry: enforce the ``REBALANCE_CAP_SHARE``
@@ -2197,8 +2124,6 @@ class FaissSparkEngine:
             or not int(idx.params.get("rebalance_clusters", 1))
         ):
             return None
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
         desc = is_descending(idx.metric)
         metric, marg = idx.metric, idx.metric_arg
         nlist0 = max(int(idx.spec.nlist), 1)
@@ -2263,7 +2188,7 @@ class FaissSparkEngine:
                 break
             # even share stays pinned to the FACTORY nlist — growth must
             # not move the goalposts it is chasing
-            cap = max(self.REBALANCE_CAP_SHARE * n / nlist0, 32.0)
+            cap = self._skew_cap(n, nlist0)
             stats["max_share"] = round(float(counts.max() * nlist0 / n), 2)
             over = [int(c) for c in np.argsort(-counts) if counts[c] > cap]
             if not over or growth_budget <= 0 or _pass == max_passes:
@@ -2281,11 +2206,10 @@ class FaissSparkEngine:
                 )
                 break
             prev_max = int(counts.max())
-            # bounded driver copy of the offenders' rows: biggest first,
-            # ~samp rows per cluster via seeded per-cluster sampling, and a
-            # 256 MB f32 byte budget overall (same rule as the sample-level
-            # rebalance)
-            budget_rows = max(int(256e6 / (4 * idx.dim)), 4096)
+            # bounded driver copy of the offenders' rows: ~samp rows per
+            # cluster via seeded per-cluster sampling, REBALANCE_COPY_BYTES
+            # overall
+            budget_rows = max(int(self.REBALANCE_COPY_BYTES / (4 * idx.dim)), 4096)
             take, planned = [], 0
             for c in over:
                 rows = int(min(counts[c], samp))
@@ -2331,18 +2255,13 @@ class FaissSparkEngine:
                 # pass rather than fanning out on a thin sample)
                 k_c = int(np.ceil(counts[c] / (0.5 * cap)))
                 k_c = max(2, min(k_c, 16, growth_budget + 1, len(p)))
-                from duckdb_faiss_ext_spark.metrics import resolve_metric
-
-                sub = self._lloyd_np(
-                    p, k_c, seed=9000 + c,
-                    # dot-selection metrics need unit-norm children (see
-                    # _lloyd_np docstring); L2-family keeps plain means
-                    spherical=resolve_metric(metric)
-                    in ("INNER_PRODUCT", "COSINE"),
+                # dot-selection metrics need unit-norm children (an IP
+                # argmax sends the rows to the largest-norm child);
+                # L2-family keeps plain means
+                sub = kmeans(
+                    p, k_c, np.random.default_rng(9000 + c), 8,
+                    spherical=resolve_metric(metric) in ("INNER_PRODUCT", "COSINE"),
                 )
-                k_c = len(sub)
-                if k_c < 2:
-                    continue
                 base_id = nlive + len(extras)
                 child_ids = np.array(
                     [c] + list(range(base_id, base_id + k_c - 1)), dtype=np.int64

@@ -46,8 +46,8 @@ class ImmutableIndex(FaissSparkError):
 class LabelModeMismatch(FaissSparkError):
     """Mixing labeled and unlabeled adds on one index (faiss_extension.cpp:444-452)."""
 
-    def __init__(self, name: str, labeled: bool):
-        mode = "with" if labeled else "without"
+    def __init__(self, name: str, stored_labeled: bool):
+        mode = "with" if stored_labeled else "without"
         super().__init__(
             f"Index {name} was previously added to {mode} labels; cannot mix label modes"
         )

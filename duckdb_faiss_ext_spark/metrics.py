@@ -235,6 +235,61 @@ def merge_running_topk(
     return new_ids[rows, order], new_scores[rows, order]
 
 
+def kmeans(
+    x: np.ndarray,
+    k: int,
+    rng: np.random.Generator,
+    iters: int,
+    weights: np.ndarray = None,
+    spherical: bool = False,
+) -> np.ndarray:
+    """(min(k, n), d) float32 centres of a small driver-side k-means: the
+    one fitter for the IVF fit's seed set, both rebalance splits and the
+    PQ codebooks (FAISS trains them all through one ``Clustering``).
+
+    Weighted D² (k-means++) seeding by cumsum inversion, then ``iters``
+    weighted Lloyd passes in float64 under squared L2 (sort + ``reduceat``
+    means).  A centre whose cluster is empty stays where it is.
+    ``weights`` defaults to 1 per row.  ``spherical`` unit-normalizes the
+    centres after every mean update, as FAISS's spherical option does:
+    centres that will take rows by an INNER_PRODUCT/COSINE argmax must
+    have equal norms, or the largest-norm one takes (nearly) every row."""
+    x = np.asarray(x, dtype=np.float64)
+    n = len(x)
+    k = min(k, n)
+    w = np.ones(n) if weights is None else np.asarray(weights, dtype=np.float64)
+    cents = np.empty((k, x.shape[1]), dtype=np.float64)
+    cw = np.cumsum(w)
+    i0 = int(np.searchsorted(cw, rng.random() * cw[-1]))
+    cents[0] = x[min(i0, n - 1)]
+    cd2 = ((x - cents[0]) ** 2).sum(1)
+    for j in range(1, k):
+        probs = np.cumsum(cd2 * w)
+        p = (
+            int(np.searchsorted(probs, rng.random() * probs[-1]))
+            if probs[-1] > 0
+            else int(rng.integers(n))
+        )
+        cents[j] = x[min(p, n - 1)]
+        cd2 = np.minimum(cd2, ((x - cents[j]) ** 2).sum(1))
+    xn = (x**2).sum(1, keepdims=True)
+    for _ in range(iters):
+        d2 = xn - 2.0 * (x @ cents.T) + (cents**2).sum(1)[None, :]
+        lab = d2.argmin(1)
+        order = np.argsort(lab, kind="stable")
+        sl = lab[order]
+        starts = np.concatenate(([0], np.flatnonzero(np.diff(sl)) + 1))
+        sums = np.add.reduceat(x[order] * w[order, None], starts, axis=0)
+        cnts = np.add.reduceat(w[order], starts)
+        ids = sl[starts]
+        ok = cnts > 0
+        cents[ids[ok]] = sums[ok] / cnts[ok][:, None]
+        if spherical:
+            nrm = np.sqrt((cents**2).sum(1, keepdims=True))
+            np.divide(cents, nrm, out=cents, where=nrm > 0)
+    return cents.astype(np.float32)
+
+
 def nearest_centroid(
     x: np.ndarray, cents: np.ndarray, metric: str, metric_arg: float = 0.0
 ) -> np.ndarray:

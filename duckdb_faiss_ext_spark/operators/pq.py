@@ -10,8 +10,10 @@ fits in a fraction of the I/O.
 
 Pipeline:
 
-1. ``pq_train``: numpy Lloyd's k-means per subspace on a driver-side sample
-   (mirrors FAISS training on a subsample; 256 codes/subspace ⇒ uint8);
+1. ``pq_train``: ``metrics.kmeans`` per subspace on a driver-side sample
+   (k-means++ seeds, 12 Lloyd passes — FAISS trains each sub-quantizer
+   through the same ``Clustering`` as the coarse one; 256 codes/subspace
+   ⇒ uint8);
 2. ``pq_encode``: mapInArrow over the corpus — one matmul per subspace per
    batch, output (label, code ARRAY<SMALLINT>);  narrow map, no shuffle;
 3. ``pq_search``: per query build the (m, 256) lookup table of
@@ -29,7 +31,12 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from duckdb_faiss_ext_spark.metrics import merge_running_topk, topk_indices
+from duckdb_faiss_ext_spark.metrics import (
+    kmeans,
+    merge_running_topk,
+    nearest_centroid,
+    topk_indices,
+)
 from duckdb_faiss_ext_spark.operators.topk import merge_topk, vector_matrix
 
 __all__ = [
@@ -43,24 +50,6 @@ __all__ = [
 # one query block's ADC lookup tables (ln * m * nk * 4 B) must stay under
 # this; pq_search_grouped shrinks its query-side block size to fit
 LUT_BLOCK_BUDGET_BYTES = 64 << 20
-
-
-def _kmeans_np(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.ndarray:
-    """Plain Lloyd's on a small sample (driver-side).  Returns (k, d)."""
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=min(k, len(x)), replace=False)].copy()
-    for _ in range(iters):
-        d2 = (
-            (x**2).sum(1)[:, None]
-            - 2.0 * (x @ cents.T)
-            + (cents**2).sum(1)[None, :]
-        )
-        assign = d2.argmin(1)
-        for c in range(len(cents)):
-            mask = assign == c
-            if mask.any():
-                cents[c] = x[mask].mean(0)
-    return cents
 
 
 def pq_train(
@@ -94,13 +83,11 @@ def pq_train(
     tbl = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample).toArrow()
     x = vector_matrix(tbl.column(vec_col).combine_chunks(), dim, "PQ training sample")
     if centroids is not None:
-        from duckdb_faiss_ext_spark.metrics import nearest_centroid
-
         x = x - centroids[nearest_centroid(x, centroids, metric, metric_arg)]
     x = x.reshape(-1, m, sub)
     return np.stack(
-        [_kmeans_np(x[:, j, :], k, seed=seed + j) for j in range(m)]
-    ).astype(np.float32)
+        [kmeans(x[:, j, :], k, np.random.default_rng(seed + j), 12) for j in range(m)]
+    )
 
 
 def pq_encode(

@@ -36,6 +36,22 @@ def _segments(idx):
     return idx.data.select("graph_seg").distinct().count()
 
 
+def test_merge_policy_without_spark():
+    """``_pick_merge_set``: a geometric run merges, a lone slice never
+    merges, and ``force`` (MAX_SLICES reached) merges the two smallest even
+    when every slice is more than double the sum of those below it."""
+    pick = FaissSparkEngine._pick_merge_set
+    assert pick([10, 12, 20, 100, 1000], [0, 1, 2, 3, 4]) == [0, 1, 2]
+    assert pick([100, 20, 12, 10], [0, 1, 2, 3]) == [3, 2, 1]
+    for force in (False, True):
+        assert pick([5], [0], force=force) == []
+        assert pick([5, 6, 7], [1], force=force) == []
+    spread = [64, 1, 16, 4]  # each more than double everything smaller
+    assert pick(spread, [0, 1, 2, 3]) == []
+    assert pick(spread, [0, 1, 2, 3], force=True) == [1, 3]
+    assert pick(spread, [0, 2], force=True) == [2, 0]
+
+
 def test_max_slices_compaction_rebuilds_graphs(spark, eng):
     """After the MAX_SLICES-th add, micro-segment graphs are rebuilt into
     ceil(n / graph_partition_rows) full segments."""

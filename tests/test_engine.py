@@ -19,6 +19,7 @@ from duckdb_faiss_ext_spark.errors import (
     NonIDMapLabels,
     TrainingError,
 )
+from duckdb_faiss_ext_spark.registry import LABEL_FALSE, LABEL_UNDECIDED
 
 
 @pytest.fixture()
@@ -151,6 +152,23 @@ def test_label_mode_latch(engine, spark, vectors8):
     engine.add("latch", _vec_df(spark, vectors8[:5], np.arange(5)))
     with pytest.raises(LabelModeMismatch):
         engine.add("latch", _vec_df(spark, vectors8[5:10]))
+
+
+def test_rejected_add_does_not_latch_label_mode(engine, spark):
+    """An add the ingest check refuses stores no rows, so it must not decide
+    the index's label mode; the mismatch error names the STORED mode."""
+    engine.create("unlatched", 2, "IDMap,Flat")
+    with pytest.raises(DimensionMismatch):
+        engine.add("unlatched", _vec_df(spark, np.ones((3, 3)), np.arange(3)))
+    idx = engine.registry.get("unlatched")
+    assert idx.label_mode == LABEL_UNDECIDED and idx.count == 0
+    engine.add("unlatched", _vec_df(spark, np.ones((4, 2))))
+    assert idx.label_mode == LABEL_FALSE and idx.count == 4
+
+    engine.create("labeled", 2, "IDMap,Flat")
+    engine.add("labeled", _vec_df(spark, np.ones((3, 2)), np.arange(3)))
+    with pytest.raises(LabelModeMismatch, match="added to with labels"):
+        engine.add("labeled", _vec_df(spark, np.ones((3, 2))))
 
 
 def test_dimension_mismatch(engine, spark):

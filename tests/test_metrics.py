@@ -1,10 +1,15 @@
+import ast
+from pathlib import Path
+
 import numpy as np
 import pytest
 
+import duckdb_faiss_ext_spark
 from duckdb_faiss_ext_spark.errors import InvalidMetric
 from duckdb_faiss_ext_spark.metrics import (
     METRICS,
     is_descending,
+    kmeans,
     merge_running_topk,
     pairwise,
     resolve_metric,
@@ -152,3 +157,101 @@ def test_topk_all_nan_row():
     # k slots are still returned (all NaN); downstream isfinite-drop removes them
     assert idx.shape == (1, 3)
     assert np.isnan(sc).all()
+
+
+# ---------------------------------------------------------------- kmeans
+
+
+def test_kmeans_same_seed_same_centres():
+    x = np.random.default_rng(0).standard_normal((300, 6))
+    a = kmeans(x, 8, np.random.default_rng(5), 10)
+    b = kmeans(x, 8, np.random.default_rng(5), 10)
+    assert a.dtype == np.float32 and a.shape == (8, 6)
+    np.testing.assert_array_equal(a, b)
+
+
+def test_kmeans_integer_weights_match_repeated_rows():
+    # small integers keep every sum exact, so weighting a row by w and
+    # repeating it w times must give the same seeds AND the same Lloyd means
+    rng = np.random.default_rng(1)
+    x = rng.integers(0, 20, (40, 3)).astype(np.float64)
+    w = rng.integers(1, 5, 40)
+    rep = np.repeat(x, w, axis=0)
+    for iters in (0, 6):
+        a = kmeans(x, 5, np.random.default_rng(7), iters, weights=w)
+        b = kmeans(rep, 5, np.random.default_rng(7), iters)
+        np.testing.assert_array_equal(a, b)
+    # the Lloyd passes moved the seeds, so the update itself was compared
+    seeds = kmeans(x, 5, np.random.default_rng(7), 0, weights=w)
+    assert not np.array_equal(seeds, a)
+
+
+def test_kmeans_spherical_unit_norm():
+    x = np.random.default_rng(2).standard_normal((200, 8)) * 3.0 + 1.0
+    c = kmeans(x, 6, np.random.default_rng(0), 5, spherical=True)
+    np.testing.assert_allclose(np.linalg.norm(c, axis=1), 1.0, atol=1e-6)
+    plain = kmeans(x, 6, np.random.default_rng(0), 5)
+    assert not np.allclose(np.linalg.norm(plain, axis=1), 1.0, atol=1e-3)
+
+
+def test_kmeans_clamps_k_to_n():
+    x = np.random.default_rng(3).standard_normal((3, 4)).astype(np.float32)
+    c = kmeans(x, 10, np.random.default_rng(0), 4)
+    assert c.shape == (3, 4) and c.dtype == np.float32
+    # one centre per row: each row is its own cluster's mean
+    np.testing.assert_allclose(np.sort(c, axis=0), np.sort(x, axis=0), atol=1e-6)
+
+
+def test_kmeans_recovers_planted_blobs():
+    rng = np.random.default_rng(4)
+    centers = rng.choice([-10.0, 10.0], size=(6, 5))
+    centers[:, 0] = np.arange(6) * 20.0  # all six distinct and far apart
+    x = np.vstack([c + 0.2 * rng.standard_normal((80, 5)) for c in centers])
+    c = kmeans(x, 6, np.random.default_rng(9), 10)
+    d = ((centers[:, None, :] - c[None, :, :]) ** 2).sum(2)
+    # a one-to-one match, each fitted centre within the blob's noise
+    assert sorted(d.argmin(1)) == list(range(6))
+    assert d.min(1).max() < 0.1
+
+
+def _package_functions():
+    root = Path(duckdb_faiss_ext_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if isinstance(fn, ast.FunctionDef):
+                yield path, fn
+
+
+def _is_np_call(node, name):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+    )
+
+
+def test_one_d2_seeding():
+    """``metrics.kmeans`` is the package's one D² seeder (an
+    ``np.searchsorted`` over an ``np.cumsum``), and the per-caller k-means
+    copies it replaced stay gone."""
+    sites = []
+    names = set()
+    for path, fn in _package_functions():
+        names.add(fn.name)
+        nodes = list(ast.walk(fn))
+        cumsums = {
+            t.id
+            for n in nodes
+            if isinstance(n, ast.Assign) and _is_np_call(n.value, "cumsum")
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in nodes:
+            if _is_np_call(n, "searchsorted") and n.args:
+                arr = n.args[0]
+                if _is_np_call(arr, "cumsum") or (
+                    isinstance(arr, ast.Name) and arr.id in cumsums
+                ):
+                    sites.append((path.name, fn.name))
+    assert sorted(set(sites)) == [("metrics.py", "kmeans")], sites
+    assert not names & {"_lloyd_np", "_kmeans_np"}
