@@ -2888,9 +2888,9 @@ class FaissSparkEngine:
 
         The driver route is ``search_query_blocks`` with the PQ kernel:
         query side streams in bounded blocks (same contract as the exact
-        kernel); per chunk the probed-cluster union becomes a JVM IN-filter on
-        ``cluster_id`` — on cluster-partitioned storage that is directory/
-        row-group pruning, so a chunk only scans the codes its queries probe.
+        kernel); per chunk the probed-cluster union becomes a JVM pre-filter on
+        ``cluster_id`` — on cluster-partitioned storage that is directory
+        pruning, so a chunk only scans the codes its queries probe.
         SCORING is per-query (r4): each query's lookup tables cover exactly
         ITS nprobe probed clusters, and rows outside them score worst — a
         query does NOT receive candidates from clusters only its chunk-mates
@@ -3017,7 +3017,7 @@ class FaissSparkEngine:
         honoring ``efSearch``, through ``search_query_blocks`` — the same
         chunk loop and bounded nq*k ``merge_topk`` as the exact kernel.
         IVF_HNSW composes coarse routing with beams: per chunk the
-        probed-cluster union becomes a JVM IN-filter and each query beams
+        probed-cluster union becomes a JVM pre-filter and each query beams
         ONLY its own probed clusters (probe_groups)."""
         from duckdb_faiss_ext_spark.operators.nsw import nsw_topk
 

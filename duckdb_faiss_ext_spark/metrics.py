@@ -259,10 +259,17 @@ def kmeans(
     k = min(k, n)
     w = np.ones(n) if weights is None else np.asarray(weights, dtype=np.float64)
     cents = np.empty((k, x.shape[1]), dtype=np.float64)
+    xn = (x**2).sum(1)
+
+    def d2_to(c):
+        # ||x||^2 - 2 x.c + ||c||^2: one matvec per seed, not an (n, d)
+        # temporary; clamped, since cancellation can dip just below 0
+        return np.maximum(xn - 2.0 * (x @ c) + c @ c, 0.0)
+
     cw = np.cumsum(w)
     i0 = int(np.searchsorted(cw, rng.random() * cw[-1]))
     cents[0] = x[min(i0, n - 1)]
-    cd2 = ((x - cents[0]) ** 2).sum(1)
+    cd2 = d2_to(cents[0])
     for j in range(1, k):
         probs = np.cumsum(cd2 * w)
         p = (
@@ -271,8 +278,8 @@ def kmeans(
             else int(rng.integers(n))
         )
         cents[j] = x[min(p, n - 1)]
-        cd2 = np.minimum(cd2, ((x - cents[j]) ** 2).sum(1))
-    xn = (x**2).sum(1, keepdims=True)
+        cd2 = np.minimum(cd2, d2_to(cents[j]))
+    xn = xn[:, None]
     for _ in range(iters):
         d2 = xn - 2.0 * (x @ cents.T) + (cents**2).sum(1)[None, :]
         lab = d2.argmin(1)

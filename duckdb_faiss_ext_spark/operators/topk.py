@@ -485,7 +485,7 @@ def search_query_blocks(
             probes = probe(q)
             if len(qids) > 1:
                 # group queries by their first probed cluster so each chunk's
-                # cluster-union (the JVM pre-filter's IN-list) stays tight; an
+                # cluster-union (the JVM pre-filter's id array) stays tight; an
                 # unsorted diverse batch probes ~every cluster per chunk and
                 # the pre-filter degenerates to a full scan
                 order = np.argsort(probes.min(axis=1), kind="stable")
@@ -496,15 +496,17 @@ def search_query_blocks(
             if probes is not None:
                 cprobes = probes[lo : lo + chunk]
                 # JVM-side scan reduction: rows in clusters no query probes
-                # never reach the Python kernel.  On cluster-partitioned
-                # storage this IN-filter becomes partition/row-group pruning
-                # (the I/O lever); inside the kernel the probe ids drive
-                # per-cluster scoring, so the work tracks the per-query
-                # scan fraction even when the chunk's cluster-union covers
-                # most of the corpus (the compute lever — SCALE.md r6
-                # point 2).
-                probed = [int(c) for c in np.unique(cprobes)]
-                part = corpus_df.filter(F.col(cluster_col).isin(probed))
+                # never reach the Python kernel; inside the kernel the probe
+                # ids drive per-cluster scoring, so the work tracks the
+                # per-query scan fraction even when the chunk's
+                # cluster-union covers most of the corpus (the compute
+                # lever — SCALE.md r6 point 2).  The ids ride in ONE array
+                # literal, which codegen passes as a reference object, so
+                # the generated filter is the same class on every call; an
+                # ``isin`` would inline each id into the source and compile
+                # 2-3 new classes per read with a new probe set.
+                probed = F.lit(np.unique(cprobes).astype(np.int32).tolist())
+                part = corpus_df.filter(F.array_contains(probed, F.col(cluster_col)))
             partials.append(
                 kernel(part, qids[lo : lo + chunk], q[lo : lo + chunk], cprobes)
             )

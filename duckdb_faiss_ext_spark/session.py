@@ -21,6 +21,27 @@ plans as a ``LocalRelation``.  A Python list (or an empty pandas frame)
 becomes a Python RDD instead, and running it starts PySpark's RDD worker
 pool (a second ``pyspark.daemon`` with one worker per core) beside the SQL
 one; on a 4-core VM that pool held ~300 MB of a ~1.75 GB serving process.
+
+The driver JVM (in local mode also the executor) runs one JIT policy,
+``_JIT_POLICY``: two compiler threads (one C1, one C2) and C2 thresholds at
+10x HotSpot's defaults, so only code that stays hot is compiled for peak
+speed.  It goes in as ``spark.driver.defaultJavaOptions``, set before
+``extra_conf``: a caller's own ``defaultJavaOptions`` replaces it, and a
+caller's ``extraJavaOptions`` applies beside it.  Cluster executors keep
+their own JVM options.  Why: with the default JIT the compiler threads were
+the largest named CPU share of a short serving cycle (perfbench ``serve``,
+4-core VM: 2.8 of 10.8 CPU-s a cycle, and 6.1 s of JIT compile time).  The
+policy was chosen by measurement among C1 only, later C2 thresholds, fewer
+compiler threads and a larger code cache (table in README, "JIT policy").  C1
+only (``-XX:TieredStopAtLevel=1``) saved the most on short calls, but its
+code is slower on long JVM-side scans: at 1M x 64, exact k-NN took 4.2-4.3 s
+against 3.6, IVF nprobe-16 5.5-6.1 s against 3.2, bulk IVF 9.6-11.1 s
+against 5.1 and the SQ8 build 24-30 s against 5.3-5.7.  Over three runs this
+policy read those keys at 3.0-3.7, 2.7-3.3, 3.4-4.9 and 4.1-6.3 s (the
+default: 3.1-3.6, 2.8-3.2, 3.7-5.2 and 3.6-5.7 s), and it cuts ``serve``'s
+cycle CPU by 16 % (``dedup``'s by 22 %).  The trade left: on a many-core
+host, two compiler threads warm a cold JVM more slowly than the default's
+dozen.
 """
 
 from __future__ import annotations
@@ -30,6 +51,14 @@ from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# the driver JVM's JIT policy (see the module docstring): two compiler
+# threads, one C1 and one C2, and tier-4 (C2) thresholds at 10x the defaults
+_JIT_POLICY = (
+    "-XX:CICompilerCount=2 -XX:Tier4InvocationThreshold=50000 "
+    "-XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 "
+    "-XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def get_spark(
@@ -43,6 +72,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        # set before extra_conf: a caller's own defaultJavaOptions replaces
+        # the policy, a caller's extraJavaOptions applies beside it
+        .config("spark.driver.defaultJavaOptions", _JIT_POLICY)
         # AQE: runtime coalescing of shuffle partitions + skew-join splitting.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -214,6 +214,85 @@ def test_kmeans_recovers_planted_blobs():
     assert d.min(1).max() < 0.1
 
 
+def _kmeans_elementwise(x, k, rng, iters, weights=None):
+    """``kmeans`` as it was before its D² seeding took the expansion form:
+    each seed's distances were an elementwise ``((x - c) ** 2).sum(1)``."""
+    x = np.asarray(x, dtype=np.float64)
+    n = len(x)
+    w = np.ones(n) if weights is None else np.asarray(weights, dtype=np.float64)
+    cents = np.empty((k, x.shape[1]))
+    cw = np.cumsum(w)
+    cents[0] = x[min(int(np.searchsorted(cw, rng.random() * cw[-1])), n - 1)]
+    cd2 = ((x - cents[0]) ** 2).sum(1)
+    for j in range(1, k):
+        probs = np.cumsum(cd2 * w)
+        p = int(np.searchsorted(probs, rng.random() * probs[-1]))
+        cents[j] = x[min(p, n - 1)]
+        cd2 = np.minimum(cd2, ((x - cents[j]) ** 2).sum(1))
+    for _ in range(iters):
+        lab = _labels(x, cents)
+        for c in range(k):
+            sel = lab == c
+            if sel.any():
+                cents[c] = (x[sel] * w[sel, None]).sum(0) / w[sel].sum()
+    return cents.astype(np.float32)
+
+
+def _labels(x, cents):
+    x, cents = np.asarray(x, np.float64), np.asarray(cents, np.float64)
+    return ((x**2).sum(1)[:, None] - 2.0 * x @ cents.T + (cents**2).sum(1)).argmin(1)
+
+
+def _agreement(a, b, k):
+    """Share of rows with the same label after a greedy one-to-one matching
+    of the two fits' cluster ids."""
+    table = np.zeros((k, k), dtype=np.int64)
+    np.add.at(table, (a, b), 1)
+    hit = 0
+    while table.max() > 0:
+        i, j = np.unravel_index(table.argmax(), table.shape)
+        hit += table[i, j]
+        table[i, :] = -1
+        table[:, j] = -1
+    return hit / len(a)
+
+
+def _fit_inputs():
+    """(name, x, k, iters, weights): the serve corpus at nlist 64, a skewed
+    weighted blob mix, and one m = 8 subspace of a 768-dim PQ training set."""
+    rng = np.random.default_rng([911, 0])
+    centers = rng.random((64, 64), dtype=np.float32)
+    serve = centers[rng.integers(0, 64, 10_000)] + 0.25 * rng.standard_normal(
+        (10_000, 64), dtype=np.float32
+    )
+    yield "serve", serve, 64, 5, None
+    rng = np.random.default_rng(3)
+    sizes = [3000, 1500, 700, 300, 150, 80, 40, 25]
+    blobs = np.vstack(
+        [rng.standard_normal(32) * 4 + rng.standard_normal((s, 32)) for s in sizes]
+    )
+    yield "skewed", blobs, 32, 5, rng.integers(1, 6, len(blobs))
+    rng = np.random.default_rng(5)
+    yield "pq", rng.standard_normal((4096, 96)).astype(np.float32), 256, 12, None
+
+
+@pytest.mark.parametrize("case", ["serve", "skewed", "pq"])
+def test_kmeans_expansion_seeding_fits_like_elementwise(case):
+    """The expansion form changes seed bits, not the fit: labels agree on
+    >= 99 % of rows and inertia is within 1 % of the elementwise form."""
+    name, x, k, iters, w = next(c for c in _fit_inputs() if c[0] == case)
+    new = kmeans(x, k, np.random.default_rng(17), iters, weights=w)
+    old = _kmeans_elementwise(x, k, np.random.default_rng(17), iters, weights=w)
+    a, b = _labels(x, new), _labels(x, old)
+    assert _agreement(a, b, k) >= 0.99
+    ww = np.ones(len(x)) if w is None else w
+    inertia = [
+        float((ww * ((np.asarray(x, np.float64) - np.asarray(c, np.float64)[lab]) ** 2).sum(1)).sum())
+        for c, lab in ((new, a), (old, b))
+    ]
+    assert abs(inertia[0] - inertia[1]) <= 0.01 * inertia[1], (name, inertia)
+
+
 def _package_functions():
     root = Path(duckdb_faiss_ext_spark.__file__).parent
     for path in sorted(root.rglob("*.py")):

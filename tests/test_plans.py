@@ -154,8 +154,8 @@ def test_sq8_ivf_disk_scan_prunes_partitions(spark, tmp_path):
     x = gen_vectors(400, 8)
     eng = FaissSparkEngine(spark)
     # disk mode: the parquet-backed frame is NOT cached, so pruning is
-    # visible in the scan (a load()ed index persists and prunes inside the
-    # InMemoryTableScan predicate instead — same I/O story once cached)
+    # visible in the scan (a load()ed index persists, and the pre-filter
+    # then drops rows as the cached batches are read)
     eng.create(
         "pl_sq", 8, "IDMap,IVF4,SQ8", metric_type="L2",
         params={"storage_path": str(tmp_path / "pl_sq")},
@@ -172,7 +172,7 @@ def test_sq8_ivf_disk_scan_prunes_partitions(spark, tmp_path):
     )
     res = eng.search_flat("pl_sq", 3, q, params={"nprobe": 1})
     plan = _plan(res, "formatted")
-    # the IN-filter on cluster_id must reach the parquet scan as a
+    # the probe pre-filter on cluster_id must reach the parquet scan as a
     # partition filter (directory pruning), not a post-scan Filter only
     assert "PartitionFilters" in plan and "cluster_id" in plan.split(
         "PartitionFilters", 1

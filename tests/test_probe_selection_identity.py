@@ -37,7 +37,7 @@ def _mk_index(spark, eng, n=4000, dim=16, nlist=32, seed=5):
 
 def test_driver_and_executor_probes_agree_under_chunking(spark, eng):
     """The driver probe (``_probe_ids``, behind the exact path's mask and
-    the PQ/graph IN-filters) and the executor probe kernel (``_probe_rows``,
+    the PQ/graph pre-filters) and the executor probe kernel (``_probe_rows``,
     the bulk path) pick the same clusters, in the same order."""
     idx, x = _mk_index(spark, eng)
     rng = np.random.default_rng(11)
