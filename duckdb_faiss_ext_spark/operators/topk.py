@@ -485,7 +485,7 @@ def search_query_blocks(
             probes = probe(q)
             if len(qids) > 1:
                 # group queries by their first probed cluster so each chunk's
-                # cluster-union (the JVM pre-filter's id array) stays tight; an
+                # cluster-union (the JVM pre-filter's id mask) stays tight; an
                 # unsorted diverse batch probes ~every cluster per chunk and
                 # the pre-filter degenerates to a full scan
                 order = np.argsort(probes.min(axis=1), kind="stable")
@@ -500,13 +500,22 @@ def search_query_blocks(
                 # ids drive per-cluster scoring, so the work tracks the
                 # per-query scan fraction even when the chunk's
                 # cluster-union covers most of the corpus (the compute
-                # lever — SCALE.md r6 point 2).  The ids ride in ONE array
-                # literal, which codegen passes as a reference object, so
-                # the generated filter is the same class on every call; an
-                # ``isin`` would inline each id into the source and compile
-                # 2-3 new classes per read with a new probe set.
-                probed = F.lit(np.unique(cprobes).astype(np.int32).tolist())
-                part = corpus_df.filter(F.array_contains(probed, F.col(cluster_col)))
+                # lever — SCALE.md r6 point 2).  The union rides in ONE
+                # binary literal, a byte per cluster id (1 = probed):
+                # codegen passes it by reference, so the generated filter
+                # is the same class on every call, a row's test is one byte
+                # lookup, and py4j ships it in one call.  An ``isin``
+                # inlined the ids and compiled 2-3 new classes per read;
+                # the price is the cache's per-batch min/max skip, which
+                # only an inlined ``In`` gets (README, "JIT policy").
+                ids = np.unique(cprobes)
+                mask = np.zeros(int(ids.max()) + 1, dtype=np.uint8)
+                mask[ids] = 1
+                # cluster ids are >= 0; an id past the mask reads b""
+                byte = F.lit(bytearray(mask.tobytes())).substr(
+                    F.col(cluster_col) + 1, F.lit(1)
+                )
+                part = corpus_df.filter(byte == F.lit(bytearray(b"\x01")))
             partials.append(
                 kernel(part, qids[lo : lo + chunk], q[lo : lo + chunk], cprobes)
             )

@@ -23,42 +23,66 @@ pool (a second ``pyspark.daemon`` with one worker per core) beside the SQL
 one; on a 4-core VM that pool held ~300 MB of a ~1.75 GB serving process.
 
 The driver JVM (in local mode also the executor) runs one JIT policy,
-``_JIT_POLICY``: two compiler threads (one C1, one C2) and C2 thresholds at
-10x HotSpot's defaults, so only code that stays hot is compiled for peak
-speed.  It goes in as ``spark.driver.defaultJavaOptions``, set before
-``extra_conf``: a caller's own ``defaultJavaOptions`` replaces it, and a
-caller's ``extraJavaOptions`` applies beside it.  Cluster executors keep
-their own JVM options.  Why: with the default JIT the compiler threads were
-the largest named CPU share of a short serving cycle (perfbench ``serve``,
-4-core VM: 2.8 of 10.8 CPU-s a cycle, and 6.1 s of JIT compile time).  The
-policy was chosen by measurement among C1 only, later C2 thresholds, fewer
-compiler threads and a larger code cache (table in README, "JIT policy").  C1
-only (``-XX:TieredStopAtLevel=1``) saved the most on short calls, but its
-code is slower on long JVM-side scans: at 1M x 64, exact k-NN took 4.2-4.3 s
-against 3.6, IVF nprobe-16 5.5-6.1 s against 3.2, bulk IVF 9.6-11.1 s
-against 5.1 and the SQ8 build 24-30 s against 5.3-5.7.  Over three runs this
-policy read those keys at 3.0-3.7, 2.7-3.3, 3.4-4.9 and 4.1-6.3 s (the
-default: 3.1-3.6, 2.8-3.2, 3.7-5.2 and 3.6-5.7 s), and it cuts ``serve``'s
-cycle CPU by 16 % (``dedup``'s by 22 %).  The trade left: on a many-core
-host, two compiler threads warm a cold JVM more slowly than the default's
-dozen.
+``_JIT_POLICY``: the C2 (tier-4) compile thresholds at 10x HotSpot's
+defaults, so only code that stays hot is compiled for peak speed.  Why:
+with the default JIT, the compiler threads were the largest named CPU share
+of a short serving call.  C1 only saved more there but ran long JVM-side
+scans up to 2x slower; the compiler-thread count is left to the JVM, which
+sizes it from the host's cores.  README "JIT policy" has the measurements.
+The policy goes in as ``spark.driver.defaultJavaOptions``, ahead of any
+value the properties file that ``spark-submit`` reads gives that key, and
+before ``extra_conf``: a caller's own ``defaultJavaOptions`` replaces both,
+and a caller's ``extraJavaOptions`` applies beside them.  Cluster executors
+keep their own JVM options.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shlex
 from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# the driver JVM's JIT policy (see the module docstring): two compiler
-# threads, one C1 and one C2, and tier-4 (C2) thresholds at 10x the defaults
+# the driver JVM's JIT policy (see the module docstring): tier-4 (C2)
+# thresholds at 10x the defaults
 _JIT_POLICY = (
-    "-XX:CICompilerCount=2 -XX:Tier4InvocationThreshold=50000 "
-    "-XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 "
-    "-XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
 )
+
+
+def _properties_file_java_options() -> str:
+    """``spark.driver.defaultJavaOptions`` as set in the properties file
+    ``spark-submit`` reads: ``--properties-file`` in ``PYSPARK_SUBMIT_ARGS``,
+    else ``spark-defaults.conf`` under ``SPARK_CONF_DIR`` or
+    ``$SPARK_HOME/conf``; "" when none sets it.  A builder conf overrides
+    that file, so ``get_spark`` reads it to keep an administrator's flags."""
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    path = next(
+        (b for a, b in zip(args, args[1:]) if a == "--properties-file"), None
+    )
+    if path is None:
+        conf_dir = os.environ.get("SPARK_CONF_DIR")
+        if not conf_dir:
+            from pyspark.find_spark_home import _find_spark_home
+
+            conf_dir = os.path.join(_find_spark_home(), "conf")
+        path = os.path.join(conf_dir, "spark-defaults.conf")
+    try:
+        with open(path, encoding="utf-8") as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return ""
+    value = ""
+    for line in lines:
+        # java.util.Properties: the key ends at '=', ':' or whitespace
+        m = re.match(r"\s*([^\s=:#!][^\s=:]*)\s*[=:]?\s*(.*)", line)
+        if m and m.group(1) == "spark.driver.defaultJavaOptions":
+            value = m.group(2).strip()
+    return value
 
 
 def get_spark(
@@ -72,9 +96,13 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # set before extra_conf: a caller's own defaultJavaOptions replaces
-        # the policy, a caller's extraJavaOptions applies beside it
-        .config("spark.driver.defaultJavaOptions", _JIT_POLICY)
+        # the policy first, so a flag the properties file repeats wins; set
+        # before extra_conf, so a caller's own defaultJavaOptions replaces
+        # it and a caller's extraJavaOptions applies beside it
+        .config(
+            "spark.driver.defaultJavaOptions",
+            f"{_JIT_POLICY} {_properties_file_java_options()}".rstrip(),
+        )
         # AQE: runtime coalescing of shuffle partitions + skew-join splitting.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -4,11 +4,11 @@
 the Python kernel.  Written as ``isin(probed)``, that filter inlined each
 probed id into the generated source, so every read with a new probe set
 compiled fresh classes: 2 per 64-query nprobe-4 read and 3 per 1-query
-read on a 10k x 64 IVF64.  The filter now carries the ids as one array
-literal, which codegen passes by reference, so after one warm read the
-generated source repeats and the compile cache serves it.  The results
-must not move: each read is checked against the bulk route, whose grouped
-join never runs the pre-filter."""
+read on a 10k x 64 IVF64.  The filter now carries the probed set as one
+binary literal, a byte per cluster id, which codegen passes by reference,
+so after one warm read the generated source repeats and the compile cache
+serves it.  The results must not move: each read is checked against the
+bulk route, whose grouped join never runs the pre-filter."""
 
 import numpy as np
 import pandas as pd

@@ -1,9 +1,12 @@
 """``get_spark`` ships one JIT policy for the driver JVM (which is also the
 executor in local mode) through ``spark.driver.defaultJavaOptions``.  It is
 set before ``extra_conf``: a caller's ``extraJavaOptions`` applies beside
-it, and a caller's own ``defaultJavaOptions`` replaces it.  Each case reads
-the launched JVM's ``RuntimeMXBean.getInputArguments()`` in a child
-process, since a JVM's options are fixed when it starts."""
+it, and a caller's own ``defaultJavaOptions`` replaces it.  A
+``defaultJavaOptions`` from the properties file ``spark-submit`` reads
+(an administrator's flags) applies after it, so a conf passed by the builder
+does not drop it.  Each case reads the launched JVM's
+``RuntimeMXBean.getInputArguments()`` in a child process, since a JVM's
+options are fixed when it starts."""
 
 import json
 import os
@@ -29,23 +32,25 @@ CASES = {
     "plain": {},
     "extra": {"spark.driver.extraJavaOptions": "-Dfaiss.jit.test=extra"},
     "default": {"spark.driver.defaultJavaOptions": "-Dfaiss.jit.test=default"},
+    "admin": {},
 }
 
 
-def _jvm_args() -> dict:
-    """{case: the driver JVM's input arguments}, the three JVMs launched
-    side by side."""
+def _jvm_args(conf_dir: Path) -> dict:
+    """{case: the driver JVM's input arguments}, the JVMs launched side by
+    side; the "admin" case reads ``conf_dir``'s spark-defaults.conf."""
     env = {
         **os.environ,
         "SPARK_GRAFT_CPUS": "1",
         "SPARK_DRIVER_MEMORY": "512m",
         "PYTHONPATH": str(REPO),
     }
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
     procs = {
         case: subprocess.Popen(
             [sys.executable, "-c", _CHILD, json.dumps(conf)],
             cwd=REPO,
-            env=env,
+            env={**env, "SPARK_CONF_DIR": str(conf_dir)} if case == "admin" else env,
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
         )
@@ -59,10 +64,14 @@ def _jvm_args() -> dict:
     return out
 
 
-def test_policy_composes_with_caller_java_options():
+def test_policy_composes_with_caller_java_options(tmp_path):
     policy = _JIT_POLICY.split()
     assert policy and all(flag.startswith("-XX:") for flag in policy)
-    args = _jvm_args()
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# an administrator's driver flags\n"
+        "spark.driver.defaultJavaOptions   -Dfaiss.jit.test=admin -Xss4m\n"
+    )
+    args = _jvm_args(tmp_path)
     # a plain session carries the policy
     assert all(flag in args["plain"] for flag in policy), args["plain"]
     # a caller's extraJavaOptions applies beside it
@@ -71,3 +80,8 @@ def test_policy_composes_with_caller_java_options():
     # a caller's defaultJavaOptions replaces it
     assert "-Dfaiss.jit.test=default" in args["default"], args["default"]
     assert not any(flag in args["default"] for flag in policy), args["default"]
+    # flags from the properties file apply after it, so they still win
+    admin = args["admin"]
+    assert all(flag in admin for flag in policy), admin
+    assert "-Dfaiss.jit.test=admin" in admin and "-Xss4m" in admin, admin
+    assert admin.index("-Xss4m") > max(admin.index(flag) for flag in policy)

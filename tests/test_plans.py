@@ -154,8 +154,8 @@ def test_sq8_ivf_disk_scan_prunes_partitions(spark, tmp_path):
     x = gen_vectors(400, 8)
     eng = FaissSparkEngine(spark)
     # disk mode: the parquet-backed frame is NOT cached, so pruning is
-    # visible in the scan (a load()ed index persists, and the pre-filter
-    # then drops rows as the cached batches are read)
+    # visible in the scan (a load()ed index persists; its cached batches
+    # are all read, and the pre-filter drops the unprobed rows from them)
     eng.create(
         "pl_sq", 8, "IDMap,IVF4,SQ8", metric_type="L2",
         params={"storage_path": str(tmp_path / "pl_sq")},
