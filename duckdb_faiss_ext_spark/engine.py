@@ -87,6 +87,19 @@ def _bad_elements_error(count: int) -> FaissSparkError:
     )
 
 
+# bytes each scan task of a read gets at least: a task costs a fixed
+# 0.05-0.12 CPU-s (Python worker round trip plus JVM task)
+SCAN_TASK_MIN_BYTES = 8_000_000
+
+
+def scan_tasks(corpus_bytes: int, cores: int, advisory_bytes: int) -> int:
+    """Scan tasks of a read over ``corpus_bytes`` stored bytes: at most
+    ``cores`` of at least ``SCAN_TASK_MIN_BYTES``, and more only where a
+    task would pass Spark's advisory partition size."""
+    floor = min(cores, corpus_bytes // SCAN_TASK_MIN_BYTES)
+    return max(1, floor, -(-corpus_bytes // advisory_bytes))
+
+
 class FaissSparkEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -2647,6 +2660,22 @@ class FaissSparkEngine:
             return None
         return lambda q: self._probe_ids(idx, q, nprobe)
 
+    @staticmethod
+    def _stored_row_bytes(idx: FaissIndex) -> int:
+        """label + vector (float32, SQ8 int8 or PQ smallint codes) + cluster id"""
+        vec = idx.dim * (1 if idx.sq_vdiff is not None else 4)
+        if idx.codebooks is not None:
+            vec = 2 * idx.codebooks.shape[0]
+        return 8 + vec + 4 * (idx.spec.kind == "ivf")
+
+    def _scan_partitions(self, idx: FaissIndex) -> int:
+        """``scan_tasks`` for ``idx``'s row count and stored row bytes."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        sql_conf = self.spark._jvm.org.apache.spark.sql.internal.SQLConf
+        advisory = int(conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()))
+        cores = self.spark.sparkContext.defaultParallelism
+        return scan_tasks(idx.count * self._stored_row_bytes(idx), cores, advisory)
+
     def _probe_rows(self, idx: FaissIndex, q: DataFrame, nprobe: int) -> DataFrame:
         """One row per (query, probed cluster): ``q``'s columns plus
         ``cluster_id`` — the executor-side twin of ``_probe_ids`` for the
@@ -2727,6 +2756,11 @@ class FaissSparkEngine:
                 "to beam (Flat/IVF index, or graphs not built). Use "
                 "'auto'/'scan', or a graph factory."
             )
+        if not has_graph and not idx.storage_path:
+            # scan tasks sized from the index's exact bytes, not from the
+            # caller's partitions (graph segments stay per partition; the
+            # disk tier's file splits size its scans)
+            corpus = corpus.coalesce(self._scan_partitions(idx))
         self._resolve_bulk_routing(queries_df, params)
         allowed_col = None
         if allowed_df is not None:

@@ -5,11 +5,12 @@ Physical plan (designed for a huge corpus, small-ish query batch):
 
 1. queries are collected to a float32 numpy block and BROADCAST — the corpus
    (the 100 TB side) is never collected or shuffled whole;
-2. ``mapInArrow`` over corpus partitions scores each Arrow batch against ALL
-   queries in one numpy matmul (the analogue of the reference's one
-   ``index->search`` call per 2048-row chunk, :631) and keeps only the per-
-   batch top-k per query — output is ≤ nq*k rows per batch, so the single
-   shuffle that follows is tiny regardless of corpus size;
+2. ``mapInArrow`` over the corpus scores each Arrow batch against ALL
+   queries one ``SCORE_BLOCK_ROWS``-row block at a time, one numpy matmul
+   per block, as the reference runs one ``index->search`` call per 2048-row
+   chunk (:631), and folds the blocks into the batch's top-k per query —
+   output is ≤ nq*k rows per batch, so the single shuffle that follows is
+   tiny regardless of corpus size;
 3. ``merge_topk``, one Window per qid, merges the candidates into the global
    top-k.  It is the one rank of every search route: the driver routes'
    chunks, the bulk joins, PQ, the graph beams and the LSH join.
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from duckdb_faiss_ext_spark.errors import FaissSparkError
 from duckdb_faiss_ext_spark.metrics import (
     is_descending,
+    merge_running_topk,
     pairwise,
     resolve_metric,
     topk_indices,
@@ -41,6 +43,9 @@ from duckdb_faiss_ext_spark.metrics import (
 from duckdb_faiss_ext_spark.session import local_frame
 
 MAX_QUERY_BATCH = 8192  # queries per broadcast chunk (keeps driver+broadcast bounded)
+# corpus rows per score matrix in ``partial_topk`` (the reference's chunk is
+# 2048 rows; 2048 and 4096 measured equal)
+SCORE_BLOCK_ROWS = 4096
 
 # probe-mask density above which one full BLAS call + where-mask beats the
 # per-cluster sub-matmul loop (sparse probing is where grouped scoring wins:
@@ -123,7 +128,10 @@ def iter_query_blocks(
     rows of (id, vector).
 
     ``packed=False`` (default): per-row toLocalIterator — ~12 µs/row at
-    64 dim, the cheapest shape for ordinary query batches.
+    64 dim, the cheapest shape for ordinary query batches.  A query side
+    planned as a ``LocalRelation`` of at most MAX_QUERY_BLOCK rows is
+    already in the driver JVM: one ``collect()`` pulls it without a job,
+    where toLocalIterator runs one per partition.
 
     ``packed=True``: executors pack their partitions into binary block rows
     (ids + one flattened float matrix as raw buffers) via one narrow
@@ -139,9 +147,12 @@ def iter_query_blocks(
         qids: list[int] = []
         vecs: list = []
         eff_rows = MAX_QUERY_BLOCK
-        it = queries_df.select(qid_col, vec_col).toLocalIterator(
-            prefetchPartitions=True
+        sel = queries_df.select(qid_col, vec_col)
+        plan = sel._jdf.queryExecution().optimizedPlan()
+        local = plan.getClass().getSimpleName() == "LocalRelation" and (
+            plan.maxRows().get() <= MAX_QUERY_BLOCK
         )
+        it = sel.collect() if local else sel.toLocalIterator(prefetchPartitions=True)
         for row in it:
             if not qids:
                 eff_rows = _block_rows_for(len(row[1] or ()), np_item)
@@ -303,6 +314,7 @@ def partial_topk(
     # snapshot: closure vars pickle by VALUE to executors (a module global
     # would re-resolve worker-side, ignoring driver-side test overrides)
     dense_thr = DENSE_MASK_THRESHOLD
+    block_rows = SCORE_BLOCK_ROWS
     probe_mask = None
     if probes is not None and cluster_col is not None:
         # (nq, max probed id + 1): the caller's probed-cluster pre-filter
@@ -320,17 +332,13 @@ def partial_topk(
 
     def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         qids_, q_, mask_ = bq.value
-        for rb in batches:
+
+        def block_topk(rb):
             n = rb.num_rows
-            if n == 0:
-                continue
             # a NULL element raises here, as on the bulk route's
             # _pack_blocks; SQ8 keeps its int8 codes
             raw = vector_matrix(
-                rb.column(1),
-                dim,
-                f"column {vec_col!r}",
-                None if sq8 is not None else dtype,
+                rb.column(1), dim, f"column {vec_col!r}", None if sq8 else dtype
             )
             # resolve_metric, not raw string compare: a None/aliased metric
             # that resolves to L2 must take the same 4.6-10.3x decode-free
@@ -359,22 +367,12 @@ def partial_topk(
                 x = raw
 
             def score_rows(qsub, rows=None):
+                xs = x if rows is None else x[rows]
                 if decode_free:
-                    return sq8_l2_pairwise(
-                        qsub,
-                        x if rows is None else x[rows],
-                        sq8[0],
-                        sq8[1],
-                        rownorm=rnorm if rows is None else rnorm[rows],
-                        dtype=dtype,
-                    )
-                return pairwise(
-                    qsub,
-                    x if rows is None else x[rows],
-                    metric,
-                    metric_arg,
-                    dtype=dtype,
-                )
+                    rn = rnorm if rows is None else rnorm[rows]
+                    return sq8_l2_pairwise(qsub, xs, *sq8, rownorm=rn, dtype=dtype)
+                return pairwise(qsub, xs, metric, metric_arg, dtype=dtype)
+
             labels = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             if mask_ is not None:
                 clusters = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -390,15 +388,11 @@ def partial_topk(
                     # sparse probing: score ONLY (probing query, cluster-row)
                     # pairs — per-cluster sub-matmuls make the MAC count
                     # track the PER-QUERY scan fraction (sum_c rows_c *
-                    # nq_probing_c) instead of nq * batch-union.  The old
-                    # full-matmul-then-mask paid the whole nq x batch
-                    # product, which is why a 48-query batch at nlist=2048
-                    # ran at union coverage (73-98%) even though each query
-                    # probed 5% of rows (SCALE.md r6 point 2 / VERDICT r6
-                    # task 5).  The scatter writes are ~1/dim of the saved
-                    # MACs; each partition holds a contiguous run of
-                    # cluster ids after the engine's histogram layout
-                    # (_cluster_layout), so the argsort is cheap.
+                    # nq_probing_c) instead of nq * block-union (SCALE.md
+                    # r6 point 2).  The scatter writes are ~1/dim of the
+                    # saved MACs; the engine's histogram layout
+                    # (_cluster_layout) stores cluster ids in contiguous
+                    # runs, so the argsort is cheap.
                     scores = np.full((len(q_), n), fill, dtype=dtype)
                     order = np.argsort(clusters, kind="stable")
                     sc = clusters[order]
@@ -414,15 +408,24 @@ def partial_topk(
             else:
                 scores = score_rows(q_)
             idx, sc = topk_indices(scores, k, desc, labels)
-            nq, kk = idx.shape
-            out_q = np.repeat(qids_, kk)
-            out_l = labels[idx.ravel()]
-            out_s = sc.ravel()
+            return labels[idx], sc
+
+        for rb in batches:
+            # one (nq, rows) score matrix per SCORE_BLOCK_ROWS rows, folded
+            # into the batch's running top-k: the worker's memory stays
+            # flat however many rows a scan task's batch holds
+            top_l = top_s = None
+            for lo in range(0, rb.num_rows, block_rows):
+                lab, sc = block_topk(rb.slice(lo, block_rows))
+                top_l, top_s = merge_running_topk(top_l, top_s, lab, sc, k, desc)
+            if top_l is None:
+                continue
+            out_s = top_s.ravel()
             keep = np.isfinite(out_s)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out_q[keep], pa.int64()),
-                    pa.array(out_l[keep], pa.int64()),
+                    pa.array(np.repeat(qids_, top_l.shape[1])[keep], pa.int64()),
+                    pa.array(top_l.ravel()[keep], pa.int64()),
                     pa.array(out_s[keep], pa_dist),
                 ],
                 schema=out_type,

@@ -8,7 +8,10 @@ read on a 10k x 64 IVF64.  The filter now carries the probed set as one
 binary literal, a byte per cluster id, which codegen passes by reference,
 so after one warm read the generated source repeats and the compile cache
 serves it.  The results must not move: each read is checked against the
-bulk route, whose grouped join never runs the pre-filter."""
+bulk route, whose grouped join never runs the pre-filter.
+
+Reads scan the stored slices coalesced to a few tasks; that plan repeats
+too, on a fixed index and from the second read after an append on."""
 
 import numpy as np
 import pandas as pd
@@ -68,3 +71,27 @@ def test_steady_state_ivf_read_compiles_nothing(spark, ivf, nq):
         assert len(rows) == nq * K
         bulk = {"nprobe": 4, "bulk_queries": 1}
         assert rows == _rows(eng.search_flat("cg_ivf", K, qdf, params=bulk))
+
+
+def test_coalesced_read_after_an_append_compiles_nothing(spark):
+    rng = np.random.default_rng([912, 0])
+    centers = rng.random((CENTERS, DIM), dtype=np.float32)
+    eng = FaissSparkEngine(spark)
+    eng.create("cg_app", DIM, f"IDMap,IVF{CENTERS}", "L2")
+    eng.add("cg_app", _frame(spark, np.arange(ROWS), _mixture(rng, centers, ROWS), "label"))
+    driver = {"nprobe": 4, "bulk_queries": 0}
+    try:
+        compiles = []
+        for lo in (ROWS, ROWS + 500):
+            more = _mixture(rng, centers, 500)
+            eng.add("cg_app", _frame(spark, np.arange(lo, lo + 500), more, "label"))
+            for _ in range(3):  # the first read after the append is the warm one
+                qdf = _frame(spark, np.arange(64), _mixture(rng, centers, 64), "qid")
+                c0 = _compiles(spark)
+                rows = _rows(eng.search_flat("cg_app", K, qdf, params=dict(driver)))
+                compiles.append(_compiles(spark) - c0)
+                bulk = {"nprobe": 4, "bulk_queries": 1}
+                assert rows == _rows(eng.search_flat("cg_app", K, qdf, params=bulk))
+        assert compiles[1:3] == compiles[4:6] == [0, 0], compiles
+    finally:
+        eng.destroy("cg_app")

@@ -7,6 +7,8 @@ way."""
 import ast
 import pathlib
 
+import numpy as np
+import pandas as pd
 import pytest
 
 import duckdb_faiss_ext_spark
@@ -82,6 +84,37 @@ def test_exact_routes_agree_beyond_n(tied):
     assert len(exact[("IDMap,Flat", 0)]) == 11
     for factory, _ in ROUTES:
         assert got[(factory, 0)] == got[(factory, 1)], factory
+
+
+def test_sub_block_boundary_keeps_the_smaller_tied_labels(spark):
+    """``partial_topk`` scores a batch in SCORE_BLOCK_ROWS-row blocks and
+    folds them: copies of the query stored as labels 40, 30 just before a
+    block boundary and 20, 10 just after it must still rank 10, 20, 30."""
+    from duckdb_faiss_ext_spark.operators.topk import SCORE_BLOCK_ROWS
+
+    n = 2 * SCORE_BLOCK_ROWS + 16
+    x = gen_vectors(n, 4) + np.float32(2.0)  # every other row is off the query
+    q = gen_vectors(1, 4, offset=99)
+    labels = np.arange(n) + 1000
+    b = SCORE_BLOCK_ROWS
+    for pos, lab in ((b - 2, 40), (b - 1, 30), (b, 20), (b + 1, 10)):
+        x[pos], labels[pos] = q[0], lab
+    pdf = pd.DataFrame({"label": labels, "vector": list(x)})
+    corpus = spark.createDataFrame(pdf, "label bigint, vector array<float>").coalesce(1)
+    eng = FaissSparkEngine(spark)
+    eng.create("tie_blocks", 4, "IDMap,Flat", metric_type="L2")
+    eng.add("tie_blocks", corpus)
+    try:
+        assert eng.registry.get("tie_blocks").data.rdd.getNumPartitions() == 1
+        qdf = spark.createDataFrame(
+            [(0, [float(v) for v in q[0]])], "qid bigint, vector array<float>"
+        )
+        for k in (2, 3):
+            rows = eng.search_flat("tie_blocks", k, qdf, params={"bulk_queries": 0})
+            got = [r["label"] for r in sorted(rows.collect(), key=lambda r: r["rank"])]
+            assert got == [10, 20, 30][:k], got
+    finally:
+        eng.destroy("tie_blocks")
 
 
 # ------------------------------------------------- one top-k path (AST guard)
