@@ -408,29 +408,6 @@ def main() -> None:
     def _median(ts: list) -> float:
         return sorted(ts)[len(ts) // 2]
 
-    def scan_tasks_of(read) -> int:
-        """Tasks of the stage that read the most cached input while
-        ``read()`` ran, counted through a job group: the corpus scan of a
-        search (a cached query side's pull reads input too, but less)."""
-        sc = spark.sparkContext
-        group = f"bench-scan-{time.monotonic_ns()}"
-        sc.setJobGroup(group, group)
-        try:
-            read()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-        scans = [(0, 0)]
-        for job in tracker.getJobIdsForGroup(group):
-            for sid in tracker.getJobInfo(job).stageIds:
-                try:
-                    data = store.lastStageAttempt(sid)
-                except Exception:  # py4j: a stage the status store no longer holds
-                    continue
-                if data.status().toString() == "COMPLETE":
-                    scans.append((data.inputBytes(), data.numTasks()))
-        return max(scans)[1]
-
     def _max_share(name: str):
         """Largest cluster over the factory nlist's even share, read from
         the histogram the build left behind.  Calling ``eng.rebalance()``
@@ -776,11 +753,14 @@ def main() -> None:
         )
         # scan width of one np4 and one np16 read, beside their wall times:
         # the stored corpus is coalesced to scan_tasks() tasks per read
+        from stage_tasks import scan_tasks_of  # tools/, put on sys.path by both legs
+
         for np_ in (4, 16):
-            queries[f"vec1m_knn_np{np_}_scan_tasks"] = scan_tasks_of(
+            _, queries[f"vec1m_knn_np{np_}_scan_tasks"] = scan_tasks_of(
+                spark,
                 lambda n=np_: eng.search_flat(
                     "bench_v1m", 10, q256, params={"nprobe": n}
-                ).count()
+                ).count(),
             )
         for np_, key in ((4, "vec1m_recall_np4"), (16, "vec1m_recall_np16")):
             hits = {

@@ -92,12 +92,10 @@ def _bad_elements_error(count: int) -> FaissSparkError:
 SCAN_TASK_MIN_BYTES = 8_000_000
 
 
-def scan_tasks(corpus_bytes: int, cores: int, advisory_bytes: int) -> int:
-    """Scan tasks of a read over ``corpus_bytes`` stored bytes: at most
-    ``cores`` of at least ``SCAN_TASK_MIN_BYTES``, and more only where a
-    task would pass Spark's advisory partition size."""
-    floor = min(cores, corpus_bytes // SCAN_TASK_MIN_BYTES)
-    return max(1, floor, -(-corpus_bytes // advisory_bytes))
+def scan_tasks(corpus_bytes: int, cores: int) -> int:
+    """Scan tasks of a read over ``corpus_bytes`` stored bytes: at most one
+    per core, each of at least ``SCAN_TASK_MIN_BYTES``."""
+    return max(1, min(cores, corpus_bytes // SCAN_TASK_MIN_BYTES))
 
 
 class FaissSparkEngine:
@@ -2670,11 +2668,8 @@ class FaissSparkEngine:
 
     def _scan_partitions(self, idx: FaissIndex) -> int:
         """``scan_tasks`` for ``idx``'s row count and stored row bytes."""
-        conf = self.spark._jsparkSession.sessionState().conf()
-        sql_conf = self.spark._jvm.org.apache.spark.sql.internal.SQLConf
-        advisory = int(conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()))
         cores = self.spark.sparkContext.defaultParallelism
-        return scan_tasks(idx.count * self._stored_row_bytes(idx), cores, advisory)
+        return scan_tasks(idx.count * self._stored_row_bytes(idx), cores)
 
     def _probe_rows(self, idx: FaissIndex, q: DataFrame, nprobe: int) -> DataFrame:
         """One row per (query, probed cluster): ``q``'s columns plus

@@ -2,19 +2,18 @@
 
 Each scan task costs a fixed 0.05-0.12 CPU-s (a Python worker round trip
 plus a JVM task).  ``search_flat`` coalesces the stored corpus, the union of
-its slices, to ``scan_tasks(count * row bytes, cores, advisory size)``
-tasks, so the count no longer follows the partitioning of the frames the
-index was built and appended from.  The unit tests pin the rule; the
-integration tests count the tasks of the stages that read the cached corpus
-and check the answers against ``exact_knn_flat`` over the uncoalesced
-corpus."""
+its slices, to ``scan_tasks(count * row bytes, cores)`` tasks, so the
+count no longer follows the partitioning of the frames the index was built
+and appended from.  The unit tests pin the rule; the integration tests
+count the tasks of the stage that reads the cached corpus and check the
+answers against ``exact_knn_flat`` over the uncoalesced corpus."""
 
-import itertools
+import os
+import sys
 
 import numpy as np
 import pandas as pd
 import pytest
-from py4j.protocol import Py4JJavaError
 
 from duckdb_faiss_ext_spark import FaissSparkEngine
 from duckdb_faiss_ext_spark.engine import SCAN_TASK_MIN_BYTES, scan_tasks
@@ -22,7 +21,8 @@ from duckdb_faiss_ext_spark.factory import parse_factory
 from duckdb_faiss_ext_spark.operators.topk import exact_knn_flat
 from duckdb_faiss_ext_spark.registry import FaissIndex
 
-ADVISORY = 64 << 20  # Spark's default advisoryPartitionSizeInBytes
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
+from stage_tasks import scan_tasks_of  # noqa: E402
 
 
 def _row_bytes(factory, dim=64, sq8=False, pq_m=None):
@@ -50,38 +50,32 @@ def test_small_index_is_one_task():
     # perfbench serve: 10k x 64 float32, Flat and IVF, on any core count
     for factory in ("IDMap,Flat", "IDMap,IVF64"):
         for cores in (4, 32):
-            assert scan_tasks(10_000 * _row_bytes(factory), cores, ADVISORY) == 1
+            assert scan_tasks(10_000 * _row_bytes(factory), cores) == 1
     # appends do not split it while it stays under the floor
-    assert scan_tasks(SCAN_TASK_MIN_BYTES - 1, 4, ADVISORY) == 1
+    assert scan_tasks(SCAN_TASK_MIN_BYTES - 1, 4) == 1
+    assert scan_tasks(0, 4) == 1
 
 
 def test_million_rows_take_the_cores():
     for factory in ("IDMap,Flat", "IDMap,IVF2048"):
         total = 1_000_000 * _row_bytes(factory)
-        assert scan_tasks(total, 4, ADVISORY) == 4
-        assert scan_tasks(total, 32, ADVISORY) == 32
+        assert scan_tasks(total, 4) == 4
+        assert scan_tasks(total, 32) == 32
+    # no more tasks than cores, however large the corpus
+    assert scan_tasks(10_000_000 * _row_bytes("IDMap,Flat"), 4) == 4
 
 
 def test_quantized_tiers_take_fewer_tasks():
     sq8 = 1_000_000 * _row_bytes("IDMap,Flat,SQ8", sq8=True)  # 72 MB
-    assert scan_tasks(sq8, 4, ADVISORY) == 4
-    assert scan_tasks(sq8, 32, ADVISORY) == sq8 // SCAN_TASK_MIN_BYTES == 9
+    assert scan_tasks(sq8, 4) == 4
+    assert scan_tasks(sq8, 32) == sq8 // SCAN_TASK_MIN_BYTES == 9
     pq = 1_000_000 * _row_bytes("IDMap,IVF64,PQ8", pq_m=8)  # 28 MB
-    assert scan_tasks(pq, 32, ADVISORY) == 3
-
-
-def test_advisory_size_caps_each_task():
-    total = 10_000_000 * _row_bytes("IDMap,Flat")  # 2.64 GB
-    assert scan_tasks(total, 4, ADVISORY) == -(-total // ADVISORY) == 40
-    # a smaller advisory size splits even a sub-floor corpus
-    assert scan_tasks(2_640_000, 4, 1 << 20) == 3
-    assert scan_tasks(0, 4, ADVISORY) == 1
+    assert scan_tasks(pq, 32) == 3
 
 
 # ------------------------------------------------------- the engine's reads
 
 DIM, K = 16, 10
-_groups = itertools.count()
 
 
 def _frame(spark, ids, x, id_col):
@@ -91,29 +85,6 @@ def _frame(spark, ids, x, id_col):
 
 def _rows(df):
     return sorted((r["qid"], r["rank"], r["label"]) for r in df.collect())
-
-
-def _scan_tasks_of(spark, read):
-    """(rows of ``read()``, tasks of the completed stages that read cached
-    input), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"scan-tasks-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        rows = _rows(read())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    tasks = 0
-    for job in tracker.getJobIdsForGroup(group):
-        for sid in tracker.getJobInfo(job).stageIds:
-            try:
-                data = store.lastStageAttempt(sid)
-            except Py4JJavaError:  # a stage the status store no longer holds
-                continue
-            if data.status().toString() == "COMPLETE" and data.inputBytes() > 0:
-                tasks += data.numTasks()
-    return rows, tasks
 
 
 @pytest.fixture(scope="module")
@@ -132,7 +103,9 @@ def test_flat_from_four_partitions_scans_in_one_task(spark, data):
     corpus = eng.registry.get("st_flat").data
     assert corpus.rdd.getNumPartitions() == 4
     try:
-        got, tasks = _scan_tasks_of(spark, lambda: eng.search_flat("st_flat", K, q))
+        got, tasks = scan_tasks_of(
+            spark, lambda: _rows(eng.search_flat("st_flat", K, q))
+        )
         assert tasks == 1
         assert got == _rows(exact_knn_flat(corpus, q, K, "L2"))
     finally:
@@ -154,8 +127,9 @@ def test_ivf_appends_do_not_add_scan_tasks(spark, data):
                 eng.add("st_ivf", _frame(spark, np.arange(lo, lo + 500), more, "label"))
             for bulk in (0, 1):
                 params = {"nprobe": 4, "bulk_queries": bulk}
-                got[bulk], n = _scan_tasks_of(
-                    spark, lambda p=params: eng.search_flat("st_ivf", K, q, params=p)
+                got[bulk], n = scan_tasks_of(
+                    spark,
+                    lambda p=params: _rows(eng.search_flat("st_ivf", K, q, params=p)),
                 )
                 tasks.append(n)
         assert len(idx.slices) == 4
@@ -168,20 +142,3 @@ def test_ivf_appends_do_not_add_scan_tasks(spark, data):
         assert got[0] == got[1] == _rows(ref)
     finally:
         eng.destroy("st_ivf")
-
-
-def test_advisory_size_is_read_from_the_session(spark, data):
-    _, x, _ = data
-    eng = FaissSparkEngine(spark)
-    eng.create("st_conf", DIM, "IDMap,Flat", "L2")
-    eng.add("st_conf", _frame(spark, np.arange(len(x)), x, "label"))
-    idx = eng.registry.get("st_conf")
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    try:
-        assert eng._scan_partitions(idx) == 1
-        spark.conf.set(key, "100k")
-        total = len(x) * (8 + DIM * 4)
-        assert eng._scan_partitions(idx) == -(-total // 102_400)
-    finally:
-        spark.conf.unset(key)
-        eng.destroy("st_conf")
