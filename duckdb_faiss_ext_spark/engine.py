@@ -479,9 +479,9 @@ class FaissSparkEngine:
                 # SQ8 storage tier: store array<tinyint> codes, not float32
                 # vectors — 4x smaller scan/cache/at-rest (create() rejects
                 # PQ/HNSW composites, so this branch is exclusive).  Encode
-                # is pure zip_with codegen; cluster_id (assigned above, on
-                # the raw vectors) rides through so IVF pruning and the
-                # partitioned save layout are unchanged.
+                # is a narrow mapInArrow over sq8_encode_np; cluster_id
+                # (assigned above, on the raw vectors) rides through so IVF
+                # pruning and the partitioned save layout are unchanged.
                 from duckdb_faiss_ext_spark.functions.quantize import sq8_encode
 
                 vecs = sq8_encode(
@@ -1356,9 +1356,9 @@ class FaissSparkEngine:
             from duckdb_faiss_ext_spark.functions.quantize import sq8_train
 
             # per-dim [vmin, vmax] over the FULL training frame — one
-            # map-side-combinable scan (the min/max explode combines down to
-            # O(dim) rows before the shuffle), so at 100 TB this is one
-            # cheap extra pass over data the add already scans.  Training on
+            # narrow mapInArrow scan combined to O(dim) rows per batch, so
+            # at 100 TB this is one cheap extra pass over data the add
+            # already scans.  Training on
             # everything (not a sample) keeps the range exact: a sampled
             # range would CLIP out-of-range outliers at encode time.
             idx.sq_vmin, idx.sq_vdiff = sq8_train(vec_df, vec_col="vector")
@@ -2236,13 +2236,14 @@ class FaissSparkEngine:
                     F.lit(float(min(1.0, 1.3 * samp / counts[c]))),
                 ]
             frac = F.element_at(F.create_map(*frac_pairs), F.col("cluster_id"))
-            # a label hash, not rand(): rand depends on partition index and
-            # row position, so the children would follow the physical layout
+            # a label hash, not rand(): rand would follow partition index and
+            # row position; filtered first, nothing pushes through the decode
+            sample = idx.data.filter(F.col("cluster_id").isin(over)).filter(
+                _label_unit(F.lit(4242 + _pass)) < frac
+            )
             tbl = (
-                self._decoded_view(idx, idx.data)
+                self._decoded_view(idx, sample)
                 .select("cluster_id", "label", "vector")
-                .filter(F.col("cluster_id").isin(over))
-                .filter(_label_unit(F.lit(4242 + _pass)) < frac)
                 .toArrow()
             )
             if not tbl.num_rows:
@@ -2310,9 +2311,8 @@ class FaissSparkEngine:
                 kernel inside the timed build.  Numerics are unchanged:
                 batch boundaries are the same arrow.maxRecordsPerBatch
                 cuts, the masked rows reach the SAME _coarse_scores /
-                topk_indices calls as C-contiguous float32, and the SQ8
-                numpy decode is the bit-compatible twin of the JVM
-                expression (sq8_decode_np contract).  Batches with no
+                topk_indices calls as C-contiguous float32, and SQ8 rows
+                decode with the one codec, sq8_decode_np.  Batches with no
                 offender rows pass through without touching a vector
                 buffer."""
                 import pyarrow as pa
@@ -2430,12 +2430,11 @@ class FaissSparkEngine:
         return stats
 
     def _decoded_view(self, idx: FaissIndex, corpus: DataFrame) -> DataFrame:
-        """SQ8 indexes store ``codes array<tinyint>``; every reader of the
-        corpus frame goes through this lazy bin-center decode back to a
-        float32 ``vector`` column (FAISS Codec8bit).  Pure zip_with codegen
-        BELOW the kernels: only batches a search actually scans pay the
-        decode, and Catalyst pushes label semi-joins/cluster pruning under
-        the projection.  Non-SQ indexes pass through untouched."""
+        """SQ8 indexes store ``codes array<tinyint>``; the retrain union,
+        the rebalance sample and ``warm`` read the corpus through this
+        bin-center decode back to a float32 ``vector`` column (``sq8_decode``,
+        a narrow mapInArrow: filter before it, Catalyst pushes nothing
+        through).  Non-SQ indexes pass through untouched."""
         if idx.sq_vdiff is None or "codes" not in corpus.columns:
             return corpus
         from duckdb_faiss_ext_spark.functions.quantize import sq8_decode
@@ -2731,10 +2730,8 @@ class FaissSparkEngine:
                 "graph_filter must be 'auto', 'beam' or 'scan'; got "
                 f"{params.get('graph_filter')!r}"
             )
-        # SQ8 corpora stay as CODES here: the driver-path kernel decodes
-        # per Arrow batch in numpy (4x smaller transfer, no interpreted
-        # JVM projection — bench'd 3.2x faster than the zip_with decode);
-        # only the bulk executor-join path below takes the JVM decode view
+        # SQ8 corpora stay as CODES: the driver kernels and the bulk pack
+        # (``right_sq8``) decode per Arrow batch with sq8_decode_np
         corpus = idx.data
         sq8_params = (
             (idx.sq_vmin, idx.sq_vdiff) if idx.sq_vdiff is not None else None

@@ -11,9 +11,11 @@ x̂_j = vmin_j + (code_j + 0.5)/255 * vdiff_j.  These are FAISS's exact
 encode/decode formulas, so codes are interchangeable with FAISS-encoded
 data; max per-dim error is half a bin, vdiff/510 (ADVICE r9: the previous
 round-encode/edge-decode pair was self-consistent with the same bound but
-not bit-compatible).  Spark-first: encode/decode are pure ``zip_with``
-column expressions against literal parameter arrays — whole-stage codegen,
-no Python in the hot path; train is ONE map-side-combinable aggregation.
+not bit-compatible).  Each formula exists once, as a numpy kernel
+(``sq8_encode_np`` / ``sq8_decode_np``): the DataFrame forms run it per
+Arrow batch in one narrow mapInArrow, and the search kernels call it
+directly, so every path stores and reads the same bits; train is one
+narrow mapInArrow scan.
 
 This is storage-layer tooling (beyond the reference, which has no SQ
 factories in its test surface): compress an embeddings table at rest,
@@ -26,6 +28,7 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, ByteType, FloatType, StructField, StructType
 
 __all__ = [
     "sq8_train",
@@ -41,12 +44,10 @@ __all__ = [
 
 
 def sq8_encode_np(x: np.ndarray, vmin: np.ndarray, vdiff: np.ndarray) -> np.ndarray:
-    """Kernel/driver-side encode mirroring the JVM ``sq8_encode``
-    expression term-for-term: clamp x_norm to [0,1], truncating
+    """The one SQ8 encode: clamp x_norm to [0,1] in f64, truncating
     code = floor(255 * x_norm), STORED as int8 (code - 128); degenerate
-    (vdiff <= 0) dims store -128 (decode = vmin, exact).  The single
-    numpy encode every non-JVM path shares, so codes are bit-identical
-    across paths (the decode twin is ``sq8_decode_np``)."""
+    (vdiff <= 0) dims store -128 (decode = vmin, exact).  ``sq8_encode``
+    runs it per Arrow batch (the decode twin is ``sq8_decode_np``)."""
     vmin = vmin.astype(np.float64)
     vdiff = vdiff.astype(np.float64)
     codes = np.clip(
@@ -65,12 +66,11 @@ def sq8_encode_np(x: np.ndarray, vmin: np.ndarray, vdiff: np.ndarray) -> np.ndar
 def sq8_decode_np(
     raw: np.ndarray, vmin: np.ndarray, vdiff: np.ndarray, dtype=np.float32
 ) -> np.ndarray:
-    """Kernel-side decode of STORED codes (int8, offset -128): the single
-    numpy implementation every Arrow kernel shares (operators/topk.py,
-    operators/simjoin.py) — f64 math mirroring the JVM ``sq8_decode``
-    expression term-for-term, then ONE round to ``dtype``, so all decode
-    paths are bit-identical.  ``raw`` is (n, dim), any integer or float
-    dtype holding the stored code values."""
+    """The one SQ8 decode of STORED codes (int8, offset -128), shared by
+    ``sq8_decode`` and every Arrow kernel (operators/topk.py,
+    operators/simjoin.py): f64 math, then ONE round to ``dtype``.
+    ``raw`` is (n, dim), any integer or float dtype holding the stored
+    code values."""
     return (
         (raw.astype(np.float64) + 128.5) / 255.0 * vdiff.astype(np.float64)
         + vmin.astype(np.float64)
@@ -80,131 +80,72 @@ def sq8_decode_np(
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple:
     """Per-dimension (vmin, vdiff) float32 arrays learned from ``df`` —
     one narrow mapInArrow scan emitting O(dim) partial min/max rows per
-    Arrow batch (collected and combined driver-side; bounded by
-    batches x dim rows).  r14 (guide §4.2): the previous posexplode +
-    groupBy(pos) plan pushed n x dim ROWS through Generate + two
-    HashAggregates — at 1M x 64 that is a 64M-row explode for 64 numbers;
-    the batched kernel computes the same per-dim min/max/counts/NaN flags
-    with three vectorized reductions per batch.  Detection semantics are
-    identical (same error messages, pinned by tests/test_quantize.py):
-    null ROWS contribute nothing, null COMPONENTS count into n_all but
-    not n, ragged rows surface as per-dim count gaps, NaN flags per dim."""
+    Arrow batch, combined driver-side (bounded by batches x dim rows).
+    Null ROWS contribute nothing, null COMPONENTS count into n_all but not
+    n, ragged rows surface as per-dim count gaps, NaN flags per dim; each
+    defect raises its own ValueError (pinned by tests/test_quantize.py)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = ["j", "lo", "hi", "n", "n_all", "has_nan"]
 
     def partials(batches):
         for rb in batches:
             vcol = rb.column(0)
-            nrows = rb.num_rows
-            if nrows == 0:
-                continue
-            n_null_rows = vcol.null_count
-            lens = vcol.value_lengths().to_numpy(zero_copy_only=False)
-            if n_null_rows:
-                lens = lens[~np.isnan(lens.astype(np.float64))]
-            lens = lens.astype(np.int64, copy=False)
-            if len(lens) == 0:
+            lens = pc.fill_null(vcol.value_lengths(), 0).to_numpy()
+            d = int(lens.max(initial=0))
+            if d == 0:
                 continue
             flat = vcol.flatten()
-            uniform = len(np.unique(lens)) == 1
-            if uniform and flat.null_count == 0:
-                d = int(lens[0])
-                if d == 0:
-                    continue
-                x = flat.to_numpy(zero_copy_only=False).reshape(-1, d)
-                lo = np.minimum.reduce(x, axis=0).astype(np.float64)
-                hi = np.maximum.reduce(x, axis=0).astype(np.float64)
-                has_nan = np.isnan(x).any(axis=0)
-                cnt = np.full(d, x.shape[0], dtype=np.int64)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.arange(d, dtype=np.int64)),
-                        pa.array(lo),
-                        pa.array(hi),
-                        pa.array(cnt),
-                        pa.array(cnt),
-                        pa.array(has_nan),
-                    ],
-                    names=["j", "lo", "hi", "n", "n_all", "has_nan"],
-                )
-                continue
-            # slow path (ragged rows or null components): per-row combine,
-            # faithful to the posexplode semantics
-            dmax = int(lens.max())
-            if dmax == 0:
-                continue
-            lo = np.full(dmax, np.inf)
-            hi = np.full(dmax, -np.inf)
-            n = np.zeros(dmax, dtype=np.int64)
-            n_all = np.zeros(dmax, dtype=np.int64)
-            has_nan = np.zeros(dmax, dtype=bool)
-            for row in vcol.to_pylist():
-                if row is None:
-                    continue
-                for j, v in enumerate(row):
-                    n_all[j] += 1
-                    if v is None:
-                        continue
-                    n[j] += 1
-                    if v != v:  # NaN
-                        has_nan[j] = True
-                        continue
-                    if v < lo[j]:
-                        lo[j] = v
-                    if v > hi[j]:
-                        hi[j] = v
-            seen = n_all > 0
-            js = np.flatnonzero(seen)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(js.astype(np.int64)),
-                    pa.array(lo[js]),
-                    pa.array(hi[js]),
-                    pa.array(n[js]),
-                    pa.array(n_all[js]),
-                    pa.array(has_nan[js]),
-                ],
-                names=["j", "lo", "hi", "n", "n_all", "has_nan"],
-            )
+            x = flat.to_numpy(zero_copy_only=False)
+            valid = ~vcol.is_null().to_numpy(zero_copy_only=False)
+            if not flat.null_count and (lens[valid] == d).all():
+                x = x.reshape(-1, d)
+                lo, hi = x.min(0).astype(np.float64), x.max(0).astype(np.float64)
+                n = n_all = np.full(d, len(x))
+                has_nan = np.isnan(x).any(0)
+            else:
+                # ragged rows or null components: per-element dim positions
+                pos = np.arange(len(x)) - np.repeat(np.cumsum(lens) - lens, lens)
+                null = flat.is_null().to_numpy(zero_copy_only=False)
+                ok = ~np.isnan(x)
+                n_all = np.bincount(pos, minlength=d)
+                n = np.bincount(pos[~null], minlength=d)
+                has_nan = np.bincount(pos[~ok & ~null], minlength=d) > 0
+                lo, hi = np.full(d, np.inf), np.full(d, -np.inf)
+                np.minimum.at(lo, pos[ok], x[ok])
+                np.maximum.at(hi, pos[ok], x[ok])
+            cols = [np.arange(d), lo, hi, n, n_all, has_nan]
+            yield pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names=names)
 
-    part_rows = (
+    t = (
         df.select(F.col(vec_col).cast("array<float>").alias(vec_col))
         .mapInArrow(
             partials,
-            schema=(
-                "j bigint, lo double, hi double, n bigint, n_all bigint, "
-                "has_nan boolean"
-            ),
+            schema="j bigint, lo double, hi double, n bigint, n_all bigint, "
+            "has_nan boolean",
         )
-        .collect()
+        .toArrow()
     )
-    comb: dict = {}
-    for r in part_rows:
-        j = r["j"]
-        c = comb.get(j)
-        if c is None:
-            comb[j] = [r["lo"], r["hi"], r["n"], r["n_all"], r["has_nan"]]
-        else:
-            c[0] = min(c[0], r["lo"])
-            c[1] = max(c[1], r["hi"])
-            c[2] += r["n"]
-            c[3] += r["n_all"]
-            c[4] = c[4] or r["has_nan"]
-    rows = [
-        {"j": j, "lo": c[0], "hi": c[1], "n": c[2], "n_all": c[3],
-         "has_nan": c[4]}
-        for j, c in comb.items()
-    ]
-    if not rows:
+    if not t.num_rows:
         # explicit instead of max()-of-empty (ADVICE r9): empty frame,
         # all-null column, or a non-array column all land here
         raise ValueError(
             f"sq8_train: no vector values found in column {vec_col!r} "
             "(empty DataFrame or all-null column)"
         )
-    # NaN poisons the range silently otherwise (ADVICE r10): Spark's
-    # NaN-is-largest ordering makes F.max return NaN, so one NaN component
-    # would corrupt that dim's vdiff and every later encode/decode
-    nan_dims = sorted(r["j"] for r in rows if r["has_nan"])
+    j = t["j"].to_numpy()
+    dim = int(j.max()) + 1
+    lo, hi = np.full(dim, np.inf), np.full(dim, -np.inf)
+    np.fmin.at(lo, j, t["lo"].to_numpy())
+    np.fmax.at(hi, j, t["hi"].to_numpy())
+    n, n_all, has_nan = (
+        np.bincount(j, t[c].to_numpy().astype(np.int64), dim).astype(np.int64)
+        for c in ("n", "n_all", "has_nan")
+    )
+    # NaN poisons the range silently otherwise (ADVICE r10): one NaN
+    # component would corrupt that dim's vdiff and every later encode/decode
+    nan_dims = np.flatnonzero(has_nan).tolist()
     if nan_dims:
         raise ValueError(
             f"sq8_train: NaN vector components in column {vec_col!r} at "
@@ -212,35 +153,80 @@ def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple:
             "filter or impute them before training"
         )
     # null elements inside fixed-length vectors are a DIFFERENT defect
-    # than ragged lengths (ADVICE r10): count(v) skips nulls, count(*)
-    # doesn't — a gap between them names the real problem
-    null_dims = sorted(r["j"] for r in rows if r["n"] != r["n_all"])
+    # than ragged lengths (ADVICE r10): a gap between n and n_all names it
+    null_dims = np.flatnonzero(n != n_all).tolist()
     if null_dims:
         raise ValueError(
             f"sq8_train: null vector components in column {vec_col!r} at "
             f"dims {null_dims[:8]}{'...' if len(null_dims) > 8 else ''}; "
             "SQ8 needs fully-populated vectors"
         )
-    dim = max(r["j"] for r in rows) + 1
-    n_per_dim = {r["j"]: r["n_all"] for r in rows}
-    if len(set(n_per_dim.values())) > 1 or len(n_per_dim) != dim:
+    if n_all.min() != n_all.max():
         raise ValueError(
             f"sq8_train: ragged vectors in column {vec_col!r} — per-dim "
-            f"value counts differ ({min(n_per_dim.values())}.."
-            f"{max(n_per_dim.values())} across {len(n_per_dim)} of {dim} "
-            "dims); SQ8 needs a fixed dimension"
+            f"value counts differ ({n_all.min()}..{n_all.max()} across "
+            f"{dim} dims); SQ8 needs a fixed dimension"
         )
-    vmin = np.zeros(dim, dtype=np.float32)
-    vdiff = np.zeros(dim, dtype=np.float32)
-    for r in rows:
-        vmin[r["j"]] = r["lo"]
-        # degenerate (constant) dims keep vdiff 0 -> every code 0, exact
-        vdiff[r["j"]] = r["hi"] - r["lo"]
-    return vmin, vdiff
+    # degenerate (constant) dims keep vdiff 0 -> every code 0, exact
+    return lo.astype(np.float32), (hi - lo).astype(np.float32)
 
 
-def _lit_arr(a: np.ndarray):
-    return F.array(*[F.lit(float(v)) for v in a])
+def _sq8_map(
+    df: DataFrame, in_col: str, out_col: str, out_type, kernel, dim: int, what: str
+) -> DataFrame:
+    """``df`` with ``in_col`` replaced by ``out_col`` = ``kernel`` of each
+    Arrow batch's (n, dim) matrix, in 4096-row blocks: one narrow
+    mapInArrow.  The other columns ride through untouched (as
+    ``pq_encode``'s ``keep_cols``) and a NULL row maps to NULL; a ragged
+    row, a NULL element or a NaN raises ValueError."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keep = [f for f in df.schema.fields if f.name not in (in_col, out_col)]
+    names = [f.name for f in keep] + [out_col]
+    out_np = np.int8 if isinstance(out_type, ByteType) else np.float32
+
+    def run(batches):
+        for rb in batches:
+            col = rb.column(len(keep))
+            lens = pc.fill_null(col.value_lengths(), dim).to_numpy()
+            if (lens != dim).any():
+                raise ValueError(
+                    f"{what}: ragged vectors in column {in_col!r} — expected "
+                    f"{dim} values per row, found {int(lens[lens != dim][0])}; "
+                    "SQ8 needs a fixed dimension"
+                )
+            vals = col.flatten()
+            if vals.null_count:
+                raise ValueError(
+                    f"{what}: null vector components in column {in_col!r}; "
+                    "SQ8 needs fully-populated vectors"
+                )
+            x = vals.to_numpy(zero_copy_only=False).reshape(-1, dim)
+            nan_dims = np.flatnonzero(np.isnan(x).any(0)).tolist()
+            if nan_dims:
+                raise ValueError(
+                    f"{what}: NaN vector components in column {in_col!r} at "
+                    f"dims {nan_dims[:8]}{'...' if len(nan_dims) > 8 else ''}; "
+                    "filter or impute them first"
+                )
+            out = np.empty(x.shape, out_np)
+            for i in range(0, len(x), 4096):
+                out[i : i + 4096] = kernel(x[i : i + 4096])
+            valid = ~col.is_null().to_numpy(zero_copy_only=False)
+            offsets = np.concatenate([[0], np.cumsum(valid * dim)])
+            codec = pa.ListArray.from_arrays(
+                pa.array(offsets.astype(np.int32)),
+                pa.array(out.ravel()),
+                mask=pa.array(~valid) if col.null_count else None,
+            )
+            yield pa.RecordBatch.from_arrays(
+                rb.columns[: len(keep)] + [codec], names=names
+            )
+
+    return df.select(*[f.name for f in keep], in_col).mapInArrow(
+        run, StructType(keep + [StructField(out_col, ArrayType(out_type))])
+    )
 
 
 def sq8_encode(
@@ -251,21 +237,12 @@ def sq8_encode(
     out_col: str = "codes",
 ) -> DataFrame:
     """float32 vector -> array<tinyint> codes (stored code - 128 so the
-    unsigned 0..255 range fits Spark's signed byte).  FAISS Codec8bit
-    encode: clamp x_norm to [0, 1], code = floor(255 * x_norm) (truncating,
-    255 only at x_norm = 1).  Pure codegen."""
-    enc = F.zip_with(
-        F.col(vec_col),
-        F.arrays_zip(_lit_arr(vmin), _lit_arr(vdiff)),
-        lambda v, p: F.when(p["1"] <= 0.0, F.lit(-128)).otherwise(
-            F.least(
-                F.lit(255),
-                F.greatest(F.lit(0), F.floor((v - p["0"]) / p["1"] * 255.0)),
-            ).cast("int")
-            - 128
-        ).cast("tinyint"),
+    unsigned 0..255 range fits Spark's signed byte), ``sq8_encode_np`` per
+    Arrow batch."""
+    return _sq8_map(
+        df, vec_col, out_col, ByteType(),
+        lambda x: sq8_encode_np(x, vmin, vdiff), len(vmin), "sq8_encode",
     )
-    return df.withColumn(out_col, enc).drop(vec_col)
 
 
 def sq8_decode(
@@ -274,21 +251,13 @@ def sq8_decode(
     vdiff: np.ndarray,
     codes_col: str = "codes",
     out_col: str = "embedding",
-    drop_codes: bool = True,
 ) -> DataFrame:
-    """array<tinyint> codes -> reconstructed float32 vector at the BIN
-    CENTER, FAISS Codec8bit decode: x̂ = vmin + (code + 0.5)/255 * vdiff.
-    Lazy codegen: put this in front of any search operator and only
-    scanned rows pay the decode."""
-    dec = F.zip_with(
-        F.col(codes_col),
-        F.arrays_zip(_lit_arr(vmin), _lit_arr(vdiff)),
-        lambda c, p: (
-            p["0"] + (c.cast("int") + 128 + F.lit(0.5)) / 255.0 * p["1"]
-        ).cast("float"),
+    """array<tinyint> codes -> float32 vector at the bin center,
+    ``sq8_decode_np`` per Arrow batch."""
+    return _sq8_map(
+        df, codes_col, out_col, FloatType(),
+        lambda c: sq8_decode_np(c, vmin, vdiff), len(vmin), "sq8_decode",
     )
-    out = df.withColumn(out_col, dec)
-    return out.drop(codes_col) if drop_codes else out
 
 
 def sq8_reconstruction_error(vmin: np.ndarray, vdiff: np.ndarray) -> float:

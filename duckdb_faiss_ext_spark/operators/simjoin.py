@@ -114,9 +114,8 @@ def _pack_blocks(
     state by both).
 
     ``sq8``: optional (vmin, vdiff) — the input column is then SQ8
-    ``array<tinyint>`` codes, affine-decoded HERE per Arrow batch (same
-    kernel-side rule as operators/topk.py: the JVM zip_with decode runs
-    interpreted past janino's codegen budget); packed blocks always hold
+    ``array<tinyint>`` codes, decoded HERE per Arrow batch with
+    ``sq8_decode_np`` (the one SQ8 decode); packed blocks always hold
     decoded floats, so every downstream score kernel is unchanged."""
     import pyarrow as pa
 

@@ -297,13 +297,10 @@ def partial_topk(
 
     ``sq8``: optional ``(vmin, vdiff)`` float32 arrays — the corpus column
     is then SQ8 ``array<tinyint>`` codes, decoded HERE in one vectorized
-    numpy pass per Arrow batch instead of a JVM ``zip_with`` projection:
-    the 64-literal-element decode expression blows past janino's method
-    budget and falls back to interpreted eval, which benched 3.2x the raw
-    float scan (r10 bench_q1); kernel-side decode also shrinks the Arrow
-    transfer 4x.  f64 math mirroring the JVM expression exactly
-    (``vmin + (code+128.5)/255*vdiff`` then one float32 round) keeps both
-    decode paths bit-identical.
+    numpy pass per Arrow batch with ``sq8_decode_np``, the one SQ8 decode
+    (a JVM ``zip_with`` projection of the 64-literal-element decode blew
+    past janino's method budget and benched 3.2x the raw float scan, r10
+    bench_q1); kernel-side decode also shrinks the Arrow transfer 4x.
 
     ``dtype`` float32 (default) mirrors FAISS's internal precision; float64
     is for double-precision parity paths (oracle-checked queries)."""

@@ -1,11 +1,15 @@
 """SQ8 scalar quantization (functions/quantize.py): FAISS QT_8bit-style
-per-dim affine codes as pure codegen column ops."""
+per-dim affine codes, one numpy codec run per Arrow batch."""
+
+import ast
+import pathlib
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 from conftest import gen_vectors
 
+import duckdb_faiss_ext_spark
 from duckdb_faiss_ext_spark.functions.quantize import (
     sq8_decode,
     sq8_encode,
@@ -179,3 +183,67 @@ def test_sq8_l2_pairwise_matches_decode_path_and_orders_identically():
     assert np.array_equal(got, got2)
     # self-distance of an exactly-encodable point stays tiny
     assert got.min() >= 0.0
+
+
+def test_sq8_codec_null_rows_and_malformed_input(spark):
+    """A NULL row maps to a NULL row; a ragged row, a NULL element or a NaN
+    fails the encode (and a ragged or NULL-element code row the decode)
+    with a ValueError that names the defect."""
+    vmin, vdiff = np.zeros(2, np.float32), np.ones(2, np.float32)
+    ok = spark.createDataFrame(
+        [(0, [0.5, 1.0]), (1, None)], "vec_id bigint, embedding array<float>"
+    )
+    codes = sq8_encode(ok, vmin, vdiff).orderBy("vec_id").collect()
+    assert codes[0]["codes"] == [-1, 127] and codes[1]["codes"] is None
+    back = sq8_decode(sq8_encode(ok, vmin, vdiff), vmin, vdiff).orderBy("vec_id")
+    assert [r["embedding"] is None for r in back.collect()] == [False, True]
+    for rows, what in (
+        ([(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0])], "ragged vectors"),
+        ([(0, [1.0, 2.0]), (1, [None, 3.0])], "null vector components"),
+        ([(0, [1.0, 2.0]), (1, [float("nan"), 3.0])], "NaN vector components"),
+    ):
+        bad = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+        with pytest.raises(Exception, match=f"ValueError: sq8_encode: {what}"):
+            sq8_encode(bad, vmin, vdiff).collect()
+    for rows, what in (
+        ([(0, [1, 2]), (1, [1])], "ragged vectors"),
+        ([(0, [1, 2]), (1, [None, 3])], "null vector components"),
+    ):
+        bad = spark.createDataFrame(rows, "vec_id bigint, codes array<tinyint>")
+        with pytest.raises(Exception, match=f"ValueError: sq8_decode: {what}"):
+            sq8_decode(bad, vmin, vdiff).collect()
+
+
+PKG = pathlib.Path(duckdb_faiss_ext_spark.__file__).parent
+CODEC = {"sq8_encode", "sq8_decode", "sq8_encode_np", "sq8_decode_np"}
+
+
+def test_one_sq8_codec():
+    """Each SQ8 formula exists once: ``quantize.py`` builds no ``zip_with``
+    twin, defines the package's only SQ8 encode/decode functions, and
+    ``engine.py`` imports none beyond its four codec names."""
+    quantize = ast.parse((PKG / "functions" / "quantize.py").read_text())
+    assert not [
+        n for n in ast.walk(quantize)
+        if (isinstance(n, ast.Attribute) and n.attr == "zip_with")
+        or (isinstance(n, ast.Name) and n.id == "zip_with")
+    ]
+    defs = {
+        (path.name, fn.name)
+        for path in PKG.rglob("*.py")
+        for fn in ast.walk(ast.parse(path.read_text()))
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name.startswith("sq8_")
+        and ("encode" in fn.name or "decode" in fn.name)
+    }
+    assert defs == {("quantize.py", c) for c in CODEC}, defs
+    imported = {
+        (node.module, a.name)
+        for node in ast.walk(ast.parse((PKG / "engine.py").read_text()))
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if "sq8" in a.name and ("encode" in a.name or "decode" in a.name)
+    }
+    assert imported and imported <= {
+        ("duckdb_faiss_ext_spark.functions.quantize", c) for c in CODEC
+    }, imported

@@ -12,6 +12,7 @@ from conftest import gen_vectors
 from duckdb_faiss_ext_spark.engine import FaissSparkEngine
 from duckdb_faiss_ext_spark.errors import FaissSparkError
 from duckdb_faiss_ext_spark.factory import parse_factory
+from duckdb_faiss_ext_spark.functions.quantize import sq8_encode_np
 
 
 def _emb_df(spark, x, id_col="label"):
@@ -222,3 +223,69 @@ def test_sq8_margin_warning_absent_when_decode_is_exact(spark):
         eng.add("sq_const", _emb_df(spark, pts))
     hits = [c for c in caught if "QUANTIZATION-bound" in str(c.message)]
     assert not hits, [str(c.message) for c in hits]
+
+
+def _edge_corpus(n=2000, dim=8):
+    """A corpus whose range is pinned to [-4, 6] per dim, 3/4 of it in one
+    tight blob (so an IVF cap binds), with dim 2 constant, one row at
+    vmax, and rows at and one ulp below three bin edges."""
+    rng = np.random.default_rng(11)
+    nb = 3 * n // 4
+    x = np.vstack(
+        [rng.normal(5.0, 0.02, (nb, dim)), rng.uniform(-4.0, 4.0, (n - nb, dim))]
+    ).astype(np.float32)
+    edge = (-4.0 + 10.0 * np.array([1, 100, 254]) / 255.0).astype(np.float32)
+    x[:3] = edge[:, None]
+    x[3:6] = np.nextafter(edge, np.float32(-np.inf))[:, None]
+    x[6], x[7] = -4.0, 6.0
+    x[:, 2] = 1.5
+    return x
+
+
+def _stored_codes(idx, x):
+    """Stored codes in label order; each row must equal the numpy codec's
+    encode of the vector added under that label, bit for bit."""
+    t = idx.data.select("label", "codes").toArrow()
+    order = np.argsort(t["label"].to_numpy())
+    assert np.array_equal(t["label"].to_numpy()[order], np.arange(len(x)))
+    codes = (
+        t["codes"].combine_chunks().flatten().to_numpy().reshape(-1, x.shape[1])
+    )[order]
+    assert np.array_equal(codes, sq8_encode_np(x, idx.sq_vmin, idx.sq_vdiff))
+    return codes
+
+
+@pytest.mark.parametrize("factory", ["IDMap,Flat,SQ8", "IDMap,IVF8,SQ8"])
+def test_sq8_stored_codes_bit_identical_to_numpy_codec(spark, factory):
+    """The engine's encode stage and its decode view (the rebalance
+    sample) run the one numpy codec: stored codes equal ``sq8_encode_np``
+    after the first add, a clamping trained append and a corpus
+    rebalance."""
+    x = _edge_corpus()
+    n, dim = x.shape
+    ivf = "IVF" in factory
+    name = "sqbits_ivf" if ivf else "sqbits_flat"
+    eng = FaissSparkEngine(spark)
+    # no build-time rebalance: the blob keeps the histogram over the cap
+    eng.create(
+        name, dim, factory, metric_type="L2",
+        params={"rebalance_clusters": "0"} if ivf else None,
+    )
+    eng.add(name, _emb_df(spark, x))
+    idx = eng.registry.get(name)
+    assert idx.sq_vmin[0] == -4.0 and idx.sq_vdiff[0] == 10.0
+    assert idx.sq_vdiff[2] == 0.0
+    codes = _stored_codes(idx, x)
+    assert (codes[7, [0, 1, 3]] == 127).all()  # exactly vmax
+    # trained append outside [vmin, vmax]: clamped to stored -128 / 127
+    y = np.tile(np.float32([[-9.0], [11.0]]), (1, dim))
+    y[:, 2] = 3.0
+    xy = np.vstack([x, y])
+    eng.add(name, _emb_df(spark, xy).filter(F.col("label") >= n))
+    codes = _stored_codes(idx, xy)
+    assert (codes[n] == -128).all()
+    assert (np.delete(codes[n + 1], 2) == 127).all() and codes[n + 1, 2] == -128
+    if ivf:
+        idx.params["rebalance_clusters"] = "1"
+        assert eng.rebalance(name)["splits"] > 0
+        _stored_codes(idx, xy)
