@@ -7,13 +7,19 @@ joins/aggregations; no driver-side collection), so the same plan that handles
 500 docs at sf0.01 handles 10^9 docs on a cluster:
 
 - exact:        one groupBy on a 128-bit content hash (map-side combine).
-- MinHash LSH:  per-doc signature is a projection (no shuffle); candidate
-  pairs come from a self-join on band keys — cost scales with bucket
-  collision counts, not n^2.
+- banded LSH (MinHash, SimHash, cosine hyperplanes): per-doc signature is a
+  projection (no shuffle); the exploded (id, band, key) rows are grouped
+  ONCE into one row per bucket (sorted member ids + size), and each bucket
+  emits its pairs straight from its member list (``bucket_pairs``) — no
+  self-join, cost scales with bucket collision counts, not n^2.
 - n-gram Jaccard: explode grams -> join on gram -> count intersections; the
   join is hash-partitioned on the gram, skew-handled by AQE.
 - cosine near-dup: brute-force variant for oracle parity; LSH (random
   hyperplane) variant for scale, where pairs only form inside sign-buckets.
+
+The bucket frame is the one place a stage's signatures are computed: the cap
+audit and the pairs both read it, so a caller that persists it (the
+pipeline, examples/dedup_pipeline.py) pays the signature pass once.
 
 Hash choice: md5 (not xxhash64) wherever a DuckDB oracle must reproduce the
 value — both engines produce identical md5 hex strings.  Deterministic
@@ -23,11 +29,11 @@ tie-breaks everywhere: pairs are emitted with id_a < id_b.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from duckdb_faiss_ext_spark.functions.vector import cosine_batch_udf
+from duckdb_faiss_ext_spark.operators.lsh import sign_buckets
 from duckdb_faiss_ext_spark.session import local_frame
 
 WHITESPACE = r"\s+"
@@ -37,13 +43,12 @@ def _words(text_col: str):
     return F.split(F.trim(F.col(text_col)), WHITESPACE)
 
 
-
-
 def _ensure_parallelism(df: DataFrame, key: str) -> DataFrame:
-    """Self-join operators recompute their heavy projection once per side; if
-    the input arrives in fewer partitions than cores (e.g. one small parquet
-    file), that work serializes.  Repartition up to defaultParallelism —
-    a no-op on real multi-partition inputs, where this returns df unchanged.
+    """The signature and gram projections are the heavy narrow work of every
+    dedup operator; if the input arrives in fewer partitions than cores
+    (e.g. one small parquet file), that work serializes.  Repartition up to
+    defaultParallelism — a no-op on real multi-partition inputs, where this
+    returns df unchanged.
 
     The ``df.rdd`` partition-count probe converts the plan to an RDD plan
     (planning cost only, no job) once per dedup operator call — a conscious
@@ -73,87 +78,66 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(w, id_col, "left_semi")
 
 
-def _cap_buckets(
-    exploded: DataFrame,
-    keys: list,
-    max_bucket: int | None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Drop bucket groups larger than ``max_bucket`` before a bucket
-    self-join — the O(m²)-blowup guard shared by every banded-LSH candidate
-    generator (a bucket with m members emits m² candidate pairs; real
-    corpora have pathological buckets: boilerplate, empty docs, zero
-    vectors).  None = keep everything.
+def lsh_buckets(exploded: DataFrame) -> DataFrame:
+    """The bucket step shared by every banded-LSH generator: exploded
+    ``(_id, band, bkey)`` rows -> one row per bucket ``(band, bkey, ids,
+    size)``, ``ids`` the sorted distinct member ids, ``size`` the member
+    rows.  One aggregation; ``bucket_pairs`` reads both the cap audit and
+    the pairs from this frame."""
+    return exploded.groupBy("band", "bkey").agg(
+        F.sort_array(F.collect_set("_id")).alias("ids"),
+        F.count("*").alias("size"),
+    )
 
-    ``stats`` (VERDICT r11 task 5 — the no-silent-caps rule): pass a dict
-    to make the truncation LOUD — it receives ``bucket_cap_hits`` (buckets
-    dropped), ``bucket_cap_dropped_rows`` (member rows those buckets
-    held), and ``largest_bucket`` (max population across ALL buckets, cap
-    or no cap).  The audit aggregates the bucket histogram eagerly; the
-    histogram is persisted only for the duration of that one job and
-    unpersisted before returning (ADVICE r12: a long-lived session calling
-    capped pipelines repeatedly must not accumulate one-row-per-bucket
-    cached blocks).  When the audit shows ZERO buckets over the cap the
-    semi-join is skipped entirely — the common no-pathology case costs no
-    second aggregation; when buckets DID breach, the filter recomputes the
-    (map-side-combined) count, a trivial price next to the m²-pair join it
-    guards.  None keeps the operator fully lazy with zero extra jobs."""
+
+def bucket_pairs(
+    buckets: DataFrame,
+    max_bucket: int | None = None,
+    cap_stats: dict | None = None,
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b, band)``, ``id_a < id_b``, of every
+    ``lsh_buckets`` bucket with at most ``max_bucket`` members — emitted
+    straight from the sorted member list (each member pairs with the ones
+    after it), so there is no self-join and no distinct: a doc has one key
+    per band, so a pair shares at most one bucket per band.
+
+    ``max_bucket`` is the O(m²)-blowup guard (a bucket with m members emits
+    m²/2 pairs; real corpora have pathological buckets: boilerplate, empty
+    docs, zero vectors).  None = keep everything.
+
+    ``cap_stats`` (VERDICT r11 task 5 — the no-silent-caps rule): pass a
+    dict to make the truncation LOUD — it receives ``bucket_cap_hits``
+    (buckets dropped), ``bucket_cap_dropped_rows`` (member rows those
+    buckets held), ``largest_bucket`` (max population across ALL buckets,
+    cap or no cap) and ``max_bucket``, from one eager aggregate over the
+    bucket frame.  Without it the call runs no job."""
     if max_bucket is not None and max_bucket < 1:
-        # a cap of 0 would drop every bucket; with the old `or`-based audit
-        # it ALSO reported zero hits — a silent cap inside the no-silent-caps
-        # machinery (ADVICE r12).  Reject loudly instead.
-        raise ValueError(
-            f"_cap_buckets: max_bucket must be >= 1 or None, got {max_bucket}"
+        # a cap of 0 would drop every bucket while the audit reported zero
+        # hits — a silent cap inside the no-silent-caps machinery (ADVICE
+        # r12).  Reject loudly instead.
+        raise ValueError(f"max_bucket must be >= 1 or None, got {max_bucket}")
+    size = F.col("size")
+    if cap_stats is not None:
+        over = size > (2**62 if max_bucket is None else max_bucket)
+        row = buckets.agg(
+            F.max(size).alias("mx"),
+            F.sum(F.when(over, size)).alias("dropped"),
+            F.count(F.when(over, F.lit(1))).alias("hits"),
+        ).first()
+        cap_stats["largest_bucket"] = int(row["mx"] or 0)
+        cap_stats["bucket_cap_hits"] = int(row["hits"])
+        cap_stats["bucket_cap_dropped_rows"] = int(row["dropped"] or 0)
+        cap_stats["max_bucket"] = max_bucket
+    keep = size >= 2 if max_bucket is None else size.between(2, max_bucket)
+    return (
+        buckets.filter(keep)
+        .select("band", "ids", F.posexplode("ids").alias("_pos", "id_a"))
+        .select(
+            "id_a",
+            F.explode(F.expr("slice(ids, _pos + 2, size(ids))")).alias("id_b"),
+            "band",
         )
-    if max_bucket is None and stats is None:
-        return exploded
-    agg = exploded.groupBy(*keys).count()
-    over_rows = None
-    if stats is not None:
-        cap = 2**62 if max_bucket is None else max_bucket
-        agg = agg.persist()
-        try:
-            row = agg.agg(
-                F.max("count").alias("mx"),
-                F.sum(F.when(F.col("count") > cap, F.col("count"))).alias("dropped"),
-                F.count(F.when(F.col("count") > cap, F.lit(1))).alias("hits"),
-            ).first()
-            hits = int(row["hits"] or 0)
-            # ADVICE r13: collect the (small) over-cap key set WHILE the
-            # histogram is persisted, so neither the <=cap filter below nor
-            # a refine caller ever re-aggregates the full exploded lineage.
-            # hits is bounded in practice (pathological buckets are few);
-            # the 65536 guard keeps a degenerate corpus from driver-OOMing —
-            # past it we fall back to the lazy semi-join plan, loudly.
-            if 0 < hits <= 65536 and max_bucket is not None:
-                over_rows = [
-                    tuple(r)
-                    for r in agg.filter(F.col("count") > cap)
-                    .select(*keys)
-                    .collect()
-                ]
-                stats["_over_keys"] = over_rows
-        finally:
-            agg.unpersist(blocking=False)
-        stats["largest_bucket"] = int(row["mx"] or 0)
-        stats["bucket_cap_hits"] = hits
-        stats["bucket_cap_dropped_rows"] = int(row["dropped"] or 0)
-        stats["max_bucket"] = max_bucket
-        if max_bucket is None or hits == 0:
-            return exploded  # no bucket over cap: the filter is a no-op
-    if max_bucket is None:
-        return exploded
-    if over_rows is not None:
-        # broadcast ANTI join against the collected over-cap keys: no second
-        # aggregation of the exploded lineage at execution time
-        over_df = F.broadcast(
-            local_frame(
-                exploded.sparkSession, exploded.select(*keys).schema, over_rows
-            )
-        )
-        return exploded.join(over_df, keys, "left_anti")
-    ok = agg.filter(F.col("count") <= max_bucket).select(*keys)
-    return exploded.join(ok, keys, "left_semi")
+    )
 
 
 def _shingles(text_col: str, n: int, distinct: bool = True):
@@ -203,6 +187,38 @@ def minhash_signature(
     return hashed.select(*cols)
 
 
+def minhash_buckets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 4,
+    band_size: int = 2,
+    shingle_n: int = 1,
+) -> DataFrame:
+    """``lsh_buckets`` of the MinHash bands: bands = num_hashes/band_size,
+    band key = md5(concat of its signatures)."""
+    if num_hashes % band_size:
+        raise ValueError("num_hashes must be a multiple of band_size")
+    df = _ensure_parallelism(df, id_col)
+    sig = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat(*[F.col(f"mh_{b * band_size + j}") for j in range(band_size)])
+                ).alias("bkey"),
+            )
+            for b in range(num_hashes // band_size)
+        ]
+    )
+    return lsh_buckets(
+        sig.select(
+            F.col(id_col).alias("_id"), F.explode(band_structs).alias("b")
+        ).select("_id", "b.band", "b.bkey")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -214,26 +230,26 @@ def minhash_lsh_pairs(
     cap_stats: dict | None = None,
     cap_mode: str = "drop",
     refine_depth: int = 2,
+    buckets: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b, band) sharing an LSH band.
+    """Candidate near-dup pairs (id_a < id_b, band) sharing an LSH band
+    bucket: ``bucket_pairs`` over ``minhash_buckets`` — no n^2, no
+    self-join.
 
-    bands = num_hashes/band_size; band key = md5(concat of its signatures).
-    The self-join is on (band_idx, band_key) — hash-partitioned, no n^2.
-
-    ``max_bucket`` caps the self-join blowup at corpus scale: a band bucket
-    with m members emits O(m²) pairs, and real corpora have pathological
-    buckets (boilerplate/empty docs sharing a signature band).  ``cap_mode``
-    picks what happens to oversized buckets (r13, VERDICT r12 task 4 — the
+    ``max_bucket`` caps the pair blowup at corpus scale: a band bucket with
+    m members emits O(m²) pairs, and real corpora have pathological buckets
+    (boilerplate/empty docs sharing a signature band).  ``cap_mode`` picks
+    what happens to oversized buckets (r13, VERDICT r12 task 4 — the
     cap-recall receipt in SCALE.md MEASURED the old "members still pair
     through their other bands" assumption and found it fails on
     boilerplate-clique corpora: verified-pair recall 0.81 capped-vs-
     uncapped at 20k docs, because template-common min-grams dominate BOTH
     of a doc's bands at once):
 
-    - ``'drop'`` (default): oversized buckets are dropped BEFORE the join;
-      groups of near-dups bigger than max_bucket are better handled by
-      exact_dedup upstream.  Cheapest, and correct when the oversized mass
-      is exact boilerplate — but lossy on near-dup cliques (receipt above).
+    - ``'drop'`` (default): oversized buckets emit no pairs; groups of
+      near-dups bigger than max_bucket are better handled by exact_dedup
+      upstream.  Cheapest, and correct when the oversized mass is exact
+      boilerplate — but lossy on near-dup cliques (receipt above).
     - ``'refine'``: members of oversized buckets are RE-BANDED with wider
       shingles (``shingle_n + 2`` per level — more selective grams split
       template-common buckets by their distinguishing tokens while
@@ -241,14 +257,15 @@ def minhash_lsh_pairs(
       re-applied, recursively up to ``refine_depth`` levels (default 2);
       buckets still oversized at the bottom are dropped loudly.  Pairs =
       healthy-bucket pairs ∪ refined pairs; one extra signature pass per
-      level over ONLY that level's oversized members, zero extra jobs when
-      no bucket breaches.  ``cap_stats`` additionally receives
-      ``refined_docs`` / ``refined_bucket_cap_hits`` /
-      ``refined_dropped_rows`` (the deepest level's residual drop).
-      Measured on the boilerplate-clique profile at 20k docs (SCALE.md
-      r13): verified-pair recall 0.81 (drop) -> 0.98 (refine, depth 2)
-      vs the uncapped run, at +16 s on a 6 s leg — and the wider grams
-      additionally surface true near-dup pairs the base banding missed.
+      level over ONLY that level's oversized members (read from the
+      over-cap bucket rows), zero extra jobs when no bucket breaches.
+      ``cap_stats`` additionally receives ``refined_docs`` /
+      ``refined_bucket_cap_hits`` / ``refined_dropped_rows`` (the deepest
+      level's residual drop).  Measured on the boilerplate-clique profile
+      at 20k docs (SCALE.md r13): verified-pair recall 0.81 (drop) -> 0.98
+      (refine, depth 2) vs the uncapped run, at +16 s on a 6 s leg — and
+      the wider grams additionally surface true near-dup pairs the base
+      banding missed.
 
     ``band`` semantics under refine (ADVICE r13): refined pairs carry
     ``band + nbands * level`` (level 1 = first re-banding, ...), so
@@ -258,87 +275,37 @@ def minhash_lsh_pairs(
     wanting unique pairs must ``.select("id_a", "id_b").distinct()`` (the
     canonical pipeline does, examples/dedup_pipeline.py).
 
-    None (default) keeps every bucket — the oracle-parity setting."""
-    assert num_hashes % band_size == 0
+    ``buckets``: ``minhash_buckets`` of this ``df`` with the same
+    ``num_hashes``, ``band_size`` and ``shingle_n``, from a caller that
+    keeps it persisted until it has consumed the pairs, so the audit, the
+    refine pass and the pairs all read one signature pass.  None (default)
+    builds it here; a refine call then persists it only while the call
+    runs, so nothing stays cached after it returns.
+
+    ``max_bucket=None`` (default) keeps every bucket — the oracle-parity
+    setting.  ``id_col`` must be a unique key."""
     if cap_mode not in ("drop", "refine"):
         raise ValueError(
             f"minhash_lsh_pairs: cap_mode must be drop|refine, got {cap_mode!r}"
         )
-    df = _ensure_parallelism(df, id_col)
-    sig = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
     nbands = num_hashes // band_size
     refine_active = cap_mode == "refine" and max_bucket is not None
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(*[F.col(f"mh_{b * band_size + j}") for j in range(band_size)])
-                ).alias("bkey"),
-            )
-            for b in range(nbands)
-        ]
-    )
-    exploded_raw = sig.select(
-        F.col(id_col).alias("_id"), F.explode(band_structs).alias("b")
-    ).select("_id", "b.band", "b.bkey")
-    # refine mode needs the audit eagerly (to know WHICH buckets breached),
-    # so it forces a stats pass even when the caller didn't ask for one
+    # refine needs the audit eagerly (to know WHETHER buckets breached), so
+    # it forces a stats pass even when the caller didn't ask for one
     stats = cap_stats if cap_stats is not None else ({} if refine_active else None)
-    if refine_active:
-        # ADVICE r13: the audit job materializes the signature/explode
-        # lineage once; persisting it here lets the breach path (over-member
-        # semi-join, refined signature pass, refined_docs stat) reuse it
-        # instead of re-running the full corpus signature pass per job.
-        # Unpersisted before return — the returned lazy plan pays one
-        # recompute at final execution, the eager refine phase pays zero.
-        exploded_raw = exploded_raw.persist()
+    owned = buckets is None and refine_active
+    if buckets is None:
+        buckets = minhash_buckets(
+            df, id_col, text_col, num_hashes, band_size, shingle_n
+        )
+    if owned:
+        # the audit and the breach path (over-member ids) both read it
+        buckets = buckets.persist()
     try:
-        exploded = _cap_buckets(exploded_raw, ["band", "bkey"], max_bucket, stats)
-        # private audit channel (collected over-cap keys), not a user stat
-        over_keys = stats.pop("_over_keys", None) if stats is not None else None
-
-        def bucket_pairs(ex: DataFrame) -> DataFrame:
-            a, b = ex.alias("a"), ex.alias("b")
-            return (
-                a.join(
-                    b,
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bkey") == F.col("b.bkey"))
-                    & (F.col("a._id") < F.col("b._id")),
-                )
-                .select(
-                    F.col("a._id").alias("id_a"),
-                    F.col("b._id").alias("id_b"),
-                    F.col("a.band").alias("band"),
-                )
-                .distinct()
-            )
-
-        pairs = bucket_pairs(exploded)
+        pairs = bucket_pairs(buckets, max_bucket, stats)
         if refine_active and stats["bucket_cap_hits"] > 0:
-            if over_keys is not None:
-                # over-cap keys were collected during the audit's persisted
-                # window (ADVICE r13) — a broadcast join, not a second
-                # full-corpus histogram
-                over = F.broadcast(
-                    local_frame(
-                        df.sparkSession,
-                        exploded_raw.select("band", "bkey").schema,
-                        over_keys,
-                    )
-                )
-            else:  # >65536 breached buckets: lazy fallback plan
-                over = (
-                    exploded_raw.groupBy("band", "bkey")
-                    .count()
-                    .filter(F.col("count") > max_bucket)
-                    .select("band", "bkey")
-                )
-            over_ids = (
-                exploded_raw.join(over, ["band", "bkey"], "left_semi")
-                .select(F.col("_id").alias(id_col))
-                .distinct()
+            over_ids = buckets.filter(F.col("size") > max_bucket).select(
+                F.explode("ids").alias(id_col)
             )
             over_docs = df.join(over_ids, id_col, "left_semi").persist()
             try:
@@ -354,11 +321,9 @@ def minhash_lsh_pairs(
                 )
             finally:
                 over_docs.unpersist(blocking=False)
-            # band provenance tag (ADVICE r13): refined pairs get band +=
-            # nbands per refine level, so band // nbands == refine level and
-            # base vs refined rows are distinguishable.  The same (id_a,
-            # id_b) can surface at several levels — callers wanting unique
-            # pairs must distinct on (id_a, id_b); see docstring.
+            # band provenance tag (ADVICE r13): band // nbands == refine
+            # level, so the levels' rows never collide and the union needs
+            # no distinct
             refined = refined.withColumn(
                 "band", (F.col("band") + F.lit(nbands)).cast("int")
             )
@@ -373,10 +338,10 @@ def minhash_lsh_pairs(
                     "refined_dropped_rows",
                     sub_stats.get("bucket_cap_dropped_rows"),
                 )
-            pairs = pairs.unionByName(refined).distinct()
+            pairs = pairs.unionByName(refined)
     finally:
-        if refine_active:
-            exploded_raw.unpersist(blocking=False)
+        if owned:
+            buckets.unpersist(blocking=False)
     return pairs
 
 
@@ -568,54 +533,45 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup candidates: pairs whose SimHashes differ in <= max_hamming
     bits.  Banded by 16-bit chunks (pigeonhole: <=3 flips over 4 chunks means
-    some chunk is identical) so the join is on chunk value, not n^2.
-    ``max_bucket`` drops oversized chunk buckets (see _cap_buckets)."""
+    some chunk is identical) so pairs form inside chunk buckets, not n^2.
+    ``max_bucket`` drops oversized chunk buckets (see bucket_pairs)."""
     sh = simhash64(df, id_col, text_col)
     chunks = F.array(
         *[
             F.struct(
-                F.lit(c).alias("chunk"),
+                F.lit(c).alias("band"),
                 F.shiftright(F.col("simhash"), c * 16)
                 .bitwiseAND(F.lit(0xFFFF))
-                .alias("ckey"),
+                .alias("bkey"),
             )
             for c in range(4)
         ]
     )
-    e = sh.select(
-        F.col(id_col).alias("_id"), F.col("simhash"), F.explode(chunks).alias("c")
-    ).select("_id", "simhash", "c.chunk", "c.ckey")
-    e = _cap_buckets(e, ["chunk", "ckey"], max_bucket)
-    a, b = e.alias("a"), e.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ckey") == F.col("b.ckey"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
+    buckets = lsh_buckets(
+        sh.select(F.col(id_col).alias("_id"), F.explode(chunks).alias("c"))
+        .select("_id", "c.band", "c.bkey")
     )
-    return cand.withColumn(
-        "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    ).filter(F.col("hamming") <= max_hamming).select("id_a", "id_b", "hamming")
+    cand = bucket_pairs(buckets, max_bucket).select("id_a", "id_b").distinct()
+    sa = sh.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
+    sb = sh.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
 
 
-def _components_driver(spark, edges: DataFrame, stats: dict | None) -> DataFrame:
-    """Exact connected components of a SMALL symmetrized edge list on the
-    driver: vectorized min-label relaxation + pointer jumping over numpy
-    arrays — no per-round Spark jobs.  Same (id, comp) contract as the
-    distributed path; comp = min id reachable (np.unique sorts ascending,
-    so index-space minima map back to id-space minima).  At fixpoint every
-    edge (u, v) has comp[u] == comp[v], i.e. labels are constant per
-    component and equal to the component min."""
-    pdf = edges.toPandas()
+def _components_driver(spark, pdf, stats: dict | None) -> DataFrame:
+    """Exact connected components of a SMALL symmetrized edge list (the
+    collected (src, dst) pandas frame) on the driver: vectorized min-label
+    relaxation + pointer jumping over numpy arrays — no per-round Spark
+    jobs.  Same (id, comp) contract as the distributed path; comp = min id
+    reachable (np.unique sorts ascending, so index-space minima map back to
+    id-space minima).  At fixpoint every edge (u, v) has comp[u] == comp[v],
+    i.e. labels are constant per component and equal to the component
+    min."""
     if len(pdf) == 0:
         if stats is not None:
             stats["rounds"] = 0
@@ -706,17 +662,19 @@ def neardup_components(
             .filter(F.col("_rn") <= max_degree)
             .drop("_rn")
         )
-    edges = edges.localCheckpoint(eager=False)
-
     if small_collect is not None:
-        # branch decision: one bounded count (materializes the checkpoint
-        # the distributed path would pay for anyway on its first round)
-        m = edges.limit(small_collect + 1).count()
-        if m <= small_collect:
+        # one bounded collect is both the branch decision and the driver
+        # path's input; a full cap + 1 rows means the graph is too big and
+        # the distributed path takes over
+        pdf = edges.limit(small_collect + 1).toPandas()
+        if len(pdf) <= small_collect:
             if stats is not None:
-                stats["edges"] = m
-            return _components_driver(pairs.sparkSession, edges, stats)
+                stats["edges"] = len(pdf)
+            return _components_driver(pairs.sparkSession, pdf, stats)
 
+    # checkpointed only here: a local checkpoint stays cached for the
+    # session, which the driver path above has no use for
+    edges = edges.localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -815,6 +773,72 @@ def cosine_neardup_pairs(
     )
 
 
+def cosine_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int = 16,
+    n_bands: int = 4,
+    seed: int = 42,
+) -> DataFrame:
+    """``lsh_buckets`` of random-hyperplane sign bands: each vector gets
+    ``n_planes`` sign bits, split into ``n_bands`` bands of consecutive
+    bits; signs and band keys come out of one narrow ``mapInArrow``
+    (``lsh.sign_buckets``), one (id, band, key) row per band."""
+    if n_planes % n_bands:
+        raise ValueError("n_planes must be a multiple of n_bands")
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((dim, n_planes)).astype(np.float32)
+    # sign bit j of the n_planes-bit signature is bit j - band*width of its
+    # band's key: band t holds planes [t*width, (t+1)*width)
+    banded = planes.T.reshape(n_bands, n_planes // n_bands, dim)
+    signs = sign_buckets(df, id_col, vec_col, banded)
+    return lsh_buckets(
+        signs.select(
+            F.col("id").alias("_id"),
+            F.col("table").alias("band"),
+            F.col("bucket").alias("bkey"),
+        )
+    )
+
+
+def cosine_verify_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float = 0.4,
+) -> DataFrame:
+    """Exact cosine for a GIVEN candidate-pair set: (id_a, id_b, cos_full)
+    for every distinct input pair with cosine > threshold.  Only ids move
+    through the distinct; vectors join back ON THE DEDUPED PAIRS (carrying
+    the vectors through the band explode and a distinct over float arrays
+    was once ~60% of the whole sf0.1 pipeline).
+
+    The cosine runs in a VECTORIZED Arrow pandas_udf (float64 numpy over
+    the whole batch) rather than Catalyst aggregate/zip_with lambdas:
+    higher-order functions evaluate per element (~35 µs/pair at 64 dim)
+    and this join is exactly what the candidate count scales — measured
+    1.8x on the sf0.1 pipeline stage.  The brute oracle-parity path
+    (cosine_neardup_pairs) keeps the JVM expression."""
+    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    # marked nondeterministic so Catalyst cannot copy the call into the
+    # filter below: a deterministic Python UDF would run twice per pair,
+    # once for the filter and once for the projection
+    cosine = cosine_batch_udf().asNondeterministic()
+    return (
+        pairs.select("id_a", "id_b")
+        .distinct()
+        .join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("cos_full", cosine(F.col("va"), F.col("vb")))
+        .filter(F.col("cos_full") > threshold)
+        .select("id_a", "id_b", "cos_full")
+    )
+
+
 def cosine_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -827,74 +851,13 @@ def cosine_lsh_pairs(
     max_bucket: int | None = None,
     cap_stats: dict | None = None,
 ) -> DataFrame:
-    """Scale path: random-hyperplane LSH.  Each vector gets n_planes sign
-    bits (one broadcast matmul in a pandas_udf); bits are split into bands
-    and pairs only form inside identical (band, bits) buckets, then exact
-    cosine verifies.  Recall < 1 by construction (candidates must agree on
-    some band); raise n_bands/lower band width for higher recall.
-
-    The verify computes cosine in a VECTORIZED Arrow pandas_udf (float64
-    numpy over the whole batch) rather than Catalyst aggregate/zip_with
-    lambdas: higher-order functions evaluate per element (~35 µs/pair at
-    64 dim) and the verify join is exactly what the candidate count scales
-    — measured 1.8x on the sf0.1 pipeline stage.  The brute oracle-parity
-    path (cosine_neardup_pairs) keeps the JVM expression."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype(np.float32)
-    spark = df.sparkSession
-    bpl = spark.sparkContext.broadcast(planes)
-
-    def signs(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float32)
-        bits = (x @ bpl.value) > 0
-        vals = (bits * (1 << np.arange(n_planes, dtype=np.int64))).sum(axis=1)
-        return pd.Series(vals.astype(np.int64))
-
-    signs_udf = F.pandas_udf(signs, "bigint")
-    assert n_planes % n_bands == 0
-    width = n_planes // n_bands
-    sig = df.select(
-        F.col(id_col).alias("_id"), signs_udf(F.col(vec_col)).alias("sig")
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("band"),
-                F.shiftright(F.col("sig"), c * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("bkey"),
-            )
-            for c in range(n_bands)
-        ]
-    )
-    # candidate discovery moves ONLY ids through the band self-join and the
-    # distinct — vectors join back ON THE DEDUPED PAIRS for the verify.
-    # The first version carried the vector column through the x n_bands
-    # explode, the self-join AND a distinct over the float arrays: at sf0.1
-    # that distinct alone was ~60% of the whole dedup pipeline's runtime.
-    e = sig.select("_id", F.explode(bands).alias("b")).select(
-        "_id", "b.band", "b.bkey"
-    )
-    e = _cap_buckets(e, ["band", "bkey"], max_bucket, cap_stats)
-    if cap_stats is not None:  # private audit channel, not a user-facing stat
-        cap_stats.pop("_over_keys", None)
-    a, b = e.alias("a"), e.alias("b")
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand_ids.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos_full", cosine_batch_udf()(F.col("va"), F.col("vb")))
-        .filter(F.col("cos_full") > threshold)
-        .select("id_a", "id_b", "cos_full")
+    """Scale path: random-hyperplane LSH — ``cosine_buckets``, then
+    ``bucket_pairs`` (pairs only form inside identical (band, bits)
+    buckets; ``max_bucket`` / ``cap_stats`` as there), then exact cosine
+    verifies (``cosine_verify_pairs``).  Recall < 1 by construction
+    (candidates must agree on some band); raise n_bands/lower band width
+    for higher recall."""
+    buckets = cosine_buckets(df, id_col, vec_col, dim, n_planes, n_bands, seed)
+    return cosine_verify_pairs(
+        df, bucket_pairs(buckets, max_bucket, cap_stats), id_col, vec_col, threshold
     )

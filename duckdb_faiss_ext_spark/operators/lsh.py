@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 
 from duckdb_faiss_ext_spark.operators.topk import exact_knn_flat
 
-__all__ = ["lsh_signatures", "lsh_ann_cosine"]
+__all__ = ["lsh_signatures", "sign_buckets", "lsh_ann_cosine"]
 
 
 def _planes(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray:
@@ -67,8 +67,6 @@ def lsh_signatures(
     """(id, table INT, bucket BIGINT) — one row per (input row, table).
 
     Sign-bit signature: bucket = sum_j ((v - center) . plane_j > 0) << j.
-    Arrow-batched numpy; the (tables*planes, dim) matrix rides a broadcast
-    variable, one matmul per batch covers all tables at once.
 
     ``center``: hyperplanes pass through this point instead of the origin.
     For a corpus confined to one orthant (e.g. all-positive features), origin
@@ -76,14 +74,34 @@ def lsh_signatures(
     was 83% of the corpus, i.e. the bucketing had collapsed.  Centering on
     the corpus mean (``corpus_mean``) restores balanced buckets; re-ranking
     still uses the TRUE cosine, so centering only shapes the candidate set."""
+    return sign_buckets(
+        df, id_col, vec_col, _planes(dim, n_planes, n_tables, seed), center
+    )
+
+
+def sign_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: np.ndarray,
+    center: Optional[np.ndarray] = None,
+) -> DataFrame:
+    """(id, table INT, bucket BIGINT) from ``planes`` (tables, planes, dim):
+    bucket t = sum_j ((v - center) . planes[t, j] > 0) << j.
+
+    One narrow ``mapInArrow``: Arrow-batched numpy, the (tables*planes, dim)
+    matrix rides a broadcast variable, one matmul per batch covers all
+    tables at once."""
     import pyarrow as pa
 
-    planes = _planes(dim, n_planes, n_tables, seed)
     spark = df.sparkSession
     bp = spark.sparkContext.broadcast(
-        (planes, None if center is None else np.asarray(center, dtype=np.float32))
+        (
+            np.asarray(planes, dtype=np.float32),
+            None if center is None else np.asarray(center, dtype=np.float32),
+        )
     )
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
+    weights = (1 << np.arange(planes.shape[1], dtype=np.int64))
     out_schema = pa.schema(
         [("id", pa.int64()), ("table", pa.int32()), ("bucket", pa.int64())]
     )

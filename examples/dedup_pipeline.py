@@ -3,8 +3,9 @@
 The canonical LLM-corpus cleaning flow, each stage a bounded-cost Spark job:
 
   1. exact dedup        — md5(text) groupBy, min-id survivor (1 shuffle)
-  2. near-dup candidates — shingle -> MinHash -> banded LSH bucket self-join
-                           (pairs only form inside identical band buckets)
+  2. near-dup candidates — shingle -> MinHash -> banded LSH buckets (pairs
+                           only form inside identical band buckets, emitted
+                           from each bucket's member list)
   3. verification       — exact word-3-gram Jaccard computed PER candidate
                            pair (two hash joins; never a gram self-join)
   4. semantic near-dup  — embedding cosine via hyperplane-LSH buckets
@@ -14,17 +15,20 @@ The canonical LLM-corpus cleaning flow, each stage a bounded-cost Spark job:
 
 Stage 5 follows CHAINS exactly (a~b, b~c groups all three even when a!~c
 directly), unlike single-pass drop-the-larger-id selection.  At 100 TB
-every stage stays bucket-bounded: no stage joins more than (band-bucket
-population)^2 rows, and stages 2-4 never shuffle the full text column —
-only ids, signatures, and candidate pairs move.
+every stage stays bucket-bounded: no stage emits more than (band-bucket
+population)^2 pairs, and stages 2-4 never shuffle the full text column —
+only ids, signatures, and candidate pairs move.  Stages 2 and 4 each keep
+their bucket frame persisted from the cap audit through the stage's count,
+so each stage's signatures (md5 over the 3-grams, the hyperplane signs) are
+computed once per pass.
 
 Scale knobs (set MAX_BUCKET / MAX_DEGREE below; tools/dedup_probe.py
 measures them at 1M docs — SCALE.md):
 
-- ``max_bucket`` (stages 2 and 4): drops band buckets bigger than this
-  before the self-join — a degenerate bucket of m rows would emit m²
-  candidate pairs; docs that pile into huge buckets are boilerplate better
-  handled by exact dedup upstream.
+- ``max_bucket`` (stages 2 and 4): band buckets bigger than this emit no
+  pairs — a degenerate bucket of m rows would emit m² candidate pairs;
+  docs that pile into huge buckets are boilerplate better handled by exact
+  dedup upstream.
 - ``max_degree`` (stage 5): caps each node's retained edges to its
   max_degree smallest neighbors, so a dup clique of m docs carries m·d
   edges through every propagation round instead of m².
@@ -58,9 +62,12 @@ def run_pipeline(
     and a regression in ONE stage is attributable per bench round —
     VERDICT r4 task 6)."""
     from duckdb_faiss_ext_spark.operators.dedup import (
-        cosine_lsh_pairs,
+        bucket_pairs,
+        cosine_buckets,
+        cosine_verify_pairs,
         exact_dedup,
         jaccard_verify_pairs,
+        minhash_buckets,
         minhash_lsh_pairs,
         neardup_survivors,
     )
@@ -84,13 +91,17 @@ def run_pipeline(
     # dropped-doc recall 0.77 vs uncapped at 200k — SCALE.md r13 receipt);
     # wider-shingle re-banding of just the oversized members recovers
     # 0.976 / 0.9995 at zero cost when no bucket breaches
+    # the bucket frame stays persisted from the audit through the count, so
+    # the md5 signature pass runs once for the audit AND the pairs
     lsh_cap: dict = {}
+    lsh_buckets = minhash_buckets(docs, "doc_id", "text", 4, 2, shingle_n=3).persist()
     cand = minhash_lsh_pairs(
         docs, "doc_id", "text", 4, 2, shingle_n=3, max_bucket=max_bucket,
-        cap_stats=lsh_cap, cap_mode="refine",
+        cap_stats=lsh_cap, cap_mode="refine", buckets=lsh_buckets,
     )
     cand_ids = cand.select("id_a", "id_b").distinct().cache()
     n_cand = cand_ids.count()
+    lsh_buckets.unpersist()
     timings["lsh_candidates"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     # verify the candidate pairs DIRECTLY — O(|pairs|), two hash joins
@@ -116,24 +127,27 @@ def run_pipeline(
     # band instead of 16 — the verify join scores ~n²/buckets pairs, so
     # band width is the direct scale knob (16 planes / 4-bit bands spent
     # ~60% of the whole pipeline exact-verifying bucket collisions).
+    # cosine_lsh_pairs composed here so the bucket frame (the hyperplane
+    # signs) stays persisted from the audit through the count
     dim = len(emb.select("embedding").first()[0])
+    vecs = emb.withColumnRenamed("vec_id", "doc_id")
     sem_cap: dict = {}
+    sem_buckets = cosine_buckets(
+        vecs, "doc_id", "embedding", dim, n_planes=24, n_bands=4
+    ).persist()
     sem = (
-        cosine_lsh_pairs(
-            emb.withColumnRenamed("vec_id", "doc_id"),
+        cosine_verify_pairs(
+            vecs,
+            bucket_pairs(sem_buckets, max_bucket, sem_cap),
             "doc_id",
             "embedding",
-            dim,
             threshold=0.95,
-            n_planes=24,
-            n_bands=4,
-            max_bucket=max_bucket,
-            cap_stats=sem_cap,
         )
         .select(F.col("id_a"), F.col("id_b"))
         .cache()
     )
     n_sem = sem.count()
+    sem_buckets.unpersist()
     timings["semantic_lsh"] = time.perf_counter() - t0
     t0 = time.perf_counter()
 

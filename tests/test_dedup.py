@@ -413,3 +413,167 @@ def test_bucket_cap_refine_recovers_verified_pairs(spark):
     assert same == truth
     with pytest.raises(ValueError, match="cap_mode must be"):
         minhash_lsh_pairs(df, "doc_id", "text", 4, 2, cap_mode="split")
+
+
+# ------------------------------------------- bucket pair step vs a driver oracle
+
+
+def _oracle_pairs(keys_by_id, max_bucket):
+    """Driver-side banding: {(band, key): members}, then every pair of each
+    bucket with at most ``max_bucket`` members, as sorted (id_a, id_b, band)
+    rows, plus the ids of the over-cap buckets' members."""
+    buckets: dict = {}
+    for i, keys in keys_by_id.items():
+        for band, key in enumerate(keys):
+            buckets.setdefault((band, key), []).append(i)
+    rows, over = [], set()
+    for (band, _), members in buckets.items():
+        if max_bucket is not None and len(members) > max_bucket:
+            over.update(members)
+            continue
+        members = sorted(members)
+        rows += [
+            (a, b, band) for j, a in enumerate(members) for b in members[j + 1:]
+        ]
+    return sorted(rows), over
+
+
+def _minhash_keys(texts, shingle_n, num_hashes=4, band_size=2):
+    import hashlib
+
+    out = {}
+    for i, text in texts.items():
+        w = text.split()
+        grams = [
+            " ".join(w[j: j + shingle_n])
+            for j in range(max(len(w) - shingle_n, 0) + 1)
+        ]
+        digests = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+        sig = [min(d[8 * h: 8 * h + 8] for d in digests) for h in range(num_hashes)]
+        out[i] = [
+            hashlib.md5("".join(sig[b: b + band_size]).encode()).hexdigest()
+            for b in range(0, num_hashes, band_size)
+        ]
+    return out
+
+
+def _minhash_oracle(texts, shingle_n, max_bucket, refine_depth=0, level=0):
+    """minhash_lsh_pairs' rows: the base banding, and under refine the
+    over-cap members re-banded with shingle_n + 2 per level, band + 2."""
+    rows, over = _oracle_pairs(_minhash_keys(texts, shingle_n), max_bucket)
+    rows = [(a, b, band + 2 * level) for a, b, band in rows]
+    if refine_depth and over:
+        sub = {i: texts[i] for i in over}
+        rows += _minhash_oracle(sub, shingle_n + 2, max_bucket, refine_depth - 1, level + 1)
+    return sorted(rows)
+
+
+@pytest.fixture(scope="module")
+def clique_texts():
+    """Template groups whose common grams pile into over-cap buckets, an
+    exact-boilerplate clique, and unique docs."""
+    texts = {}
+    for g in range(12):
+        for v in range(4):
+            texts[g * 4 + v] = (
+                f"document template number {g} shared content body "
+                f"sentence alpha beta gamma {v}"
+            )
+    for i in range(100, 112):
+        texts[i] = "the exact same boilerplate text repeated verbatim here"
+    for i in range(200, 210):
+        texts[i] = f"unique words {i} one {i * 7} two {i * 13} three"
+    return texts
+
+
+@pytest.mark.parametrize(
+    "max_bucket,cap_mode",
+    [(None, "drop"), (6, "drop"), (6, "refine")],
+)
+def test_minhash_pairs_match_driver_banding(spark, clique_texts, max_bucket, cap_mode):
+    df = spark.createDataFrame(
+        sorted(clique_texts.items()), "doc_id bigint, text string"
+    )
+    stats: dict = {}
+    got = sorted(
+        tuple(r)
+        for r in D.minhash_lsh_pairs(
+            df, "doc_id", "text", 4, 2, shingle_n=3, max_bucket=max_bucket,
+            cap_stats=stats, cap_mode=cap_mode,
+        ).select("id_a", "id_b", "band").collect()
+    )
+    depth = 2 if cap_mode == "refine" else 0
+    want = _minhash_oracle(clique_texts, 3, max_bucket, depth)
+    assert got == want  # multiset: no pair row twice, band provenance kept
+    if max_bucket is not None:
+        assert stats["bucket_cap_hits"] > 0
+    if cap_mode == "refine":
+        assert stats["refined_docs"] > 0
+
+
+@pytest.mark.parametrize("max_bucket", [None, 10])
+def test_cosine_pairs_match_driver_banding(spark, max_bucket):
+    rng = np.random.default_rng(5)
+    x = rng.standard_normal((60, 8)).astype(np.float32)
+    # a near-dup clique of 4 (kept under the cap) and one of 13 (capped)
+    x[40:43] = x[0] + 0.01 * rng.standard_normal((3, 8)).astype(np.float32)
+    x[43:55] = x[1] + 0.01 * rng.standard_normal((12, 8)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id bigint, embedding array<float>",
+    )
+    # the hyperplanes cosine_buckets draws: 8 planes in 2 bands of 4 bits
+    planes = np.random.default_rng(42).standard_normal((8, 8)).astype(np.float32)
+    bits = (x @ planes) > 0
+    keys = {
+        i: [int((bits[i, 4 * b: 4 * b + 4] * (1 << np.arange(4))).sum()) for b in range(2)]
+        for i in range(60)
+    }
+    want, _ = _oracle_pairs(keys, max_bucket)
+    stats: dict = {}
+    buckets = D.cosine_buckets(df, "vec_id", "embedding", 8, n_planes=8, n_bands=2)
+    got = sorted(
+        tuple(r)
+        for r in D.bucket_pairs(buckets, max_bucket, stats)
+        .select("id_a", "id_b", "band").collect()
+    )
+    assert got == want
+    if max_bucket is not None:
+        assert stats["bucket_cap_hits"] > 0
+    unit = x.astype(np.float64) / np.linalg.norm(x, axis=1, keepdims=True)
+    verified = {(a, b) for a, b, _ in want if unit[a] @ unit[b] > 0.9}
+    lsh = {
+        (r["id_a"], r["id_b"])
+        for r in D.cosine_lsh_pairs(
+            df, "vec_id", "embedding", 8, threshold=0.9, n_planes=8, n_bands=2,
+            max_bucket=max_bucket,
+        ).collect()
+    }
+    assert lsh == verified and len(verified) > 0
+
+
+@pytest.mark.parametrize("max_bucket", [None, 5])
+def test_simhash_pairs_match_driver_banding(spark, clique_texts, max_bucket):
+    df = spark.createDataFrame(
+        sorted(clique_texts.items()), "doc_id bigint, text string"
+    )
+    sh = {
+        r["doc_id"]: r["simhash"]
+        for r in D.simhash64(df, "doc_id", "text").collect()
+    }
+    keys = {i: [(v >> (16 * c)) & 0xFFFF for c in range(4)] for i, v in sh.items()}
+    cand, _ = _oracle_pairs(keys, max_bucket)
+    want = {}
+    for a, b, _ in cand:
+        ham = bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+        if ham <= 10:
+            want[(a, b)] = ham
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in D.simhash_pairs(
+            df, "doc_id", "text", max_hamming=10, max_bucket=max_bucket
+        ).collect()
+    }
+    assert got == want and len(want) > 0
+    if max_bucket is not None:
+        assert not any(100 <= a < 112 for a, _ in got)  # the clique is capped

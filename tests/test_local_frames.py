@@ -130,7 +130,9 @@ def test_driver_built_frames_are_arrow_tables(spark, package_frames):
     )
     assert pairs.count() > 0
     assert stats["bucket_cap_hits"] > 0 and stats["refined_docs"] > 0
-    _assert_arrow(package_frames, "minhash_lsh_pairs(cap_mode='refine')")
+    # refine reads its oversized members from the over-cap bucket rows: it
+    # builds no driver-side frame of over-cap keys
+    assert package_frames == []
 
     edges = spark.createDataFrame(
         pd.DataFrame({"id_a": [1, 2], "id_b": [2, 3]}), "id_a bigint, id_b bigint"

@@ -109,9 +109,10 @@ def test_scan_summary_structure(spark, sf_dir):
 
 
 def test_dedup_lsh_self_join_is_hash_equi_join(spark, sf_dir):
-    """MinHash LSH candidate generation must self-join on (band, bkey) as a
-    hash equi-join — a cartesian of the exploded band table is the n²
-    failure mode the banding exists to prevent."""
+    """MinHash LSH candidate generation must never plan a cartesian or a
+    nested-loop join of the exploded band table — the n² failure mode the
+    banding exists to prevent.  Pairs now come from each bucket's member
+    list, with no join at all."""
     from duckdb_faiss_ext_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -98,6 +98,13 @@ def main() -> None:
     results["lsh_pairs_capped"] = capped.count()
     results["lsh_capped_sec"] = round(time.perf_counter() - t0, 2)
 
+    # max_bucket=None: every giant clique bucket emits all its pairs
+    t0 = time.perf_counter()
+    results["lsh_pairs_uncapped"] = minhash_lsh_pairs(
+        docs, "doc_id", "text", 4, 2, shingle_n=3
+    ).count()
+    results["lsh_uncapped_sec"] = round(time.perf_counter() - t0, 2)
+
     # distributed propagation forced (small_collect=None): the probe's job
     # is to measure the over-cap fallback path, which small graphs would
     # otherwise never reach now that they solve on the driver
