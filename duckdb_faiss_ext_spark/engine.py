@@ -259,11 +259,6 @@ class FaissSparkEngine:
         if bad:
             raise _bad_elements_error(bad[0]["nan"])
 
-    # above this partition count the per-partition offsets go through a
-    # broadcast join instead of a literal map expression (a 100k-entry
-    # literal would bloat the plan/codegen)
-    MAX_LITERAL_OFFSET_PARTS = 4096
-
     def _with_auto_ids(
         self, df: DataFrame, offset: int, validate_dim: Optional[int] = None
     ) -> tuple[DataFrame, int]:
@@ -276,12 +271,12 @@ class FaissSparkEngine:
         counts (one tiny collect — the same single extra job the old
         ``.rdd.zipWithIndex()`` ran, without its per-row Python pickle)
         rank-compact it to dense sequential labels.  The offsets reach the
-        rows as a LITERAL MAP expression, keeping the projection inside
+        rows as ONE ARRAY LITERAL indexed by partition id (one py4j call,
+        like ``_cluster_layout``'s), keeping the projection inside
         whole-stage codegen — a broadcast join here broke the columnar
-        cache build and cost 7x at the 1M probe; the join remains only as
-        the >4096-partition fallback.  Determinism contract (same as
-        zipWithIndex): the count job and the downstream add must observe
-        the same partition iteration order — true for the engine's
+        cache build and cost 7x at the 1M probe.  Determinism contract
+        (same as zipWithIndex): the count job and the downstream add must
+        observe the same partition iteration order — true for the engine's
         sources (parquet scans, cached frames, received micro-batches).
 
         Returns (labeled_df, batch_row_count) — the count falls out of the
@@ -313,57 +308,35 @@ class FaissSparkEngine:
                     raise DimensionMismatch(validate_dim, r["bad"])
                 if r["nan"]:
                     raise _bad_elements_error(r["nan"])
-        counts = {r["_pid"]: r["cnt"] for r in agg}
-        base, pairs = offset, []
+        counts = {int(r["_pid"]): int(r["cnt"]) for r in agg}
+        # first label of each partition id; -1 for ids the offsets job
+        # never saw (empty partitions, which hold no rows to label)
+        bases = np.full(max(counts, default=0) + 1, -1, dtype=np.int64)
+        base = offset
         for pid in sorted(counts):
-            pairs.append((int(pid), int(base)))
+            bases[pid] = base
             base += counts[pid]
-        local = mid.bitwiseAND(F.lit((1 << 33) - 1))
-        if len(pairs) <= self.MAX_LITERAL_OFFSET_PARTS:
-            omap = F.create_map(*[F.lit(v) for p in pairs for v in p])
-            mapped = F.element_at(omap, F.shiftright(mid, 33))
-            # fail LOUDLY if the add-time pass observes a partition id the
-            # offsets job never saw (the determinism contract above was
-            # violated — e.g. AQE re-coalesced a non-deterministic source
-            # between the two jobs).  Without this the lookup yields null
-            # labels silently in non-ANSI mode and corrupts the id space.
-            guarded = F.when(
-                mapped.isNull(),
-                F.raise_error(
-                    F.lit(
-                        "faiss auto-id: partition offsets out of sync with the "
-                        "add pass (non-deterministic source between jobs?)"
-                    )
-                ).cast("bigint"),
-            ).otherwise(mapped)
-            out = df.select((guarded + local).alias("label"), F.col("vector"))
-            return out, base - offset
-        off_df = local_frame(self.spark, "_pid bigint, _base bigint", pairs)
-        # LEFT join + loud failure on unmatched partition ids: the inner
-        # join this replaces silently DROPPED rows whose pid the offsets
-        # job never saw (the same contract violation the literal-map path
-        # guards against above — r4 review)
-        guarded_base = F.when(
-            F.col("_base").isNull(),
+        # element_at is 1-based; try_ gives null past the end in any mode
+        mapped = F.coalesce(
+            F.try_element_at(F.lit(bases), (F.shiftright(mid, 33) + 1).cast("int")),
+            F.lit(-1),
+        )
+        # fail LOUDLY if the add-time pass observes a partition id the
+        # offsets job never saw (the determinism contract above was
+        # violated — e.g. AQE re-coalesced a non-deterministic source
+        # between the two jobs).  Without this the lookup would corrupt the
+        # id space silently.
+        guarded = F.when(
+            mapped < 0,
             F.raise_error(
                 F.lit(
                     "faiss auto-id: partition offsets out of sync with the "
                     "add pass (non-deterministic source between jobs?)"
                 )
             ).cast("bigint"),
-        ).otherwise(F.col("_base"))
-        out = (
-            df.select(F.col("vector"), mid.alias("_mid"))
-            .withColumn("_pid", F.shiftright("_mid", 33))
-            .join(F.broadcast(off_df), "_pid", "left")
-            .select(
-                (
-                    guarded_base
-                    + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-                ).alias("label"),
-                "vector",
-            )
-        )
+        ).otherwise(mapped)
+        local = mid.bitwiseAND(F.lit((1 << 33) - 1))
+        out = df.select((guarded + local).alias("label"), F.col("vector"))
         return out, base - offset
 
     # memory-mode slice compaction threshold: bounds union-lineage depth (and
@@ -2823,65 +2796,54 @@ class FaissSparkEngine:
                     # scan at p=1%)
                     corpus = corpus.drop("neighbors")
                     has_graph = False
-        if idx.codebooks is not None:
-            return self._pq_search_flat(
-                idx, k, queries_df, params, qid_col, vec_col, corpus
-            )
-        if has_graph:
+        pq = idx.codebooks is not None
+        if has_graph and not pq:
             return self._nsw_search_flat(
                 idx, k, queries_df, params, qid_col, vec_col, corpus,
                 allowed_col=allowed_col,
             )
         nprobe = int(params.get("nprobe", 1))
-        probe = self._probe_for(idx, corpus, nprobe)
+        # IVF-PQ codes are residuals of their cluster, so PQ scores by
+        # cluster even when every cluster is probed
+        residual = pq and idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
+        probe = None if pq else self._probe_for(idx, corpus, nprobe)
         if params.get("bulk_queries"):
             # bulk-query path: a corpus-scale QUERY side would serialize
             # through the driver's block iterator — route the search through
-            # the executor-side block joins instead (operators/simjoin.py;
-            # same pairwise/top-k kernels and (score, label) tie-break, so
-            # results are identical).  Flat: block-nested-loop over the
-            # whole corpus.  IVF: queries expand to one row per probed
-            # cluster (narrow mapInArrow) and blocks EQUI-join on the
-            # cluster id — the probe pruning survives, nothing is cartesian.
+            # the executor-side block join instead (operators/simjoin.py
+            # block_join; same scoring kernels and (score, label) tie-break,
+            # so results are identical).  Unprobed: block-nested-loop over
+            # the whole corpus.  Probed IVF and IVF-PQ: queries expand to
+            # one row per probed cluster (narrow mapInArrow) and blocks
+            # EQUI-join on the cluster id — the probe pruning survives,
+            # nothing is cartesian.  SQ8 and PQ corpora pack their codes.
             # Opt-in: the pack/join stages cost more than one broadcast for
             # ordinary query batches.
-            from duckdb_faiss_ext_spark.operators.simjoin import (
-                similarity_join,
-                similarity_join_grouped,
-            )
+            from duckdb_faiss_ext_spark.operators.simjoin import block_join
 
             q = queries_df.select(
                 F.col(qid_col).alias("qid"), F.col(vec_col).alias("vector")
             )
-            # SQ8 corpora pack CODES into the executor-side blocks and
-            # decode inside the pack kernel (same janino rule as the
-            # driver path) — the right_vec column is just named "codes"
-            corp_vec = "codes" if sq8_params is not None else "vector"
-            if probe is None:
-                return similarity_join(
-                    q,
-                    corpus.select("label", corp_vec),
-                    k,
-                    metric=idx.metric,
-                    left_id="qid",
-                    right_id="label",
-                    right_vec=corp_vec,
-                    metric_arg=idx.metric_arg,
-                    bulk=True,  # bulk_queries = caller says it's big
-                    right_sq8=sq8_params,
-                ).select("qid", "rank", F.col("label"), F.col("distance"))
-            return similarity_join_grouped(
-                self._probe_rows(idx, q, nprobe),
-                corpus.select("label", corp_vec, "cluster_id"),
+            grouped = residual or probe is not None
+            corp_vec = "code" if pq else "codes" if sq8_params else "vector"
+            return block_join(
+                self._probe_rows(idx, q, nprobe) if grouped else q,
+                corpus.select("label", corp_vec, *(["cluster_id"] if grouped else [])),
                 k,
                 metric=idx.metric,
                 left_id="qid",
                 right_id="label",
                 right_vec=corp_vec,
-                group_col="cluster_id",
+                group_col="cluster_id" if grouped else None,
                 metric_arg=idx.metric_arg,
                 right_sq8=sq8_params,
-            ).select("qid", "rank", F.col("label"), F.col("distance"))
+                codebooks=idx.codebooks,
+                centroids=idx.centroids if residual else None,
+            )
+        if pq:
+            return self._pq_search_flat(
+                idx, k, queries_df, qid_col, vec_col, corpus, nprobe, residual
+            )
         return topk_ops.exact_knn_flat(
             corpus,
             queries_df,
@@ -2905,12 +2867,14 @@ class FaissSparkEngine:
         idx: FaissIndex,
         k: int,
         queries_df: DataFrame,
-        params: dict,
         qid_col: str,
         vec_col: str,
         corpus: DataFrame,
+        nprobe: int,
+        residual: bool,
     ) -> DataFrame:
-        """ADC search over PQ codes, composed with IVF cluster pruning.
+        """ADC search over PQ codes, composed with IVF cluster pruning
+        (``residual``: IVF-PQ codes, scored against their cluster).
 
         The driver route is ``search_query_blocks`` with the PQ kernel:
         query side streams in bounded blocks (same contract as the exact
@@ -2925,36 +2889,7 @@ class FaissSparkEngine:
         Distances are residual-ADC approximations (faiss IndexIVFPQ)."""
         from duckdb_faiss_ext_spark.operators.pq import pq_search_arrays
 
-        nprobe = int(params.get("nprobe", 1))
-        if params.get("bulk_queries"):
-            # corpus-scale query side: executor-side ADC via the cluster-
-            # keyed code-block equi-join (operators/pq.py pq_search_grouped).
-            # LUTs build IN the tasks from broadcast codebooks, so no
-            # driver-side LUT materialization exists on this path at all.
-            from duckdb_faiss_ext_spark.operators.pq import pq_search_grouped
-
-            q = queries_df.select(
-                F.col(qid_col).alias("qid"), F.col(vec_col).alias("vector")
-            )
-            has_clusters = (
-                idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
-            )
-            if has_clusters:
-                q = self._probe_rows(idx, q, nprobe)
-            return pq_search_grouped(
-                corpus,
-                q,
-                idx.codebooks,
-                k,
-                metric=idx.metric,
-                centroids=idx.centroids if has_clusters else None,
-                cluster_col="cluster_id" if has_clusters else None,
-            )
-        residual_cents = (
-            idx.centroids
-            if idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
-            else None
-        )
+        residual_cents = idx.centroids if residual else None
         # residual-path LUTs broadcast nq*nprobe*m*nk float32 — cap the query
         # sub-chunk so that product stays under a fixed byte budget (at 8192
         # queries x nprobe 4 x m 8 x 256 codes that is already 268 MB; a

@@ -672,8 +672,8 @@ def neardup_components(
                 stats["edges"] = len(pdf)
             return _components_driver(pairs.sparkSession, pdf, stats)
 
-    # checkpointed only here: a local checkpoint stays cached for the
-    # session, which the driver path above has no use for
+    # checkpointed only here: a local checkpoint stays cached until it is
+    # dropped, which the driver path above has no use for
     edges = edges.localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -683,6 +683,8 @@ def neardup_components(
     if stats is not None:
         stats["edges"] = edges.count()
         stats["rounds"] = 0
+    ckpt = None  # the latest round's label checkpoint
+    converged = False
     for _ in range(max_iter):
         nbr_min = (
             edges.join(
@@ -708,13 +710,22 @@ def neardup_components(
             )
             .localCheckpoint(eager=True)
         )
+        if ckpt is not None:
+            # superseded: this round is materialized without it
+            _drop_checkpoint(ckpt)
+        ckpt = joined
         changed = joined.filter(F.col("comp") != F.col("_old")).limit(1).count()
         labels = joined.select("id", "comp")
         if stats is not None:
             stats["rounds"] += 1
         if changed == 0:
+            converged = True
             break
-    else:
+    if ckpt is not None:
+        # the labels now read only their own checkpoint, which is all a
+        # call leaves cached
+        _drop_checkpoint(edges)
+    if not converged:
         # loop exhausted max_iter without converging: a component with
         # graph diameter > max_iter would return PARTIAL labels — never
         # silently (r4 review: the oracled entry computes the full
@@ -725,11 +736,20 @@ def neardup_components(
             "Raise max_iter or cap component size upstream (max_bucket)."
         )
         if strict:
+            if ckpt is not None:
+                _drop_checkpoint(ckpt)
             raise RuntimeError(msg)
         import warnings
 
         warnings.warn(msg)
     return labels
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint``'s blocks: the checkpoint is a persisted
+    RDD under the frame's plan, which ``DataFrame.unpersist`` (the query
+    cache) does not touch."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def neardup_survivors(

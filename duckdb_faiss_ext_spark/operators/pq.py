@@ -21,6 +21,8 @@ Pipeline:
    ``sum_j LUT[j, code_j]`` — table lookups instead of d multiplies.
    Exact same candidate/``merge_topk`` shape as the exact kernel (≤ nq×k
    rows shuffle), distances approximate (ADC), tie-break (score, label).
+   Corpus-scale query sides run the executor-side block join instead
+   (``simjoin.block_join``), with ``adc_scores`` as its scorer.
 """
 
 from __future__ import annotations
@@ -31,12 +33,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from duckdb_faiss_ext_spark.metrics import (
-    kmeans,
-    merge_running_topk,
-    nearest_centroid,
-    topk_indices,
-)
+from duckdb_faiss_ext_spark.metrics import kmeans, nearest_centroid, topk_indices
 from duckdb_faiss_ext_spark.operators.topk import merge_topk, vector_matrix
 
 __all__ = [
@@ -44,12 +41,8 @@ __all__ = [
     "pq_encode",
     "pq_search",
     "pq_search_arrays",
-    "pq_search_grouped",
+    "adc_scores",
 ]
-
-# one query block's ADC lookup tables (ln * m * nk * 4 B) must stay under
-# this; pq_search_grouped shrinks its query-side block size to fit
-LUT_BLOCK_BUDGET_BYTES = 64 << 20
 
 
 def pq_train(
@@ -322,212 +315,38 @@ def pq_search_arrays(
     )
 
 
-def pq_search_grouped(
-    codes_df: DataFrame,
-    queries_df: DataFrame,
+def adc_scores(
+    q: np.ndarray,
+    codes: np.ndarray,
     codebooks: np.ndarray,
-    k: int,
-    metric: str = "L2",
-    centroids: "np.ndarray | None" = None,
-    qid_col: str = "qid",
-    vec_col: str = "vector",
-    cluster_col: "str | None" = "cluster_id",
-    block_rows: int = 16384,
-) -> DataFrame:
-    """Executor-side ADC search for a CORPUS-SCALE query side — the PQ twin
-    of the engine's bulk IVF path (no driver query streaming).
+    centroid: "np.ndarray | None",
+    desc: bool,
+) -> np.ndarray:
+    """(nq, n) float32 ADC scores of float queries ``q`` (nq, dim) against
+    PQ code rows ``codes`` (n, m) — the PQ scorer of the executor-side
+    block join (operators/simjoin.py ``block_join``), which calls it on
+    each pair row's left block.  ``desc``: inner-product tables, else
+    squared L2.
 
-    ``queries_df`` carries one row per (query, probed cluster) when
-    ``cluster_col`` is set (the IVF composite; residual LUTs per cluster),
-    else plain (qid, vector) rows and one global group.  Both sides pack
-    into per-cluster blocks; blocks EQUI-join on the cluster id; the kernel
-    builds each left block's (ln, m, nk) lookup tables against its single
-    cluster IN THE TASK from the broadcast codebooks (no driver LUT
-    materialization at all), streams code blocks through a running top-k,
-    and ``merge_topk`` merges across clusters.
-
-    LUT memory is bounded two ways (r4 review): the query-side block size
-    caps so one block's LUT stays under LUT_BLOCK_BUDGET_BYTES, and the
-    pair rows are SORTED by (blk, grp) within each task so states finish
-    contiguously — at most ONE live LUT per task, evicted on key change."""
-    import pyarrow as pa
-
+    With ``centroid`` the codes are residuals of that one cluster (faiss
+    IndexIVFPQ): L2 shifts the queries by it, inner product adds the
+    constant q·centroid (q·(c + r) = q·c + q·r).  Each subspace's (nq, nk)
+    lookup table is built, gathered and dropped in turn, so no (nq, m, nk)
+    table is ever resident."""
     m, nk, sub = codebooks.shape
-    dim = m * sub
-    desc = metric == "INNER_PRODUCT"
-    spark = codes_df.sparkSession
-    residual = centroids is not None
-    bc = spark.sparkContext.broadcast((codebooks, centroids))
-
-    from duckdb_faiss_ext_spark.operators.simjoin import _pack_blocks
-
-    block_rows = max(1, min(block_rows, LUT_BLOCK_BUDGET_BYTES // (m * nk * 4)))
-    if cluster_col is not None:
-        # colocate each cluster's query rows before packing (guide §2.3,
-        # same rationale as similarity_join_grouped): scattered left rows
-        # pack into per-partition mini-blocks and the grp equi-join then
-        # replicates each code block once per mini-block; hashing by the
-        # cluster id first keeps the join's right-side replication ~1x.
-        # The shuffle is bounded by the exploded query side.
-        n_lp = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
-        )
-        queries_df = queries_df.repartition(n_lp, cluster_col)
-    lb = _pack_blocks(
-        queries_df, qid_col, vec_col, block_rows, np.float32,
-        group_col=cluster_col,
-    )
-    # codes pack through the SAME block kernel as vectors (int16 payload) —
-    # one packing machinery to maintain (r4 review)
-    rb = _pack_blocks(
-        codes_df,
-        "label",
-        "code",
-        block_rows,
-        np.int16,
-        group_col=cluster_col,
-    )
-    if cluster_col is None:
-        # plain-PQ bulk (no clusters): an equi-join on a constant group key
-        # would funnel every block pair through ONE shuffle partition —
-        # use the cross-grid shape similarity_join uses instead (r4 review)
-        from duckdb_faiss_ext_spark.operators.simjoin import bnl_grid
-
-        g = bnl_grid(lb)
-        pairs = (
-            lb.repartition(g)
-            .crossJoin(
-                rb.repartition(g).select(
-                    F.col("n").alias("rn"),
-                    F.col("ids").alias("rids"),
-                    F.col("vecs").alias("rcodes"),
-                )
-            )
-            .select(
-                "blk", F.lit(0).alias("grp"), "n", "ids", "vecs",
-                "rn", "rids", "rcodes",
-            )
-        )
-    else:
-        pairs = lb.join(
-            rb.select(
-                "grp",
-                F.col("n").alias("rn"),
-                F.col("ids").alias("rids"),
-                F.col("vecs").alias("rcodes"),
-            ),
-            "grp",
-        ).select("blk", "grp", "n", "ids", "vecs", "rn", "rids", "rcodes")
-    n_out = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-
-    def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        cb, cents = bc.value
-        cb_norms = [(cb[j] ** 2).sum(1) for j in range(m)]
-        # rows arrive SORTED by (blk, grp) within the task, so exactly one
-        # key is live at a time: finish-and-evict on key change keeps one
-        # LUT resident instead of one per (block, cluster) key (r4 review)
-        cur_key = None
-        cur = None
-
-        def emit(st):
-            qids, _, _, top_ids, top_sc = st
-            if top_ids is None:
-                return None
-            ln_, kk = top_ids.shape
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(qids, kk), pa.int64()),
-                    pa.array(top_ids.ravel(), pa.int64()),
-                    pa.array(top_sc.ravel().astype(np.float32), pa.float32()),
-                ],
-                names=["qid", "label", "distance"],
-            )
-
-        for rb_ in batches:
-            for r in range(rb_.num_rows):
-                skey = (rb_.column(0)[r].as_py(), rb_.column(1)[r].as_py())
-                if skey != cur_key:
-                    if cur is not None:
-                        out = emit(cur)
-                        if out is not None:
-                            yield out
-                    cur_key, cur = skey, None
-                st = cur
-                row_qids = (
-                    rb_.column(3)[r]
-                    .values.to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                if st is not None and not np.array_equal(st[0], row_qids):
-                    # blk = min(ids) requires distinct query ids: two
-                    # different blocks colliding on one key would merge
-                    # LUT state silently — fail loud (r4 review)
-                    raise ValueError(
-                        "pq_search_grouped: duplicate query ids detected "
-                        f"(two distinct blocks share key {skey})"
-                    )
-                if st is None:
-                    ln = int(rb_.column(2)[r].as_py())
-                    qids = row_qids
-                    qx = np.ascontiguousarray(
-                        rb_.column(4)[r]
-                        .values.to_numpy(zero_copy_only=False)
-                        .reshape(ln, dim),
-                        dtype=np.float32,
-                    )
-                    g = int(skey[1])
-                    const = np.zeros(ln, dtype=np.float32)
-                    if residual:
-                        if desc:
-                            # IP: q.(c + r) = q.c (constant) + q.r (tables)
-                            const = qx @ cents[g].astype(np.float32)
-                            qp = qx
-                        else:
-                            qp = qx - cents[g][None, :].astype(np.float32)
-                    else:
-                        qp = qx
-                    q3 = qp.reshape(ln, m, sub)
-                    lut = np.empty((ln, m, nk), dtype=np.float32)
-                    for j in range(m):
-                        if desc:
-                            lut[:, j, :] = q3[:, j, :] @ cb[j].T
-                        else:
-                            lut[:, j, :] = (
-                                (q3[:, j, :] ** 2).sum(1)[:, None]
-                                - 2.0 * (q3[:, j, :] @ cb[j].T)
-                                + cb_norms[j][None, :]
-                            )
-                    st = cur = [qids, lut, const, None, None]
-                qids, lut, const = st[0], st[1], st[2]
-                ln = len(qids)
-                rn = int(rb_.column(5)[r].as_py())
-                rids = (
-                    rb_.column(6)[r]
-                    .values.to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                codes = (
-                    rb_.column(7)[r]
-                    .values.to_numpy(zero_copy_only=False)
-                    .reshape(rn, m)
-                    .astype(np.int64)
-                )
-                scores = np.zeros((ln, rn), dtype=np.float32)
-                for j in range(m):
-                    scores += lut[:, j, codes[:, j]]
-                scores += const[:, None]
-                idx, sc = topk_indices(scores, k, desc, rids)
-                st[3], st[4] = merge_running_topk(
-                    st[3], st[4], rids[idx], sc.astype(np.float64), k, desc
-                )
-        if cur is not None:
-            out = emit(cur)
-            if out is not None:
-                yield out
-
-    partial = (
-        pairs.repartition(n_out, "blk", "grp")
-        .sortWithinPartitions("blk", "grp")
-        .mapInArrow(score, schema="qid bigint, label bigint, distance float")
-    )
-    return merge_topk(partial, k, metric)
+    const = 0.0
+    if centroid is not None:
+        c = centroid.astype(np.float32)
+        if desc:
+            const = (q @ c)[:, None]
+        else:
+            q = q - c[None, :]
+    q3 = q.reshape(len(q), m, sub)
+    scores = np.zeros((len(q), len(codes)), dtype=np.float32)
+    for j in range(m):
+        qj, cb = q3[:, j, :], codebooks[j]
+        table = qj @ cb.T
+        if not desc:
+            table = (qj**2).sum(1)[:, None] - 2.0 * table + (cb**2).sum(1)[None, :]
+        scores += table.astype(np.float32, copy=False)[:, codes[:, j]]
+    return scores + const

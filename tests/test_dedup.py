@@ -133,6 +133,23 @@ def test_components_driver_matches_distributed(spark):
     assert D.neardup_components(empty).count() == 0
 
 
+def test_distributed_components_leave_one_checkpoint(spark):
+    """The distributed path drops each superseded round's label checkpoint
+    and the edge checkpoint: a long chain (one round per link) leaves only
+    the returned frame's checkpoint cached."""
+    n = 24
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "id_a bigint, id_b bigint"
+    )
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    stats = {}
+    comp = D.neardup_components(pairs, max_iter=2 * n, stats=stats, small_collect=None)
+    assert {r["comp"] for r in comp.collect()} == {0}
+    assert stats["rounds"] >= n // 2
+    assert cached().size() - before <= 1
+
+
 def test_neardup_survivors_exact(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in (1, 2, 3, 9, 20, 21, 50)],

@@ -136,6 +136,25 @@ def test_incremental_add_visible(engine, spark):
     assert engine.search_flat("inc", 1, q).collect()[0]["label"] == 1  # auto id 1
 
 
+def test_auto_ids_skip_empty_partitions_in_partition_order(engine, spark):
+    """An unlabeled add from a frame whose non-empty partitions have empty
+    ones between them labels its rows 0..n-1 in partition order."""
+    import pyspark.sql.functions as F
+
+    src = spark.range(0, 12, numPartitions=6).filter(
+        F.floor(F.col("id") / 2) % 2 == 0
+    )
+    parts = src.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert sorted((r["p"], r["count"]) for r in parts) == [(0, 2), (2, 2), (4, 2)]
+    engine.create("gaps", 2, "Flat")
+    vec = F.array(F.col("id"), F.lit(1)).cast("array<float>")
+    engine.add("gaps", src.select(vec.alias("vector")))
+    stored = engine.registry.get("gaps").data.select("label", "vector").collect()
+    got = sorted((r["label"], int(r["vector"][0])) for r in stored)
+    assert got == list(enumerate([0, 1, 4, 5, 8, 9]))
+    engine.destroy("gaps")
+
+
 # -------------------------------------------------------------- error paths
 
 

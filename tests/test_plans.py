@@ -122,10 +122,10 @@ def test_dedup_lsh_self_join_is_hash_equi_join(spark, sf_dir):
 
 
 def test_grouped_simjoin_is_equi_join_not_cartesian(spark, sf_dir):
-    """similarity_join_grouped (the bulk-IVF shape) must join blocks on the
+    """The grouped block join (the bulk-IVF shape) must join blocks on the
     group key — a cartesian/BNL of the block tables would defeat cluster
     pruning at scale."""
-    from duckdb_faiss_ext_spark.operators.simjoin import similarity_join_grouped
+    from duckdb_faiss_ext_spark.operators.simjoin import block_join
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     left = emb.limit(20).select(
@@ -136,7 +136,7 @@ def test_grouped_simjoin_is_equi_join_not_cartesian(spark, sf_dir):
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector"),
         (F.col("vec_id") % 4).alias("cluster_id"),
     )
-    plan = _plan(similarity_join_grouped(left, right, 3))
+    plan = _plan(block_join(left, right, 3, group_col="cluster_id"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -192,7 +192,7 @@ def test_residual_encoding_tightens_adc_error(spark):
 
 def test_pq_bulk_queries_matches_standard(spark):
     """params={'bulk_queries': 1} on an IVFPQ index routes through the
-    cluster-keyed code-block equi-join (pq_search_grouped) — results must
+    cluster-keyed code-block equi-join (simjoin.block_join) — results must
     match the driver-block ADC path at the same nprobe."""
     import numpy as np
     from conftest import gen_vectors

@@ -183,3 +183,23 @@ def test_one_rank_window():
             if not keys <= NON_QUERY_KEYS:
                 sites.append((path.name, fn.name))
     assert sites == [("topk.py", "merge_topk")], sites
+
+
+def test_one_block_join():
+    """Every executor-side bulk route is ``simjoin.block_join``: it alone
+    packs blocks, it is the only cartesian pairing outside dedup's, and no
+    kernel depends on a sorted pair order."""
+    packers = [fn.name for _, fn in _functions(PKG) if _calls(fn, "_pack_blocks")]
+    assert packers == ["block_join"], packers
+    crosses = [
+        (path.name, fn.name)
+        for path, fn in _functions(PKG / "operators")
+        if _calls(fn, "crossJoin") and path.name != "dedup.py"
+    ]
+    assert crosses == [("simjoin.py", "block_join")], crosses
+    sorts = [
+        (path.name, fn.name)
+        for path, fn in _functions(PKG / "operators")
+        if path.name in ("simjoin.py", "pq.py") and _calls(fn, "sortWithinPartitions")
+    ]
+    assert sorts == [], sorts

@@ -3,8 +3,10 @@ the prior version streamed the left side through a per-row driver loop)."""
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from duckdb_faiss_ext_spark.operators.simjoin import (
+    block_join,
     similarity_join,
     similarity_join_lsh,
 )
@@ -25,9 +27,34 @@ def _frames(spark, nl=80, nr=60, d=8):
     return left, right, ldf, rdf
 
 
+def _grouped_payloads(spark, ldf, rdf):
+    """The left side with a 3-way group column ``g``, and block_join's
+    right-side keyword arguments for the grouped float and the IVF-PQ
+    (residual codes, a tiny 2x4 codebook, so scores tie often) payloads."""
+    rng = np.random.default_rng(7)
+    codes = spark.createDataFrame(
+        [(i, [int(c) for c in rng.integers(0, 4, 2)], i % 3) for i in range(60)],
+        "id bigint, code array<smallint>, g bigint",
+    )
+    grp = (F.col("id") % 3).alias("g")
+    payloads = {
+        "grouped": dict(right=rdf.select("id", "vector", grp)),
+        "pq": dict(
+            right=codes,
+            right_vec="code",
+            codebooks=rng.standard_normal((2, 4, 4)).astype(np.float32),
+            centroids=rng.standard_normal((3, 8)).astype(np.float32),
+        ),
+    }
+    return ldf.select("id", "vector", grp), payloads
+
+
 def test_block_partitioning_invariant_and_golden(spark):
     """Results must not depend on block_rows (an 80x60 join crossing 5x4
-    blocks equals the single-block run) and must match the numpy golden."""
+    blocks equals the single-block run) and must match the numpy golden.
+    The grouped float and PQ payloads keep the invariance at 4-row blocks,
+    where each key's pair rows span several right blocks and reach the
+    kernel in no fixed order."""
     left, right, ldf, rdf = _frames(spark)
 
     def run(bl):
@@ -46,6 +73,37 @@ def test_block_partitioning_invariant_and_golden(spark):
     gold = np.argsort(-s, axis=1, kind="stable")[:, :3]
     expect = sorted((i, rk, int(gold[i, rk])) for i in range(80) for rk in range(3))
     assert blocked == expect
+
+    lg, payloads = _grouped_payloads(spark, ldf, rdf)
+    for name, kw in payloads.items():
+
+        def grouped(bl):
+            return sorted(
+                (r["id"], r["rank"], r["id_right"])
+                for r in block_join(
+                    lg, k=3, metric="L2", group_col="g", block_rows=bl, **kw
+                ).collect()
+            )
+
+        one = grouped(1 << 20)
+        assert len(one) == 80 * 3, name
+        assert grouped(4) == one, name
+
+
+@pytest.mark.parametrize("route", ["bnl", "grouped", "pq"])
+def test_duplicate_left_ids_raise(spark, route):
+    """Blocks are keyed by their smallest left id: with ``block_rows=1``
+    the two rows of id 5 are two blocks on one key, which must fail loudly
+    rather than merge into one top-k."""
+    _, _, ldf, rdf = _frames(spark, nl=8, nr=12)
+    ldf = ldf.withColumn("id", F.when(F.col("id") == 1, 0).otherwise(F.col("id")) + 5)
+    if route == "bnl":
+        out = similarity_join(ldf, rdf, 2, block_rows=1, bulk=True)
+    else:
+        lg, payloads = _grouped_payloads(spark, ldf, rdf)
+        out = block_join(lg, k=2, group_col="g", block_rows=1, **payloads[route])
+    with pytest.raises(Exception, match="ValueError.*duplicate left ids"):
+        out.collect()
 
 
 def test_no_driver_collection_in_plan(spark):
